@@ -46,6 +46,17 @@ def _est_scan_partitions(spark, size: int) -> int:
     return max(1, size // max(1, max_split))
 
 
+def shuffle_partitions(spark) -> int:
+    """The session's ``spark.sql.shuffle.partitions`` as an int.
+    Distros that set it to ``"auto"`` (AQE-managed width) get the
+    cluster's default parallelism instead."""
+    dp = max(1, spark.sparkContext.defaultParallelism)
+    try:
+        return int(spark.conf.get("spark.sql.shuffle.partitions", str(dp)))
+    except ValueError:
+        return dp
+
+
 def explode_width(spark, n_rows: int) -> int:
     """Explicit shuffle width for a stage feeding a CPU-quadratic
     in-bucket pair explode. AQE coalesces post-shuffle partitions by
@@ -62,7 +73,7 @@ def explode_width(spark, n_rows: int) -> int:
     ceilinged at the session's shuffle-partition conf so the cluster
     posture set by the deployer is respected at volume."""
     dp = max(1, spark.sparkContext.defaultParallelism)
-    sp = int(spark.conf.get("spark.sql.shuffle.partitions", str(dp)))
+    sp = shuffle_partitions(spark)
     need = -(-int(n_rows) // 250_000)
     return max(dp, min(need, max(sp, dp)))
 

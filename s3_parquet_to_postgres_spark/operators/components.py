@@ -28,6 +28,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .pairs import bucket_pairs
+
 
 class ConvergenceError(RuntimeError):
     pass
@@ -311,17 +313,22 @@ def pagerank(
     # session conf so cluster posture wins at volume (guide §2:
     # scale-adaptive partitioning). adj is co-partitioned to the same
     # width (one tiny V-row job) so every round's join stays
-    # exchange-free. The final checkpoint is registered with the
-    # ranking-pin registry so bench/oracle loops drain its blocks
+    # exchange-free. Both eager checkpoints are registered with the
+    # ranking-pin registry so bench/oracle loops drain their blocks
     # between constructions.
+    from ..functions.layout import shuffle_partitions
+    from .ranking import register_pin
+
     sp_key = "spark.sql.shuffle.partitions"
     sp_was = spark.conf.get(sp_key)
-    width = max(1, min(-(-int(n_e) // 250_000), int(sp_was)))
+    sp = shuffle_partitions(spark)
+    width = max(1, min(-(-int(n_e) // 250_000), sp))
     with eager_build_scope(spark):
-        if width != int(sp_was):
+        if width != sp:
             adj = adj.repartition(width, "a_id").localCheckpoint(
                 eager=True
             )
+            register_pin(adj, "pagerank")
         spark.conf.set(sp_key, str(width))
         try:
             ranks = adj.select(
@@ -340,13 +347,8 @@ def pagerank(
         finally:
             spark.conf.set(sp_key, sp_was)
     from ..functions import dround
-    from .ranking import _acquire_pin_handle, _live_pins
 
-    try:
-        _live_pins.append(_acquire_pin_handle(ranks))
-    except Exception:
-        pass  # no early release; session GC reclaims (ranking.py note)
-
+    register_pin(ranks, "pagerank")
     return ranks.select("id", dround("r", 6).alias("pagerank"))
 
 
@@ -435,13 +437,8 @@ def triangle_counts(
     outs = oriented.groupBy("src").agg(
         F.array_sort(F.collect_list("dst")).alias("ns")
     )
-    wedge_expr = F.expr(
-        "flatten(transform(ns, (x, i) ->"
-        " transform(slice(ns, i + 2, size(ns)), y ->"
-        " named_struct('u', least(x, y), 'w', greatest(x, y)))))"
-    )
     wedges = outs.select(
-        F.col("src").alias("v"), F.explode(wedge_expr).alias("p")
+        F.col("src").alias("v"), bucket_pairs("ns", names=("u", "w"))
     ).select("v", F.col("p.u").alias("u"), F.col("p.w").alias("w"))
     closed = wedges.join(
         e.select(F.col("a").alias("u"), F.col("b").alias("w")), ["u", "w"]

@@ -24,7 +24,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..functions.layout import explode_width, spread
+from ..functions.layout import spread
+from . import pairs
 from .textstats import ws_tokens
 
 # Mersenne prime 2^31-1: universal-hash modulus. 31-bit values keep
@@ -32,15 +33,6 @@ from .textstats import ws_tokens
 # stays in plain long arithmetic with no overflow even under ANSI mode
 # (Spark 4 default) -- no BIGDECIMAL, no wraparound, fully JVM-side.
 _P = (1 << 31) - 1
-
-# Exact-set cluster collapse engages once copies exceed this multiple
-# of distinct sets (docs / clusters). Direct id-level pairing is
-# cheaper below it (fewer stages, narrower pair keys); rep-level
-# pairing wins above it because direct pair volume grows with the
-# SQUARE of cluster size. Shared by containment_pairs here and
-# passage_overlap_pairs (textstats.py), which measure the ratio with
-# one aggregation over their already-checkpointed per-doc set table.
-CLUSTER_COLLAPSE_MIN_DUP = 1.5
 
 
 def portable_hash60(col: Column | str) -> Column:
@@ -102,6 +94,31 @@ def shingles(text: Column | str, n: int = 3) -> Column:
     return shingles_of(ws_tokens(text), n)
 
 
+def _doc_shingles(
+    df: DataFrame, id_col: str, text_col: str, n: int,
+    max_df: int | None = None,
+) -> DataFrame:
+    """(id, shingle) rows: one per distinct shingle of each document.
+    With ``max_df``, shingles in more than ``max_df`` documents are
+    dropped by a WINDOW count, not groupBy+semi-join: the semi-join
+    derives the corpus shingle explode twice (no common-subplan dedup
+    in Catalyst); the window filters in the one shuffle, with no
+    O(|shingles|) keep-list to broadcast."""
+    sh = spread(df).withColumn("__toks", ws_tokens(text_col)).select(
+        F.col(id_col).alias("id"),
+        F.explode(shingles_of(F.col("__toks"), n)).alias("shingle"),
+    )
+    if max_df is None:
+        return sh
+    return (
+        sh.withColumn(
+            "__gdf", F.count("*").over(Window.partitionBy("shingle"))
+        )
+        .filter(F.col("__gdf") <= max_df)
+        .drop("__gdf")
+    )
+
+
 def _hash_params(num_hashes: int, seed: int = 7) -> list[tuple[int, int]]:
     """Deterministic (a, b) universal-hash parameters per permutation;
     derived from the index so executors need no broadcast state."""
@@ -136,10 +153,9 @@ def minhash_signatures(
     Partial (map-side) min aggregation means shuffle volume is
     num_hashes longs per doc, independent of document length.
     """
-    sh = spread(df).withColumn("__toks", ws_tokens(text_col)).select(
-        F.col(id_col).alias("id"),
-        F.explode(shingles_of(F.col("__toks"), n)).alias("shingle"),
-    ).select("id", _shingle_hash(hash_family)(F.col("shingle")).alias("h"))
+    sh = _doc_shingles(df, id_col, text_col, n).select(
+        "id", _shingle_hash(hash_family)(F.col("shingle")).alias("h")
+    )
     # SQL-text expressions, not composed Column objects: each F.pmod(
     # F.col()*F.lit()+F.lit()) chain is ~8 py4j round trips and with
     # num_hashes of them the driver spends ~1s just BUILDING the plan;
@@ -161,6 +177,41 @@ def minhash_signatures(
             "array(" + ",".join(f"m{i}" for i in range(num_hashes)) + ") AS sig",
         )
     )
+
+
+def banded_signatures(
+    sig: DataFrame, num_hashes: int, bands: int, hash_family: str,
+    keep: tuple[str, ...] = ("id", "sig"),
+) -> DataFrame:
+    """``keep`` columns of a signature table, one row per band with the
+    band bucket key: the hash of the band's signature slice rendered
+    as a comma-joined string (md5 under the portable family, so the
+    DuckDB oracle reproduces the buckets byte-for-byte)."""
+    rows = num_hashes // bands
+    band_hasher = F.xxhash64 if hash_family == "xxhash64" else F.md5
+    return sig.select(
+        *keep,
+        F.posexplode(
+            F.transform(
+                F.sequence(F.lit(0), F.lit(bands - 1)),
+                lambda b: band_hasher(
+                    F.concat_ws(
+                        ",", F.transform(
+                            F.slice("sig", b * rows + 1, rows),
+                            lambda x: x.cast("string"),
+                        )
+                    )
+                ),
+            )
+        ).alias("band", "band_hash"),
+    )
+
+
+def jaccard_est_sql(a: str, b: str, num_hashes: int) -> str:
+    """MinHash Jaccard estimate of two signatures: the share of
+    permutations on which they agree."""
+    return (f"size(filter(zip_with({a}, {b}, (p, q) -> p = q), e -> e))"
+            f" / {num_hashes}")
 
 
 def minhash_lsh_pairs(
@@ -189,101 +240,53 @@ def minhash_lsh_pairs(
     text collapsing onto one band hash) whose in-bucket pairing would
     go quadratic at corpus scale; everything in such a bucket pairs
     with everything, so no discriminating near-dup signal is lost.
+
+    Duplication-adaptive (``operators/pairs.py``): both band hashes and
+    estimate are pure functions of the signature, so docs with
+    identical signatures collapse to one representative. The bucket
+    cap counts DOCS (summed cluster sizes), and an intra pair is
+    emitted iff its cluster reaches a kept bucket -- exactly the
+    uncollapsed reachability.
     """
-    rows = num_hashes // bands
-    from ..session import eager_build_scope
-
-    # Duplication-adaptive collapse (r11, the containment_pairs design
-    # at the SIGNATURE level): every output row is a pure function of
-    # the two signatures -- the band hashes that bucket a pair and the
-    # zip_with equality estimate that scores it -- so docs with
-    # IDENTICAL signatures (exact copies always are) can collapse to
-    # one representative before banding. The signature table is
-    # checkpointed (the plan's most expensive stage, now with two
-    # consumers), one stats job picks the shape. Above the dup
-    # threshold, banding/bucketing/pair-exploding run per DISTINCT
-    # signature: copy pairs come from the cluster table as intra
-    # pairs (identical sigs agree on all num_hashes rows => estimate
-    # exactly 1.0), cross pairs fan members back via equi-joins on a
-    # 16-byte md5 signature key. The bucket-size guard counts DOCS
-    # (sum of cluster sizes), preserving the declared cap; an intra
-    # pair is emitted iff its cluster reaches >= 1 kept bucket --
-    # exactly pre-collapse reachability (a size>=2 cluster's own
-    # bucket always holds >= 2 docs, so only an over-cap boilerplate
-    # storm drops it, same as before).
-    with eager_build_scope(df.sparkSession):
-        sig = minhash_signatures(
+    est = jaccard_est_sql("x.sig", "y.sig", num_hashes)
+    sig, cluster, width = pairs.choose_shape(
+        df.sparkSession,
+        lambda: minhash_signatures(
             df, id_col, text_col, num_hashes, n, hash_family
-        ).localCheckpoint(eager=False)
-        n_docs, n_sigs = sig.agg(
-            F.count("*"), F.count_distinct("sig")
-        ).first()
-    # Band bucket key: hash of the band's signature slice rendered as
-    # a comma-joined string. md5 under the portable family so the
-    # DuckDB oracle reproduces the buckets byte-for-byte.
-    band_hasher = F.xxhash64 if hash_family == "xxhash64" else F.md5
-
-    def band_cols(src: DataFrame, keep: list[str]) -> DataFrame:
-        return src.select(
-            *keep,
-            F.posexplode(
-                F.transform(
-                    F.sequence(F.lit(0), F.lit(bands - 1)),
-                    lambda b: band_hasher(
-                        F.concat_ws(
-                            ",", F.transform(
-                                F.slice("sig", b * rows + 1, rows),
-                                lambda x: x.cast("string"),
-                            )
-                        )
-                    ),
-                )
-            ).alias("band", "band_hash"),
-        )
-
-    if n_docs <= CLUSTER_COLLAPSE_MIN_DUP * (n_sigs or 1):
-        banded = band_cols(sig, ["id", "sig"])
+        ),
+        "sig", F.count_distinct("sig") * bands,
+    )
+    if not cluster:
         buckets = (
-            banded.groupBy("band", "band_hash")
+            banded_signatures(sig, num_hashes, bands, hash_family)
+            .groupBy("band", "band_hash")
             .agg(F.collect_list(F.struct("id", "sig")).alias("ms"))
             .filter(
                 (F.size("ms") >= 2) & (F.size("ms") <= max_bucket_size)
             )
         )
-        pair_expr = F.expr(
-            "flatten(transform(ms, (x, i) ->"
-            " transform(slice(ms, i + 2, size(ms)), y ->"
-            " named_struct("
-            "   'id_a', least(x.id, y.id),"
-            "   'id_b', greatest(x.id, y.id),"
-            "   'jaccard_est',"
-            "   size(filter(zip_with(x.sig, y.sig, (p, q) -> p = q),"
-            f"              e -> e)) / {num_hashes}))))"
-        )
         return (
-            buckets.select(F.explode(pair_expr).alias("p"))
+            buckets.select(pairs.bucket_pairs(
+                "ms", "id", score={"jaccard_est": est}))
             .select("p.id_a", "p.id_b", "p.jaccard_est")
             .dropDuplicates(["id_a", "id_b"])
         )
-    # Cluster path: one rep per distinct signature. 16-byte binary
-    # cluster key (md5 over the comma-joined signature, the
-    # containment ck convention) so the member fan-out joins shuffle
-    # 16 bytes per row instead of the 32-long array.
+    # 16-byte binary cluster key (md5 over the comma-joined signature)
+    # so the member fan-out joins shuffle 16 bytes per row instead of
+    # the 32-long array.
     sk = F.unhex(F.md5(F.concat_ws(
         ",", F.transform(F.col("sig"), lambda x: x.cast("string"))
     )))
-    keyed = sig.select("id", "sig", sk.alias("ck"))
-    clusters = keyed.groupBy("ck").agg(
-        F.first("sig").alias("sig"), F.count("*").alias("csize")
+    members, clusters = pairs.collapse_by_key(
+        sig.select("id", "sig", sk.alias("ck")), ["sig"], size="csize"
     )
-    banded = band_cols(clusters, ["ck", "sig", "csize"])
     # Same-key repartition pins the bucket stage's width against AQE
-    # byte-based coalescing (explode_width rationale: the C(k,2) pair
-    # explode multiplies CPU beyond its input bytes); the following
-    # same-key groupBy reuses the exchange, no shuffle added.
-    width = explode_width(df.sparkSession, int(n_sigs or 0) * bands)
+    # byte-based coalescing (explode_width); the following same-key
+    # groupBy reuses the exchange, no shuffle added.
     buckets = (
-        banded.repartition(width, "band", "band_hash")
+        banded_signatures(clusters, num_hashes, bands, hash_family,
+                          keep=("ck", "sig", "csize"))
+        .repartition(width, "band", "band_hash")
         .groupBy("band", "band_hash")
         .agg(
             F.collect_list(F.struct("ck", "sig")).alias("ms"),
@@ -291,50 +294,24 @@ def minhash_lsh_pairs(
         )
         .filter((F.col("nd") >= 2) & (F.col("nd") <= max_bucket_size))
     )
-    pair_expr = F.expr(
-        "flatten(transform(ms, (x, i) ->"
-        " transform(slice(ms, i + 2, size(ms)), y ->"
-        " named_struct("
-        "   'ck_a', if(x.ck < y.ck, x.ck, y.ck),"
-        "   'ck_b', if(x.ck < y.ck, y.ck, x.ck),"
-        "   'jaccard_est',"
-        "   size(filter(zip_with(x.sig, y.sig, (p, q) -> p = q),"
-        f"              e -> e)) / {num_hashes}))))"
-    )
     rep_pairs = (
-        buckets.select(F.explode(pair_expr).alias("p"))
+        buckets.select(pairs.bucket_pairs(
+            "ms", "ck", ("ck_a", "ck_b"), score={"jaccard_est": est}))
         .select("p.ck_a", "p.ck_b", "p.jaccard_est")
         .dropDuplicates(["ck_a", "ck_b"])
-    )
-    cross = (
-        rep_pairs
-        .join(keyed.select(F.col("ck").alias("ck_a"),
-                           F.col("id").alias("ida")), "ck_a")
-        .join(keyed.select(F.col("ck").alias("ck_b"),
-                           F.col("id").alias("idb")), "ck_b")
-        .select(
-            F.least("ida", "idb").alias("id_a"),
-            F.greatest("ida", "idb").alias("id_b"),
-            "jaccard_est",
-        )
     )
     kept_cks = buckets.select(
         F.explode(F.transform("ms", lambda m: m["ck"])).alias("ck")
     ).distinct()
     multi = clusters.filter(F.col("csize") >= 2).join(kept_cks, "ck")
-    k1 = keyed.join(multi.select("ck"), "ck").select("ck", "id")
-    intra = (
-        k1.join(k1.select("ck", F.col("id").alias("idb")), "ck")
-        .filter(F.col("id") < F.col("idb"))
-        .select(
-            F.col("id").alias("id_a"), F.col("idb").alias("id_b"),
-            # Identical signatures agree on every row; the original
-            # expression evaluates to size/num_hashes = exactly 1.0.
-            (F.lit(num_hashes) / F.lit(num_hashes))
-            .alias("jaccard_est"),
-        )
+    # Identical signatures agree on every row: the estimate is
+    # size/num_hashes = exactly 1.0.
+    return pairs.fan_out(
+        rep_pairs, members, ["jaccard_est"],
+        [(F.lit(num_hashes) / F.lit(num_hashes)).alias("jaccard_est")],
+        intra_members=members.join(multi.select("ck"), "ck")
+        .select("ck", "id"),
     )
-    return cross.unionByName(intra)
 
 
 def simhash(df: DataFrame, id_col: str = "doc_id", text_col: str = "text",
@@ -432,17 +409,10 @@ def simhash_near_pairs(df: DataFrame, id_col: str = "doc_id",
             (F.size("ms") >= 2) & (F.size("ms") <= max_bucket_size)
         )
     )
-    pair_expr = F.expr(
-        "flatten(transform(ms, (x, i) ->"
-        " transform(slice(ms, i + 2, size(ms)), y ->"
-        " named_struct("
-        "   'id_a', least(x.id, y.id),"
-        "   'id_b', greatest(x.id, y.id),"
-        "   'hamming',"
-        "   CAST(bit_count(x.simhash ^ y.simhash) AS BIGINT)))))"
-    )
+    hamming = "CAST(bit_count(x.simhash ^ y.simhash) AS BIGINT)"
     return (
-        buckets.select(F.explode(pair_expr).alias("p"))
+        buckets.select(pairs.bucket_pairs(
+            "ms", "id", score={"hamming": hamming}))
         .select("p.id_a", "p.id_b", "p.hamming")
         .filter(F.col("hamming") <= max_hamming)
         .dropDuplicates(["id_a", "id_b"])
@@ -493,10 +463,7 @@ def ngram_jaccard_pairs(
                                  max_shingle_df)
     if strategy != "prefix":
         raise ValueError(f"unknown strategy: {strategy!r}")
-    sh = spread(df).withColumn("__toks", ws_tokens(text_col)).select(
-        F.col(id_col).alias("id"),
-        F.explode(shingles_of(F.col("__toks"), n)).alias("shingle"),
-    )
+    sh = _doc_shingles(df, id_col, text_col, n)
     # Global df per shingle as a WINDOW count, not a groupBy+join:
     # the join form derives the corpus shingle explode TWICE
     # (Catalyst does not deduplicate the common subplan); the window
@@ -592,22 +559,7 @@ def _jaccard_inverted(
     reproduced by the oracle). Without a cap the single-scan
     formulation is kept, but it is only safe on corpora known to
     lack boilerplate."""
-    sh = spread(df).withColumn("__toks", ws_tokens(text_col)).select(
-        F.col(id_col).alias("id"),
-        F.explode(shingles_of(F.col("__toks"), n)).alias("shingle"),
-    )
-    if max_shingle_df is not None:
-        # WINDOW-count df cap, not groupBy+semi-join: the semi-join
-        # derives the corpus shingle explode twice (no common-subplan
-        # dedup in Catalyst); the window filters in the one shuffle,
-        # with no O(|shingles|) keep-list to broadcast.
-        sh = (
-            sh.withColumn(
-                "__gdf", F.count("*").over(Window.partitionBy("shingle"))
-            )
-            .filter(F.col("__gdf") <= max_shingle_df)
-            .drop("__gdf")
-        )
+    sh = _doc_shingles(df, id_col, text_col, n, max_shingle_df)
     # Materialize the capped posting-list table ONCE: both consumers
     # below (sizes, pair_inter) would otherwise re-derive the whole
     # corpus explode + df-prune tree, doubling the scan and shuffle
@@ -627,14 +579,9 @@ def _jaccard_inverted(
         .agg(F.count("*").alias("n_sh"))
     )
     # In-bucket ordered pairs; count of shared shingles per pair.
-    pair_expr = F.expr(
-        "flatten(transform(ids, (x, i) ->"
-        " transform(slice(ids, i + 2, size(ids)), y ->"
-        " named_struct('id_a', least(x, y), 'id_b', greatest(x, y)))))"
-    )
     pair_inter = (
         buckets.filter(F.size("ids") >= 2)
-        .select(F.explode(pair_expr).alias("p"))
+        .select(pairs.bucket_pairs("ids"))
         .groupBy(F.col("p.id_a").alias("id_a"), F.col("p.id_b").alias("id_b"))
         .agg(F.count("*").alias("inter"))
     )
@@ -665,215 +612,73 @@ def containment_pairs(
     EITHER direction clears ``threshold``, with both directions
     reported.
 
-    Scale posture (r10 redesign, measured at 16x volume): docs
-    collapse to EXACT-SHINGLE-SET clusters before any pairing.
-    Containment is a pure set function, so every member of a cluster
-    has identical size, identical intersection with any partner, and
-    identical containments — the posting-list/intersection machinery
-    only ever needs to run on one representative per cluster, and the
-    member-level answer is a pure JOIN fan-out of the rep-level one.
-    On a corpus with heavy exact duplication (the 16x key-shifted
-    stress IS one: every text appears 16x; real crawl corpora are
-    boilerplate-ridden the same way) this collapses the dominant
-    stage — the r9 shape fed ~13M candidate pairs into a pair-count
-    aggregation at 16x (11.5-12.2 s wall; profiled at ~10 s of it in
-    the pair stage) because copies pair copy-against-copy; rep-level
-    pairing is copy-count-free and the 2.4M required output rows are
-    produced by two equi-joins instead of a 13M-group aggregation.
-    A PPJoin-style prefix filter was measured first and rejected: at
-    threshold 0.5 the prefix is ~65% of these small post-cap sets and
-    cut candidates only 33% (12.9M -> 8.7M) while forcing an array
-    join-back per survivor.
-
-    Rep-level machinery is the same bounded posting-list shape as
-    ``_jaccard_inverted`` (doc-level ``max_shingle_df`` cap applied
-    BEFORE clustering, bounding per-shingle fan-out; cluster count
-    per shingle <= capped df). Cluster state is never collected: a
-    cluster key is md5 over the canonically-sorted shingle list
+    Pairing is the bounded posting-list shape of ``_jaccard_inverted``
+    (doc-level ``max_shingle_df`` cap applied BEFORE any pairing,
+    bounding per-shingle fan-out), duplication-adaptive per
+    ``operators/pairs.py``: containment is a pure set function, so on
+    an exact-duplicate-heavy corpus docs collapse to exact-shingle-set
+    clusters keyed by md5 over the canonically-sorted shingle list
     (\\x1f-joined; shingles are whitespace-tokenized word n-grams, so
-    the separator cannot split ambiguously on any \\s-tokenized
-    corpus), membership stays a TABLE, and both expansions are
-    equi-joins on that key. Cluster size is STRUCTURALLY bounded by
-    ``max_shingle_df``: a kept shingle shared by all k members has
-    df >= k, and kept means df <= cap — so k <= cap, intra fan-out
-    <= C(cap, 2) per cluster, and a boilerplate storm larger than
-    the cap loses all its shingles to the df filter and pairs not at
-    all (exactly the pre-collapse behavior: its bucket rows were
-    df-dropped too). No O(corpus) broadcast anywhere.
-
-    Duplication-adaptive shape (r11): on a LOW-duplication corpus the
-    clusters are ~all singletons and the rep machinery (the groupBy(ck)
-    rep aggregation, both member fan-out joins, the intra self-join +
-    union) only adds stages while doubling the pair-stage key width
-    (16-byte ck vs the caller's id). The per-doc set table the cluster
-    key derives from is checkpointed anyway, so ONE cheap stats
-    aggregation on it (docs vs distinct cks — the discriminator the
-    r10 log thought unknowable) picks the shape at plan-construction
-    time, the same measure-then-plan move AQE makes for join strategy.
-    Both shapes compute the exact same pairs: the direct path pairs
-    ids in the very same capped posting buckets (identical docs then
-    share every shingle, so their pair surfaces with inter = n, i.e.
-    containment exactly 1.0 = the cluster path's intra literal), the
-    cluster path collapses copies first and fans members back. The
-    switch threshold is conservative: the cluster path wins once
-    copies are >~1.5x docs because pair volume grows with the SQUARE
-    of cluster size on the direct path (measured r10: 16x copies made
-    the direct pair stage ~10 s of an 11.5 s wall at 16x volume,
-    halved by collapsing).
+    the separator cannot split ambiguously). Each pair bucket carries
+    both set sizes aligned to the canonical order, so the pair-count
+    aggregation yields (pair, n_a, n_b, inter) complete and no size
+    join ever touches the pair table. A PPJoin-style prefix filter was
+    measured and rejected: at threshold 0.5 the prefix is ~65% of
+    these small post-cap sets and cut candidates only 33% while
+    forcing an array join-back per survivor.
     """
-    sh = spread(df).withColumn("__toks", ws_tokens(text_col)).select(
-        F.col(id_col).alias("id"),
-        F.explode(shingles_of(F.col("__toks"), n)).alias("shingle"),
+    sh = _doc_shingles(df, id_col, text_col, n, max_shingle_df)
+    # Per-doc set table: the doc's own distinct-shingle list (bounded
+    # by document length) plus its 16-byte binary set key.
+    docs_arr, cluster, width = pairs.choose_shape(
+        df.sparkSession,
+        lambda: sh.groupBy("id")
+        .agg(F.sort_array(F.collect_list("shingle")).alias("shs"))
+        .select(
+            "id", "shs", F.size("shs").alias("n_sh"),
+            F.unhex(F.md5(F.concat_ws("\x1f", "shs"))).alias("ck"),
+        ),
+        "ck", F.sum("n_sh"),
     )
-    if max_shingle_df is not None:
-        # WINDOW-count df cap, not groupBy+semi-join: the semi-join
-        # derives the corpus shingle explode twice (no common-subplan
-        # dedup in Catalyst); the window filters in the one shuffle,
-        # with no O(|shingles|) keep-list to broadcast.
-        sh = (
-            sh.withColumn(
-                "__gdf", F.count("*").over(Window.partitionBy("shingle"))
-            )
-            .filter(F.col("__gdf") <= max_shingle_df)
-            .drop("__gdf")
-        )
-    # Canonical per-doc set table, checkpointed ONCE: feeds the
-    # membership table, the representative selection and the rep
-    # posting explode — without it each consumer re-derives the
-    # corpus tokenize + df-cap tree. Per-doc state is the doc's own
-    # distinct-shingle list (bounded by document length, the buffer
-    # any per-doc tokenize op holds).
-    from ..session import eager_build_scope
-
-    with eager_build_scope(df.sparkSession):
-        docs_arr = (
-            sh.groupBy("id")
-            .agg(F.sort_array(F.collect_list("shingle")).alias("shs"))
-            .select(
-                "id", "shs", F.size("shs").alias("n_sh"),
-                # 16-byte binary cluster key (unhex(md5)): the pair
-                # stage shuffles two cks per candidate row, so the
-                # narrower key halves its dominant columns vs md5's
-                # 32-char hex string.
-                F.unhex(F.md5(F.concat_ws("\x1f", "shs"))).alias("ck"),
-            )
-            .localCheckpoint(eager=False)
-        )
-        # One stats job on the (now-materialized) checkpoint decides
-        # the pairing shape AND the pair-stage width; the checkpoint is
-        # reused by every branch below, so the corpus scan still
-        # happens once. AQE off for the build (eager_build_scope): one
-        # job instead of one per shuffle stage.
-        n_docs, n_clusters, n_post = docs_arr.agg(
-            F.count("*"), F.count_distinct("ck"), F.sum("n_sh")
-        ).first()
-    width = explode_width(docs_arr.sparkSession, n_post or 0)
-    if n_docs <= CLUSTER_COLLAPSE_MIN_DUP * n_clusters:
-        post = docs_arr.select(
-            "id", "n_sh", F.explode("shs").alias("shingle")
-        )
-        buckets = post.repartition(width, "shingle").groupBy("shingle").agg(
-            F.collect_list(F.struct("id", "n_sh")).alias("cs")
-        )
-        pair_expr = F.expr(
-            "flatten(transform(cs, (x, i) ->"
-            " transform(slice(cs, i + 2, size(cs)), y ->"
-            " named_struct("
-            "'id_a', if(x.id < y.id, x.id, y.id),"
-            " 'n_a', if(x.id < y.id, x.n_sh, y.n_sh),"
-            " 'id_b', if(x.id < y.id, y.id, x.id),"
-            " 'n_b', if(x.id < y.id, y.n_sh, x.n_sh)))))"
-        )
-        pairs = (
-            buckets.filter(F.size("cs") >= 2)
-            .select(F.explode(pair_expr).alias("p"))
-            .groupBy(
-                F.col("p.id_a").alias("id_a"), F.col("p.id_b").alias("id_b"),
-                F.col("p.n_a").alias("n_a"), F.col("p.n_b").alias("n_b"),
-            )
-            .agg(F.count("*").alias("inter"))
-        )
-        return pairs.select(
-            "id_a", "id_b",
-            (F.col("inter") / F.col("n_a")).alias("containment_a_in_b"),
-            (F.col("inter") / F.col("n_b")).alias("containment_b_in_a"),
-        ).filter(
-            (F.col("containment_a_in_b") >= threshold)
-            | (F.col("containment_b_in_a") >= threshold)
-        )
-    members = docs_arr.select("id", "ck", "n_sh")
-    # One representative per cluster, WITHOUT a rep-id join: every
-    # member's shs/n_sh are identical by construction of ck, so
-    # first() is deterministic in value and the cluster table drops
-    # straight out of one aggregation.
-    rep_sh = (
-        docs_arr.groupBy("ck")
-        .agg(F.first("n_sh").alias("n_sh"), F.first("shs").alias("shs"))
-        .select("ck", "n_sh", F.explode("shs").alias("shingle"))
+    # (key, n_sh) per posting; the direct shape keys by doc id, the
+    # cluster shape by set key over one representative per cluster.
+    k = "ck" if cluster else "id"
+    if cluster:
+        members, sets = pairs.collapse_by_key(docs_arr, ["n_sh", "shs"])
+    else:
+        sets = docs_arr
+    post = sets.select(k, "n_sh", F.explode("shs").alias("shingle"))
+    buckets = post.repartition(width, "shingle").groupBy("shingle").agg(
+        F.collect_list(F.struct(k, "n_sh")).alias("cs")
     )
-    buckets = rep_sh.repartition(width, "shingle").groupBy("shingle").agg(
-        F.collect_list(F.struct("ck", "n_sh")).alias("cs")
-    )
-    # In-bucket i<j cluster combinations, canonicalized by cluster
-    # key with the set sizes kept aligned: the aggregation yields
-    # (pair, n_a, n_b, inter) complete, so no size join ever touches
-    # the pair table.
-    pair_expr = F.expr(
-        "flatten(transform(cs, (x, i) ->"
-        " transform(slice(cs, i + 2, size(cs)), y ->"
-        " named_struct("
-        "'ck_a', if(x.ck < y.ck, x.ck, y.ck),"
-        " 'n_a', if(x.ck < y.ck, x.n_sh, y.n_sh),"
-        " 'ck_b', if(x.ck < y.ck, y.ck, x.ck),"
-        " 'n_b', if(x.ck < y.ck, y.n_sh, x.n_sh)))))"
-    )
-    rep_pairs = (
+    a, b = f"{k}_a", f"{k}_b"
+    inter = (
         buckets.filter(F.size("cs") >= 2)
-        .select(F.explode(pair_expr).alias("p"))
+        .select(pairs.bucket_pairs(
+            "cs", k, (a, b), aligned={"n_sh": ("n_a", "n_b")}))
         .groupBy(
-            F.col("p.ck_a").alias("ck_a"), F.col("p.ck_b").alias("ck_b"),
+            F.col("p." + a).alias(a), F.col("p." + b).alias(b),
             F.col("p.n_a").alias("n_a"), F.col("p.n_b").alias("n_b"),
         )
         .agg(F.count("*").alias("inter"))
     )
-    qual = rep_pairs.select(
-        "ck_a", "ck_b",
-        (F.col("inter") / F.col("n_a")).alias("c_ab"),
-        (F.col("inter") / F.col("n_b")).alias("c_ba"),
-    ).filter((F.col("c_ab") >= threshold) | (F.col("c_ba") >= threshold))
-    # Cross-cluster expansion: every member pair inherits the rep
-    # pair's containments; the reported a/b orientation follows the
-    # member ids (output contract: id_a < id_b).
-    cross = (
-        qual
-        .join(members.select(F.col("ck").alias("ck_a"),
-                             F.col("id").alias("ida")), "ck_a")
-        .join(members.select(F.col("ck").alias("ck_b"),
-                             F.col("id").alias("idb")), "ck_b")
-        .select(
-            F.least("ida", "idb").alias("id_a"),
-            F.greatest("ida", "idb").alias("id_b"),
-            F.when(F.col("ida") < F.col("idb"), F.col("c_ab"))
-            .otherwise(F.col("c_ba")).alias("containment_a_in_b"),
-            F.when(F.col("ida") < F.col("idb"), F.col("c_ba"))
-            .otherwise(F.col("c_ab")).alias("containment_b_in_a"),
-        )
+    ab, ba = "containment_a_in_b", "containment_b_in_a"
+    scored = inter.select(
+        a, b,
+        (F.col("inter") / F.col("n_a")).alias(ab),
+        (F.col("inter") / F.col("n_b")).alias(ba),
+    ).filter((F.col(ab) >= threshold) | (F.col(ba) >= threshold))
+    if not cluster:
+        return scored
+    # The reported a/b orientation follows the member ids (output
+    # contract: id_a < id_b). Identical sets score exactly 1.0 both
+    # ways (n/n), so an above-1 threshold (degenerate: containment
+    # cannot exceed 1) admits no intra pair.
+    fwd = F.col("ida") < F.col("idb")
+    return pairs.fan_out(
+        scored, members,
+        [F.when(fwd, F.col(ab)).otherwise(F.col(ba)).alias(ab),
+         F.when(fwd, F.col(ba)).otherwise(F.col(ab)).alias(ba)],
+        None if threshold > 1.0 else
+        [F.lit(1.0).alias(ab), F.lit(1.0).alias(ba)],
     )
-    if threshold > 1.0:
-        # Identical sets score exactly 1.0 both ways — above-1
-        # thresholds (degenerate: containment cannot exceed 1) admit
-        # no intra-cluster pair.
-        return cross
-    # Intra-cluster pairs: identical sets, containment inter/n = 1.0
-    # exactly in both engines' float division (n/n).
-    m2 = members.select(F.col("ck"), F.col("id").alias("idb"))
-    intra = (
-        members.join(m2, "ck")
-        .filter(F.col("id") < F.col("idb"))
-        .select(
-            F.col("id").alias("id_a"), F.col("idb").alias("id_b"),
-            F.lit(1.0).alias("containment_a_in_b"),
-            F.lit(1.0).alias("containment_b_in_a"),
-        )
-    )
-    return cross.unionByName(intra)

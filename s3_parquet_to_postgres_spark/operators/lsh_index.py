@@ -34,41 +34,8 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .dedup import minhash_signatures
-
-
-def banded_signatures(
-    sig: DataFrame, num_hashes: int, bands: int, hash_family: str
-) -> DataFrame:
-    """(id, sig) -> one row per (id, band) with the band bucket hash.
-    Same banding as ``minhash_lsh_pairs`` (md5 under the portable
-    family so external replay stays possible)."""
-    rows = num_hashes // bands
-    band_hasher = F.xxhash64 if hash_family == "xxhash64" else F.md5
-    return sig.select(
-        "id",
-        "sig",
-        F.posexplode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(bands - 1)),
-                lambda b: band_hasher(
-                    F.concat_ws(
-                        ",",
-                        F.transform(
-                            F.slice("sig", b * rows + 1, rows),
-                            lambda x: x.cast("string"),
-                        ),
-                    )
-                ),
-            )
-        ).alias("band", "band_hash"),
-    )
-
-
-def _est(sig_a, sig_b, num_hashes: int):
-    return F.size(
-        F.filter(F.zip_with(sig_a, sig_b, lambda p, q: p == q), lambda e: e)
-    ) / F.lit(num_hashes)
+from .dedup import banded_signatures, jaccard_est_sql, minhash_signatures
+from .pairs import bucket_pairs
 
 
 @dataclass(frozen=True)
@@ -136,9 +103,8 @@ class LshIndex:
             pairs = cross.select(
                 F.least("id", "id_o").alias("id_a"),
                 F.greatest("id", "id_o").alias("id_b"),
-                _est(F.col("sig"), F.col("sig_o"), c.num_hashes).alias(
-                    "jaccard_est"
-                ),
+                F.expr(jaccard_est_sql("sig", "sig_o", c.num_hashes))
+                .alias("jaccard_est"),
             )
 
         nw2 = banded_new.join(ok_buckets, ["band", "band_hash"], "left_semi")
@@ -147,18 +113,10 @@ class LshIndex:
             .agg(F.collect_list(F.struct("id", "sig")).alias("ms"))
             .filter(F.size("ms") >= 2)
         )
-        pair_expr = F.expr(
-            "flatten(transform(ms, (x, i) ->"
-            " transform(slice(ms, i + 2, size(ms)), y ->"
-            " named_struct("
-            "   'id_a', least(x.id, y.id),"
-            "   'id_b', greatest(x.id, y.id),"
-            "   'jaccard_est',"
-            "   size(filter(zip_with(x.sig, y.sig, (p, q) -> p = q),"
-            f"              e -> e)) / {c.num_hashes}))))"
-        )
+        est = jaccard_est_sql("x.sig", "y.sig", c.num_hashes)
         in_batch = (
-            in_batch_buckets.select(F.explode(pair_expr).alias("p"))
+            in_batch_buckets.select(
+                bucket_pairs("ms", "id", score={"jaccard_est": est}))
             .select("p.id_a", "p.id_b", "p.jaccard_est")
         )
         pairs = in_batch if pairs is None else pairs.unionByName(in_batch)

@@ -33,6 +33,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from .pairs import bucket_pairs
 
 # Ship function bodies by value (workers may not have this package on
 # PYTHONPATH when the driver embeds us from an arbitrary cwd).
@@ -327,17 +328,7 @@ def phash_near_pairs(
     )
     same = (
         groups.filter(F.col("cnt") >= 2)
-        .select(
-            F.explode(
-                F.expr(
-                    "flatten(transform(ids, (x, i) ->"
-                    " transform(slice(ids, i + 2, size(ids)), y ->"
-                    " named_struct('id_a', least(x, y),"
-                    " 'id_b', greatest(x, y),"
-                    " 'hamming', 0L))))"
-                )
-            ).alias("p")
-        )
+        .select(bucket_pairs("ids", score={"hamming": "0L"}))
         .select("p.id_a", "p.id_b", "p.hamming")
     )
     if max_hamming == 0:
@@ -368,17 +359,10 @@ def phash_near_pairs(
         .filter((F.size("hs") >= 2) & (F.size("hs") <= max_bucket_size))
     )
     hash_pairs = (
-        buckets.select(
-            F.explode(
-                F.expr(
-                    "flatten(transform(hs, (x, i) ->"
-                    " transform(slice(hs, i + 2, size(hs)), y ->"
-                    " named_struct('ha', least(x, y),"
-                    " 'hb', greatest(x, y),"
-                    " 'hamming', CAST(bit_count(x ^ y) AS BIGINT)))))"
-                )
-            ).alias("p")
-        )
+        buckets.select(bucket_pairs(
+            "hs", names=("ha", "hb"),
+            score={"hamming": "CAST(bit_count(x ^ y) AS BIGINT)"},
+        ))
         .select("p.ha", "p.hb", "p.hamming")
         .filter(
             (F.col("hamming") >= 1) & (F.col("hamming") <= max_hamming)

@@ -35,6 +35,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..functions.layout import shuffle_partitions
+
 _PID = "__grn_pid"
 
 _LOG = logging.getLogger(__name__)
@@ -78,16 +80,8 @@ def global_row_number(
     over the same table pay one materialization per call, not a
     re-derivation of the whole upstream tree per job.
     """
-    spark = df.sparkSession
     if num_partitions is None:
-        try:
-            num_partitions = int(
-                spark.conf.get("spark.sql.shuffle.partitions", "32")
-            )
-        except ValueError:
-            # Distros that set the conf to "auto" (AQE-managed) are
-            # valid; fall back to the cluster's default parallelism.
-            num_partitions = spark.sparkContext.defaultParallelism or 32
+        num_partitions = shuffle_partitions(df.sparkSession)
     stamped = (
         df.repartitionByRange(num_partitions, *order_cols)
         .withColumn(_PID, F.spark_partition_id())
@@ -128,22 +122,32 @@ def global_row_number(
     # "no early release" (a memory posture, never a correctness
     # change), logged once per process so the degradation is
     # observable instead of silent.
+    handle = register_pin(stamped, "global_row_number")
+    if handle is not None:
+        out_df._grn_pinned = handle
+    return out_df, acc
+
+
+def register_pin(df: DataFrame, who: str):
+    """Add a localCheckpointed frame's pinned blocks to the registry
+    ``drain_pins()`` empties, and return the handle. When the private
+    handle path is unavailable, return None and log the degradation
+    once per process: no early release, the blocks live until session
+    GC."""
     global _warned_pin_unavailable
     try:
-        handle = _acquire_pin_handle(stamped)
+        handle = _acquire_pin_handle(df)
     except Exception as e:
         if not _warned_pin_unavailable:
             _warned_pin_unavailable = True
             _LOG.warning(
-                "global_row_number: checkpoint pin handle unavailable "
-                "(%s: %s); early release disabled, pinned blocks live "
-                "until session GC", type(e).__name__, e,
+                "%s: checkpoint pin handle unavailable (%s: %s); early "
+                "release disabled, pinned blocks live until session GC",
+                who, type(e).__name__, e,
             )
-        handle = None
-    if handle is not None:
-        _live_pins.append(handle)
-        out_df._grn_pinned = handle
-    return out_df, acc
+        return None
+    _live_pins.append(handle)
+    return handle
 
 
 def release_pinned(ranked: DataFrame) -> None:

@@ -12,7 +12,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.layout import explode_width, spread
+from ..functions.layout import spread
+from . import pairs
 
 # Tiny per-language marker lexicons for the n-gram/stopword heuristic.
 # Deliberately deterministic and SQL-expressible so the DuckDB oracle
@@ -191,131 +192,53 @@ def passage_overlap_pairs(
     quadratic risk at corpus scale. The cap is part of the declared
     semantics so the oracle reproduces it exactly.
 
-    Scale posture (r10, shared with ``containment_pairs``): docs
-    collapse to EXACT-FINGERPRINT-SET clusters before pairing.
-    shared_fps is a pure set function, so every member of a cluster
-    shares identically with any partner; pairing runs once per
-    cluster pair and the member-level answer is a join fan-out of
-    the rep-level one. On an exact-duplicate-heavy corpus (the 16x
-    key-shifted stress replicates every text; crawl corpora mirror
-    boilerplate the same way) this removes the copy-against-copy
-    quadratic from the pair aggregation — this operator fed every
-    graph entry's edge list, and its pair stage dominated
-    graph_pagerank's 16x wall (~8 s of 10.9). Set equality is
-    decided AFTER the df-[2, cap] fingerprint filter, which is
-    exact: a df=1 fingerprint can never contribute to any pair
-    (nothing shares it), and a df>cap fingerprint is dropped as
+    Duplication-adaptive per ``operators/pairs.py``: shared_fps is a
+    pure set function, so on an exact-duplicate-heavy corpus docs
+    collapse to exact-fingerprint-set clusters before pairing. Set
+    equality is decided AFTER the df-[2, cap] fingerprint filter,
+    which is exact: a df=1 fingerprint can never contribute to any
+    pair (nothing shares it), and a df>cap fingerprint is dropped as
     declared semantics, so the filtered set determines every pair
-    count. Intra-cluster pairs share their whole (filtered) set;
-    cross-cluster counts come from one rep-level bucket pairing.
-    Cluster membership stays a TABLE (never collected), expansions
-    are equi-joins on the md5 set key. Cluster size is STRUCTURALLY
-    bounded by ``max_fp_df``: a kept fingerprint shared by all k
-    members has df >= k <= cap, so intra fan-out is <= C(cap, 2)
-    per cluster and a boilerplate storm beyond the cap loses its
-    fingerprints to the df filter entirely (the pre-collapse
-    behavior too).
-
-    Duplication-adaptive shape (r11, shared with
-    ``containment_pairs``): one stats aggregation over the
-    checkpointed per-doc set table (docs vs distinct set keys) picks
-    between this cluster machinery and direct id-level pairing at
-    plan-construction time. Both are exact — identical docs share
-    every filtered fingerprint, so the direct path surfaces their
-    pair with shared_fps = n_fp, precisely the intra literal — but on
-    a low-duplication corpus the direct path skips the rep
-    aggregation, both member fan-out joins and the intra union, and
-    pairs on the caller's id instead of the 16-byte ck.
+    count. Intra-cluster pairs share their whole filtered set.
     """
-    from .dedup import CLUSTER_COLLAPSE_MIN_DUP
-
-    # Canonical per-doc fingerprint-set table, checkpointed ONCE: it
-    # feeds the membership table and the rep posting explode (each
-    # would otherwise re-derive the winnowing scan + df filter). The
-    # plan-hygiene test asserts the un-truncated subtree
+    # The plan-hygiene test asserts the un-truncated per-doc set table
     # (``winnow_doc_sets``) scans the corpus exactly once and the
     # post-checkpoint plan not at all.
-    from ..session import eager_build_scope
-
-    with eager_build_scope(df.sparkSession):
-        docs_arr = winnow_doc_sets(
-            df, id_col, text_col, k, w, max_fp_df
-        ).localCheckpoint(eager=False)
-        # AQE off for the eager build (eager_build_scope): the
-        # checkpoint + stats run as one job instead of one per stage.
-        n_docs, n_clusters, n_post = docs_arr.agg(
-            F.count("*"), F.count_distinct("ck"), F.sum("n_fp")
-        ).first()
-    width = explode_width(docs_arr.sparkSession, n_post or 0)
-    if n_docs <= CLUSTER_COLLAPSE_MIN_DUP * n_clusters:
-        post = docs_arr.select("id", F.explode("fps").alias("fingerprint"))
-        buckets = post.repartition(width, "fingerprint").groupBy(
-            "fingerprint"
-        ).agg(
-            F.collect_list("id").alias("ids")
-        )
-        pair_expr = F.expr(
-            "flatten(transform(ids, (x, i) ->"
-            " transform(slice(ids, i + 2, size(ids)), y ->"
-            " named_struct('id_a', least(x, y), 'id_b', greatest(x, y)))))"
-        )
-        return (
-            buckets.filter(F.size("ids") >= 2)
-            .select(F.explode(pair_expr).alias("p"))
-            .groupBy(
-                F.col("p.id_a").alias("id_a"), F.col("p.id_b").alias("id_b")
-            )
-            .agg(F.count("*").alias("shared_fps"))
-            .filter(F.col("shared_fps") >= min_shared)
-        )
-    members = docs_arr.select("id", "ck", "n_fp")
-    rep_fp = (
-        docs_arr.groupBy("ck")
-        .agg(F.first("fps").alias("fps"))
-        .select("ck", F.explode("fps").alias("fingerprint"))
+    docs_arr, cluster, width = pairs.choose_shape(
+        df.sparkSession,
+        lambda: winnow_doc_sets(df, id_col, text_col, k, w, max_fp_df),
+        "ck", F.sum("n_fp"),
     )
-    buckets = rep_fp.repartition(width, "fingerprint").groupBy(
+    # The direct shape pairs doc ids, the cluster shape set keys over
+    # one representative per cluster.
+    key = "ck" if cluster else "id"
+    if cluster:
+        members, sets = pairs.collapse_by_key(docs_arr, ["fps"])
+    else:
+        sets = docs_arr
+    post = sets.select(key, F.explode("fps").alias("fingerprint"))
+    buckets = post.repartition(width, "fingerprint").groupBy(
         "fingerprint"
     ).agg(
-        F.collect_list("ck").alias("cks")
+        F.collect_list(key).alias("ks")
     )
-    pair_expr = F.expr(
-        "flatten(transform(cks, (x, i) ->"
-        " transform(slice(cks, i + 2, size(cks)), y ->"
-        " named_struct('ck_a', least(x, y), 'ck_b', greatest(x, y)))))"
-    )
-    rep_pairs = (
-        buckets.filter(F.size("cks") >= 2)
-        .select(F.explode(pair_expr).alias("p"))
-        .groupBy(F.col("p.ck_a").alias("ck_a"), F.col("p.ck_b").alias("ck_b"))
+    a, b = f"{key}_a", f"{key}_b"
+    shared = (
+        buckets.filter(F.size("ks") >= 2)
+        .select(pairs.bucket_pairs("ks", names=(a, b)))
+        .groupBy(F.col("p." + a).alias(a), F.col("p." + b).alias(b))
         .agg(F.count("*").alias("shared_fps"))
         .filter(F.col("shared_fps") >= min_shared)
     )
-    cross = (
-        rep_pairs
-        .join(members.select(F.col("ck").alias("ck_a"),
-                             F.col("id").alias("ida")), "ck_a")
-        .join(members.select(F.col("ck").alias("ck_b"),
-                             F.col("id").alias("idb")), "ck_b")
-        .select(
-            F.least("ida", "idb").alias("id_a"),
-            F.greatest("ida", "idb").alias("id_b"),
-            "shared_fps",
-        )
-    )
+    if not cluster:
+        return shared
     # Intra-cluster pairs: identical filtered sets share every
     # fingerprint, so shared_fps is the set size itself.
-    m2 = members.select("ck", F.col("id").alias("idb"))
-    intra = (
-        members.filter(F.col("n_fp") >= min_shared)
-        .join(m2, "ck")
-        .filter(F.col("id") < F.col("idb"))
-        .select(
-            F.col("id").alias("id_a"), F.col("idb").alias("id_b"),
-            F.col("n_fp").cast("long").alias("shared_fps"),
-        )
+    return pairs.fan_out(
+        shared, members, ["shared_fps"],
+        [F.col("n_fp").cast("long").alias("shared_fps")],
+        intra_where=F.col("n_fp") >= min_shared,
     )
-    return cross.unionByName(intra)
 
 
 def repetition_signals(

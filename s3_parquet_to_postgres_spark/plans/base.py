@@ -28,6 +28,7 @@ from typing import Callable
 from pyspark.sql import DataFrame, SparkSession
 
 from ..catalog import read_table
+from ..functions.layout import shuffle_partitions
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -71,7 +72,7 @@ def size_scaled_partitions(
     import os
 
     path = os.path.join(sf_dir, f"{name}.parquet")
-    cap = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    cap = shuffle_partitions(spark)
     size = 0
     if os.path.isdir(path):
         for root, _dirs, files in os.walk(path):

@@ -17,6 +17,7 @@ from pyspark.sql.window import Window
 
 from ..functions import dround, dsum, md5_unit, sql_dround, sql_dsum
 from ..functions.numeric import sint, sql_md5_unit
+from ..operators.pairs import bucket_pairs
 from .base import QuerySpec, t
 
 # --------------------------------------------------------------------------
@@ -2490,19 +2491,11 @@ def dedup_exact_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).filter(
         (F.size("ms") >= 2) & (F.size("ms") <= _SPAN_MAX_BUCKET)
     )
-    pair_expr = F.expr(
-        "flatten(transform(ms, (x, i) ->"
-        " transform(filter(slice(ms, i + 2, size(ms)),"
-        "                  y -> y.doc_id != x.doc_id), y ->"
-        " named_struct("
-        "   'da', least(x.doc_id, y.doc_id),"
-        "   'db', greatest(x.doc_id, y.doc_id),"
-        "   'pa', CASE WHEN x.doc_id < y.doc_id THEN x.pos ELSE y.pos END,"
-        "   'pb', CASE WHEN x.doc_id < y.doc_id THEN y.pos ELSE x.pos END"
-        "))))"
-    )
     matches = (
-        buckets.select(F.explode(pair_expr).alias("p"))
+        buckets.select(bucket_pairs(
+            "ms", "doc_id", ("da", "db"), aligned={"pos": ("pa", "pb")},
+            where="y.doc_id != x.doc_id",
+        ))
         .select("p.da", "p.db", "p.pa", "p.pb")
         .dropDuplicates(["da", "db", "pa", "pb"])
         .withColumn("diag", F.col("pa") - F.col("pb"))

@@ -17,6 +17,7 @@ from ..operators import multimodal as M
 from ..operators import similarity as S
 from ..operators import textstats as T
 from ..operators.asof import asof_join
+from ..operators.pairs import bucket_pairs
 from .base import QuerySpec, t
 
 # --------------------------------------------------------------------------
@@ -2780,13 +2781,8 @@ def basket_part_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.array_sort(F.collect_set("l_partkey")).alias("parts"))
         .filter(F.size("parts") >= 2)
     )
-    pair_expr = F.expr(
-        "flatten(transform(parts, (x, i) ->"
-        " transform(slice(parts, i + 2, size(parts)), y ->"
-        " named_struct('pa', x, 'pb', y))))"
-    )
     pairs = (
-        baskets.select(F.explode(pair_expr).alias("p"))
+        baskets.select(bucket_pairs("parts", names=("pa", "pb")))
         .groupBy(F.col("p.pa").alias("pa"), F.col("p.pb").alias("pb"))
         .agg(F.count("*").alias("pair_orders"))
         .filter(F.col("pair_orders") >= 3)

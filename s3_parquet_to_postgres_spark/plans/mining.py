@@ -216,7 +216,12 @@ def _nb_confusion(
     # lexicographically-first class — with map-side partial
     # combination and no per-doc Sort+Window pass. Scores are
     # 1e-9-quantized log sums, orders of magnitude inside long range,
-    # so the negation cannot overflow.
+    # so the negation cannot overflow. The struct min assumes non-NULL
+    # scores: a NULL would sort FIRST and win, the opposite of the
+    # window's DESC NULLS LAST. None can arise today: dq is non-NULL
+    # for every class (dflt crosses every ctot class with the vocab
+    # size), coalesce covers the left-joined llq, and pri inner-joins
+    # a prior for every class trained with >= 1 token.
     pred = scored.groupBy("doc_id", "actual").agg(
         F.min(
             F.struct((-F.col("score")).alias("ns"), F.col("cls"))

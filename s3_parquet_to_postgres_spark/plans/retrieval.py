@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..functions import dround, sql_dround
+from ..operators.pairs import bucket_pairs
 from .base import QuerySpec, t
 
 _WS_TOKS_SQL = (
@@ -272,17 +273,9 @@ def ml_item_cf(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("pk")
         .agg(F.count("*").alias("n"))
     )
-    # The SQL-lambda form sidesteps PySpark's Python-lambda arity
-    # introspection. slice() is 1-based: element i (0-based) pairs
-    # with everything from position i+2 on.
     pairs = (
-        baskets
-        .select(F.explode(F.expr(
-            "flatten(transform(ps, (x, i) -> "
-            "transform(slice(ps, i + 2, size(ps)), "
-            "y -> struct(x AS pa, y AS pb))))"
-        )).alias("pr"))
-        .select("pr.pa", "pr.pb")
+        baskets.select(bucket_pairs("ps", names=("pa", "pb")))
+        .select("p.pa", "p.pb")
     )
     co = (
         pairs.groupBy("pa", "pb")

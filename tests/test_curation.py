@@ -603,92 +603,74 @@ def test_corpus_report_accounting_closes(spark, sf_dir):
     assert sum(r.n_dup_copies for r in rows) == d.count() - keepers
 
 
-def test_adaptive_pairing_shapes_agree_on_dup_heavy_corpus(spark):
-    """The r11 duplication-adaptive switch is a pure plan choice: the
-    direct id-level pairing and the cluster-collapse pairing must
-    return BIT-IDENTICAL rows on the same corpus. This corpus has dup
-    ratio 4 (> the 1.5 switch), so the natural call takes the cluster
-    path; monkeypatching the switch forces the direct path. Covers
-    intra pairs (copies, containment exactly 1.0 / shared_fps = n_fp)
-    and cross pairs (a subset doc against a longer host)."""
+_BASE = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
+# containment/passage: a subset doc against a longer host; minhash: a
+# near-identical text whose signature shares bands with the base.
+_SECOND = {
+    "containment": _BASE + " " + " ".join(
+        f"w{i} x{i} y{i}" for i in range(12)),
+    "passage": _BASE + " " + " ".join(f"w{i} x{i} y{i}" for i in range(12)),
+    "minhash": _BASE + " lambda",
+}
+
+
+@pytest.mark.parametrize("op", ["containment", "passage", "minhash"])
+def test_pair_shapes_agree_on_dup_heavy_corpus(spark, monkeypatch, op):
+    """The duplication-adaptive shape switch is a pure plan choice:
+    the cluster-collapse pairing and the direct id-level pairing must
+    return BIT-IDENTICAL rows on the same corpus. Every text appears
+    4x (dup ratio 4 > the 1.5 switch), so the natural call takes the
+    cluster path; patching ``pairs.choose_shape`` forces the direct
+    one. Covers intra pairs (copies: containment 1.0, shared_fps =
+    n_fp, jaccard_est 1.0) and cross pairs (subset doc vs host; near
+    text vs base), plus minhash's doc-count bucket cap."""
     import s3_parquet_to_postgres_spark.operators.dedup as D
+    from s3_parquet_to_postgres_spark.operators import pairs
     from s3_parquet_to_postgres_spark.operators.textstats import (
         passage_overlap_pairs,
     )
 
-    base = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
-    host = base + " " + " ".join(f"w{i} x{i} y{i}" for i in range(12))
     other = "one two three four five six seven eight nine ten eleven"
     rows = []
-    did = 0
-    for text in (base, host, other):
-        for _ in range(4):  # every text x4 -> ratio 4 > 1.5
-            rows.append((did, text))
-            did += 1
-    rows.append((did, "lonely unique document with enough words here"))
+    for text in (_BASE, _SECOND[op], other):
+        for _ in range(4):
+            rows.append((len(rows), text))
+    rows.append((len(rows), "lonely unique document with enough words here"))
     df = spark.createDataFrame(rows, "doc_id long, text string")
+    run = {
+        "containment": lambda **kw: D.containment_pairs(
+            df, threshold=0.5, max_shingle_df=100),
+        "passage": lambda **kw: passage_overlap_pairs(df),
+        "minhash": lambda **kw: D.minhash_lsh_pairs(df, **kw),
+    }[op]
+    assert pairs.CLUSTER_COLLAPSE_MIN_DUP == 1.5
+    choose = pairs.choose_shape
 
-    def both(fn):
-        assert D.CLUSTER_COLLAPSE_MIN_DUP == 1.5
-        clustered = sorted(map(tuple, fn().collect()))
-        saved = D.CLUSTER_COLLAPSE_MIN_DUP
-        D.CLUSTER_COLLAPSE_MIN_DUP = float("inf")
-        try:
-            direct = sorted(map(tuple, fn().collect()))
-        finally:
-            D.CLUSTER_COLLAPSE_MIN_DUP = saved
-        return clustered, direct
+    def both(**kw):
+        measured, out = [], []
+        for force_direct in (False, True):
+            def shape(*a, **k):
+                table, cluster, width = choose(*a, **k)
+                measured.append(cluster)
+                return table, cluster and not force_direct, width
 
-    c_cl, c_di = both(lambda: D.containment_pairs(
-        df, threshold=0.5, max_shingle_df=100))
-    assert c_cl == c_di and len(c_cl) >= 6 + 6 + 16  # intra x2 + cross
-    p_cl, p_di = both(lambda: passage_overlap_pairs(df))
-    assert p_cl == p_di and len(p_cl) >= 6 + 6 + 16
+            with monkeypatch.context() as m:
+                m.setattr(pairs, "choose_shape", shape)
+                out.append(sorted(map(tuple, run(**kw).collect())))
+        assert measured == [True, True]  # ratio 4 measures as cluster
+        return out
 
-
-def test_minhash_adaptive_collapse_agrees_on_dup_heavy_corpus(spark):
-    """The r11 signature-level collapse in minhash_lsh_pairs is a pure
-    plan choice: rep-level banding + member fan-out must return
-    BIT-IDENTICAL rows to per-doc banding. Dup ratio 4 (> the 1.5
-    switch) takes the cluster path naturally; monkeypatching forces
-    the direct path. Covers intra pairs (copies, jaccard_est exactly
-    1.0), cross pairs (near-identical texts whose sigs share >= 1
-    band), and the doc-count bucket cap (max_bucket_size below the
-    copy count must drop the same pairs on both paths)."""
-    import s3_parquet_to_postgres_spark.operators.dedup as D
-
-    base = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
-    near = base + " lambda"  # shares most shingles -> sigs overlap
-    other = "one two three four five six seven eight nine ten eleven"
-    rows = []
-    did = 0
-    for text in (base, near, other):
-        for _ in range(4):  # every text x4 -> ratio 4 > 1.5
-            rows.append((did, text))
-            did += 1
-    rows.append((did, "lonely unique document with enough words here"))
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-
-    def both(fn):
-        assert D.CLUSTER_COLLAPSE_MIN_DUP == 1.5
-        clustered = sorted(map(tuple, fn().collect()))
-        saved = D.CLUSTER_COLLAPSE_MIN_DUP
-        D.CLUSTER_COLLAPSE_MIN_DUP = float("inf")
-        try:
-            direct = sorted(map(tuple, fn().collect()))
-        finally:
-            D.CLUSTER_COLLAPSE_MIN_DUP = saved
-        return clustered, direct
-
-    cl, di = both(lambda: D.minhash_lsh_pairs(df))
+    cl, di = both()
     assert cl == di
+    if op != "minhash":
+        assert len(cl) >= 6 + 6 + 16  # intra x2 + cross
+        return
     # three clusters of 4 copies each -> >= 18 intra pairs at est 1.0
     assert sum(1 for _, _, e in cl if e == 1.0) >= 18
-    # base vs near share bands (checked: stable under the fixed
-    # xxhash64 family) -> at least one member-fanned cross pair
+    # base vs near share bands (stable under the fixed xxhash64
+    # family) -> at least one member-fanned cross pair
     assert any(e < 1.0 for _, _, e in cl)
-
     # doc-count cap: 4-copy clusters exceed a cap of 3 in every
     # bucket, so their pairs vanish identically on both paths
-    cl3, di3 = both(lambda: D.minhash_lsh_pairs(df, max_bucket_size=3))
+    cl3, di3 = both(max_bucket_size=3)
     assert cl3 == di3

@@ -225,3 +225,29 @@ def test_est_scan_partitions_uses_spark_split_formula(spark):
     assert est >= min(cores, 50)
     # a tiny input is one partition, not zero
     assert _est_scan_partitions(spark, 10) == 1
+
+
+def test_shuffle_partitions_auto_falls_back_to_default_parallelism():
+    """Distro sessions may carry spark.sql.shuffle.partitions="auto"
+    (OSS Spark refuses to set it, so a stub session stands in): the
+    width reader and the pair-stage width fall back to the default
+    parallelism instead of raising ValueError."""
+    from types import SimpleNamespace
+
+    from s3_parquet_to_postgres_spark.functions.layout import (
+        explode_width,
+        shuffle_partitions,
+    )
+
+    def session(raw):
+        return SimpleNamespace(
+            conf=SimpleNamespace(get=lambda key, default=None: raw),
+            sparkContext=SimpleNamespace(defaultParallelism=3),
+        )
+
+    auto = session("auto")
+    assert shuffle_partitions(auto) == 3
+    assert explode_width(auto, 0) == 3
+    assert explode_width(auto, 10_000_000) == 3
+    assert shuffle_partitions(session("16")) == 16
+    assert explode_width(session("16"), 10_000_000) == 16

@@ -140,6 +140,7 @@ def test_pin_handle_unavailable_falls_back(spark, monkeypatch, caplog):
     from s3_parquet_to_postgres_spark.operators import ranking as rk
 
     monkeypatch.setattr(rk, "_warned_pin_unavailable", False)
+    real_acquire = rk._acquire_pin_handle
 
     def broken_acquire(stamped):
         raise AttributeError("queryExecution path gone")
@@ -165,6 +166,32 @@ def test_pin_handle_unavailable_falls_back(spark, monkeypatch, caplog):
     warned = [r for r in caplog.records if "pin handle unavailable" in r.message]
     assert len(warned) == 1
     assert rk._warned_pin_unavailable is True
+
+    # Second case: pagerank pins two eager checkpoints (the
+    # re-partitioned adjacency and the final ranks) through the same
+    # path -- same ranks, nothing registered, one warning naming it.
+    from s3_parquet_to_postgres_spark.operators.components import pagerank
+
+    monkeypatch.setattr(rk, "_acquire_pin_handle", real_acquire)
+    edges = spark.createDataFrame(
+        [(a, b) for a, b in [(1, 2), (2, 3), (1, 3), (3, 4)]
+         for a, b in ((a, b), (b, a))],
+        "src long, dst long",
+    )
+    rk.drain_pins()
+    want = sorted(map(tuple, pagerank(edges).collect()))
+    assert len(rk._live_pins) == 2  # adjacency + ranks
+    rk.drain_pins()
+    monkeypatch.setattr(rk, "_warned_pin_unavailable", False)
+    monkeypatch.setattr(rk, "_acquire_pin_handle", broken_acquire)
+    caplog.clear()
+    with caplog.at_level(logging.WARNING,
+                         logger="s3_parquet_to_postgres_spark.operators.ranking"):
+        got = sorted(map(tuple, pagerank(edges).collect()))
+    assert got == want
+    assert rk._live_pins == []
+    warned = [r for r in caplog.records if "pin handle unavailable" in r.message]
+    assert len(warned) == 1 and "pagerank" in warned[0].message
 
 
 def test_drain_pins_releases_everything(spark):
