@@ -70,9 +70,8 @@ def _make_sink_fn(args, spec: JobSpec, spark):
         from .sinks.copy import CopySink
 
         sink = CopySink(spec.sink.conn_string, spec.sink.table, out_cols)
-        # CopySink counts rows via an accumulator inside its own
-        # foreachPartition job (Observation does not resolve for
-        # RDD-backed actions) -- one job, no extra scan. Flat-schema
+        # CopySink.write returns the rows it wrote, counted by the same
+        # single job that runs the COPY -- no extra scan. Flat-schema
         # gate: PG tables are flat; nested projection columns fail at
         # plan time with the columns named (parquet sink allows them).
         return lambda df: sink.write(require_flat(df, "copy sink"))

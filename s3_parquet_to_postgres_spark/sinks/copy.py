@@ -4,7 +4,7 @@ The reference streams rows through ``COPY <t> (<cols>) FROM STDIN
 BINARY`` (reference: src/db.rs:161-240, COPY SQL at :167-171) -- PG's
 fastest ingest path, well ahead of JDBC INSERT batches. Spark has no
 built-in COPY writer, so this is the one custom *physical* sink this
-engine needs (SURVEY.md §4.2): each partition opens its own
+engine needs (SURVEY.md §4.2): each non-empty partition opens its own
 connection and pipes the encoded stream through ``copy_expert``.
 
 Both COPY wire formats are implemented: TEXT (tab-separated, ``\\N``
@@ -13,9 +13,21 @@ int32 length-prefixed big-endian fields, int16 -1 trailer -- the
 format documented in the PostgreSQL manual, "Binary Format"). BINARY
 skips PG's per-field text parse on ingest, which is the reference's
 one stated performance feature; it needs the column types up front,
-so ``CopySink(format="binary")`` takes the Spark schema and compiles
-one encoder per column at plan time (fail-fast on unsupported types,
-like the cast planner).
+so ``CopySink(format="binary")`` checks the Spark schema on the driver
+before any task starts (fail-fast on unsupported types, like the cast
+planner).
+
+The BINARY write is columnar: one ``mapInArrow`` job hands each task
+its partition as Arrow record batches, and ``encode_batch_binary``
+turns a whole batch into PGCOPY tuples with numpy, so no row is ever
+pickled into a Python ``Row``. Each task yields its row count and the
+driver sums them: the count comes from the same single job as the
+COPY. Executors need pyarrow and numpy, which the package's Arrow
+kernels already require. The per-row encoder (``binary_encoders`` +
+``encode_rows_binary``) stays as the reference the columnar one is
+tested against byte for byte. TEXT keeps a ``foreachPartition`` job
+with per-row ``encode_rows`` and an accumulator count. Both formats
+share one framing/commit loop (``CopySink._copy_partition``).
 
 The executor connection resolves in order: an injected factory
 (tests / alternative drivers), psycopg2 when the executor image has
@@ -35,6 +47,7 @@ replays its whole partition.
 from __future__ import annotations
 
 import io
+import itertools
 import struct
 from dataclasses import dataclass
 from datetime import date, datetime, timezone
@@ -204,13 +217,132 @@ def encode_rows_binary(
         yield b"".join(parts)
 
 
+# -- columnar BINARY encoder (Arrow record batch -> PGCOPY tuples) ---------
+
+_PG_EPOCH_DAYS = (_PG_EPOCH_DATE - date(1970, 1, 1)).days  # 10957
+_PG_EPOCH_MICROS = _PG_EPOCH_DAYS * 86_400 * 1_000_000
+
+# Arrow fixed-width type -> (source dtype, big-endian PG dtype, shift
+# from the Unix epoch). tinyint widens to int2 like the row encoder.
+# double moves as raw int64 bits: the row encoder packs the Python
+# float bit for bit, signalling-NaN payloads included, and float
+# arithmetic would quiet them. float stays float: the row encoder
+# widens it to a Python float and back, which quiets signalling NaNs,
+# and so does the (zero) shift below.
+_ARROW_FIXED = {
+    "int8": ("i1", ">i2", 0),
+    "int16": ("i2", ">i2", 0),
+    "int32": ("i4", ">i4", 0),
+    "int64": ("i8", ">i8", 0),
+    "float": ("f4", ">f4", 0),
+    "double": ("i8", ">i8", 0),
+    "date32[day]": ("i4", ">i4", _PG_EPOCH_DAYS),
+}
+
+
+def encode_batch_binary(batch) -> bytes:
+    """One Arrow ``RecordBatch`` -> its PGCOPY binary tuples (no
+    header/trailer), byte-identical to ``encode_rows_binary`` over the
+    same rows.
+
+    Vectorized with numpy: each field's size is known from the column
+    buffers, so one row-major cumulative sum gives every field's
+    offset and each column is scattered into one output buffer.
+    Fixed-width columns are one big-endian ``astype``; date32 and
+    timestamp values are shifted from the Unix to the PG epoch;
+    strings and binary are gathered from the Arrow offset and data
+    buffers (``string``/``large_string``/``binary``/``large_binary``,
+    any slice offset); NULLs get a ``-1`` length header; decimals
+    alone go value by value through ``encode_numeric``.
+
+    Takes the Arrow types Spark's Arrow conversion emits for the
+    types ``binary_encoders`` accepts, and raises TypeError on any
+    other. Timestamps are encoded as the instant the column holds
+    (microseconds since the Unix epoch, in UTC): Spark hands
+    ``mapInArrow`` UTC instants, whatever the session time zone,
+    while the row encoder renders a ``timestamp`` in the Python
+    worker's local zone. The two agree when that zone is UTC, as in
+    sessions this package builds; ``timestamp_ntz`` agrees always.
+    """
+    import numpy as np
+
+    n, k = batch.num_rows, batch.num_columns
+    if n == 0:
+        return b""
+    fields = [_arrow_field(col) for col in batch.columns]
+    sizes = np.empty((n, k + 1), np.int64)
+    sizes[:, 0] = 2  # int16 field count
+    for j, (lens, _) in enumerate(fields):
+        sizes[:, j + 1] = 4 + np.maximum(lens, 0)
+    starts = np.cumsum(sizes).reshape(n, k + 1) - sizes
+    out = np.empty(int(starts[-1, -1] + sizes[-1, -1]), np.uint8)
+    out[starts[:, :1] + np.arange(2)] = np.frombuffer(struct.pack(">h", k), np.uint8)
+    for j, (lens, blob) in enumerate(fields):
+        at = starts[:, j + 1]
+        out[at[:, None] + np.arange(4)] = lens.astype(">i4").view(np.uint8).reshape(n, 4)
+        valid = lens >= 0
+        at, lens = at[valid] + 4, lens[valid]
+        seg = np.cumsum(lens) - lens
+        out[np.repeat(at - seg, lens) + np.arange(len(blob))] = blob
+    return out.tobytes()
+
+
+def _arrow_field(col):
+    """One Arrow column -> (int64 field length per row, -1 for NULL;
+    uint8 concatenation of the non-NULL fields' bytes in row order)."""
+    import numpy as np
+    import pyarrow as pa
+
+    n, off, t = len(col), col.offset, col.type
+    valid = (
+        np.ones(n, bool) if col.null_count == 0
+        else col.is_valid().to_numpy(zero_copy_only=False)
+    )
+    buffers = col.buffers()
+    if pa.types.is_boolean(t):
+        bits = np.unpackbits(np.frombuffer(buffers[1], np.uint8), bitorder="little")
+        return np.where(valid, 1, -1), bits[off:off + n][valid]
+    if (pa.types.is_string(t) or pa.types.is_large_string(t)
+            or pa.types.is_binary(t) or pa.types.is_large_binary(t)):
+        large = pa.types.is_large_string(t) or pa.types.is_large_binary(t)
+        offs = np.frombuffer(buffers[1], np.int64 if large else np.int32,
+                             count=off + n + 1)[off:]
+        data = np.frombuffer(buffers[2] or b"", np.uint8)
+        width = np.diff(offs).astype(np.int64)
+        lens = np.where(valid, width, -1)
+        if (lens == width).all():  # NULL slots span no bytes
+            return lens, data[offs[0]:offs[-1]]
+        kept, begin = width[valid], offs[:-1][valid]
+        seg = np.cumsum(kept) - kept
+        return lens, data[np.repeat(begin - seg, kept) + np.arange(kept.sum())]
+    if pa.types.is_decimal(t):
+        enc = [None if v is None else encode_numeric(v) for v in col.to_pylist()]
+        lens = np.array([-1 if e is None else len(e) for e in enc], np.int64)
+        return lens, np.frombuffer(b"".join(e for e in enc if e), np.uint8)
+    if pa.types.is_timestamp(t) and t.unit == "us":
+        src, dst, shift = "i8", ">i8", _PG_EPOCH_MICROS
+    elif str(t) in _ARROW_FIXED:
+        src, dst, shift = _ARROW_FIXED[str(t)]
+    else:
+        raise TypeError(f"COPY BINARY: unsupported Arrow type {t}")
+    with np.errstate(invalid="ignore"):  # float NaNs, quieted on purpose
+        values = np.frombuffer(buffers[1], src, count=off + n)[off:] - shift
+    return (np.where(valid, np.dtype(dst).itemsize, -1),
+            values.astype(dst)[valid].view(np.uint8))
+
+
 @dataclass
 class CopySink:
-    """foreachPartition writer using COPY ... FROM STDIN [BINARY].
+    """Writes a DataFrame with COPY ... FROM STDIN [BINARY], one
+    connection and one transaction per non-empty partition.
 
-    ``format="text"`` needs no type information; ``format="binary"``
-    (the reference's fast path, src/db.rs:167-171) compiles per-column
-    encoders from the DataFrame schema at plan time in ``write``.
+    ``format="text"`` needs no type information and encodes rows in a
+    ``foreachPartition`` job. ``format="binary"`` (the reference's
+    fast path, src/db.rs:167-171) checks every column type on the
+    driver in ``write``, then encodes whole Arrow record batches in a
+    ``mapInArrow`` job (``encode_batch_binary``), so rows never become
+    Python objects; executors need pyarrow and numpy, which the
+    package's Arrow kernels already require.
     """
 
     conn_string: str
@@ -219,9 +351,9 @@ class CopySink:
     format: str = "text"  # "text" | "binary"
     # Injectable for tests / alternative drivers: a picklable callable
     # (conn_string) -> DB-API connection. None -> psycopg2.connect on
-    # the executor. Lets the full foreachPartition path (framing,
-    # flush boundaries, commit/rollback, accumulator counts) run
-    # end-to-end without a live Postgres.
+    # the executor. Lets the full executor path (framing, flush
+    # boundaries, commit/rollback, row counts) run end-to-end without
+    # a live Postgres.
     connection_factory: Callable[[str], Any] | None = None
 
     def __post_init__(self) -> None:
@@ -234,75 +366,83 @@ class CopySink:
         return f'COPY "{self.table}" ({cols}) FROM STDIN{suffix}'
 
     def write(self, df) -> int:
-        """Write df and return rows written. The count rides a Spark
-        accumulator filled by the same foreachPartition job as the
-        COPY itself -- no second scan (the Observation API does not
-        resolve for RDD-backed actions, so an accumulator is the
-        single-job mechanism here)."""
+        """Write df and return rows written, counted by the same single
+        job that runs the COPY -- no second scan. Binary: each
+        ``mapInArrow`` task yields its row count and the driver sums
+        the collected counts. Text: the count rides an accumulator
+        (the Observation API does not resolve for RDD-backed actions
+        such as ``foreachPartition``)."""
         sink = self  # capture a picklable copy for executors
         projected = df.select(*self.columns)
-        rows_acc = df.sparkSession.sparkContext.accumulator(0)
+        if self.format == "text":
+            rows_acc = df.sparkSession.sparkContext.accumulator(0)
+
+            def write_text_partition(rows: Iterator) -> None:
+                lines = encode_rows(tuple(r) for r in rows)
+                rows_acc.add(sink._copy_partition((line, 1) for line in lines))
+
+            projected.foreachPartition(write_text_partition)
+            return rows_acc.value
+
         # Plan-time fail-fast: unsupported binary column types raise
         # here on the driver, before any task launches.
-        encoders = binary_encoders(projected.schema) if self.format == "binary" else None
+        binary_encoders(projected.schema)
 
-        def write_text_partition(rows: Iterator) -> None:
-            conn = _connect(sink.conn_string, sink.connection_factory)
-            buf = io.StringIO()
-            n = 0
-            try:
-                with conn.cursor() as cur:
-                    for line in encode_rows(tuple(r) for r in rows):
-                        buf.write(line)
-                        n += 1
-                        if buf.tell() > 8 << 20:  # flush every ~8 MiB
-                            buf.seek(0)
-                            cur.copy_expert(sink.copy_sql(), buf)
-                            buf = io.StringIO()
-                    if n and buf.tell():
+        def write_partition(batches: Iterator) -> Iterator:
+            import pyarrow as pa
+
+            n = sink._copy_partition(
+                (encode_batch_binary(b), b.num_rows) for b in batches
+            )
+            yield pa.RecordBatch.from_pydict({"n": pa.array([n], pa.int64())})
+
+        counts = projected.mapInArrow(write_partition, "n long").collect()
+        return sum(r.n for r in counts)
+
+    def _copy_partition(self, chunks: Iterable[tuple[Any, int]]) -> int:
+        """Executor side: stream ``(encoded chunk, rows in it)`` pairs
+        through COPY and return the rows committed.
+
+        The connection opens on the first chunk that holds rows, so an
+        empty partition costs no connect. The encoded chunks are
+        buffered and flushed every ~8 MiB; each ``copy_expert`` call is
+        one complete stream (for BINARY: header + tuples + trailer).
+        The partition commits once, all-or-nothing; any error rolls
+        back and fails the task (fail-fast like the reference,
+        src/db.rs:202-239)."""
+        binary = self.format == "binary"
+        head, tail = (BINARY_HEADER, BINARY_TRAILER) if binary else ("", "")
+        new_buf = io.BytesIO if binary else io.StringIO
+        chunks = iter(chunks)
+        first = next((c for c in chunks if c[1]), None)
+        if first is None:
+            return 0
+        conn = _connect(self.conn_string, self.connection_factory)
+        n = 0
+        try:
+            with conn.cursor() as cur:
+                buf = new_buf()
+                buf.write(head)
+                for data, rows in itertools.chain([first], chunks):
+                    buf.write(data)
+                    n += rows
+                    if buf.tell() > 8 << 20:
+                        buf.write(tail)
                         buf.seek(0)
-                        cur.copy_expert(sink.copy_sql(), buf)
-                conn.commit()  # all-or-nothing per partition
-                rows_acc.add(n)
-            except Exception:
-                conn.rollback()
-                raise  # fail the task -> fail-fast like the reference
-            finally:
-                conn.close()
-
-        def write_binary_partition(rows: Iterator) -> None:
-            conn = _connect(sink.conn_string, sink.connection_factory)
-            buf = io.BytesIO()
-            buf.write(BINARY_HEADER)
-            n = 0
-            try:
-                with conn.cursor() as cur:
-                    for tup in encode_rows_binary((tuple(r) for r in rows), encoders):
-                        buf.write(tup)
-                        n += 1
-                        if buf.tell() > 8 << 20:
-                            # Each copy_expert call is one complete
-                            # PGCOPY stream: header + tuples + trailer.
-                            buf.write(BINARY_TRAILER)
-                            buf.seek(0)
-                            cur.copy_expert(sink.copy_sql(), buf)
-                            buf = io.BytesIO()
-                            buf.write(BINARY_HEADER)
-                    if n and buf.tell() > len(BINARY_HEADER):
-                        buf.write(BINARY_TRAILER)
-                        buf.seek(0)
-                        cur.copy_expert(sink.copy_sql(), buf)
-                conn.commit()
-                rows_acc.add(n)
-            except Exception:
-                conn.rollback()
-                raise
-            finally:
-                conn.close()
-
-        fn = write_binary_partition if self.format == "binary" else write_text_partition
-        projected.foreachPartition(fn)
-        return rows_acc.value
+                        cur.copy_expert(self.copy_sql(), buf)
+                        buf = new_buf()
+                        buf.write(head)
+                if buf.tell() > len(head):
+                    buf.write(tail)
+                    buf.seek(0)
+                    cur.copy_expert(self.copy_sql(), buf)
+            conn.commit()
+        except Exception:
+            conn.rollback()
+            raise
+        finally:
+            conn.close()
+        return n
 
 
 def _connect(conn_string: str, factory: "Callable[[str], Any] | None" = None):

@@ -84,6 +84,9 @@ class FakePgServer:
         self.advertise_plus = advertise_plus
         self.last_mech: str | None = None
         self.last_gs2: str | None = None
+        # Accepted TCP connections (one per client connect), so tests
+        # can assert that work needing no database opens none.
+        self.connections = 0
         self._srv = socket.socket(socket.AF_INET, socket.SOCK_STREAM)
         self._srv.setsockopt(socket.SOL_SOCKET, socket.SO_REUSEADDR, 1)
         self._srv.bind(("127.0.0.1", 0))
@@ -157,6 +160,7 @@ class FakePgServer:
                 conn, _ = self._srv.accept()
             except OSError:
                 return
+            self.connections += 1
             t = threading.Thread(
                 target=self._serve_conn, args=(conn,), daemon=True
             )

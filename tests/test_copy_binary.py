@@ -2,23 +2,46 @@
 COPY ... FROM STDIN BINARY; this pins our wire-format encoder to the
 PostgreSQL manual's "Binary Format" section without needing a live
 PG: known byte vectors for every supported type, a NUMERIC round-trip
-decoder under hypothesis, and stream-framing checks)."""
+decoder under hypothesis, and stream-framing checks). The columnar
+encoder the sink runs (``encode_batch_binary``) is pinned byte for
+byte to the per-row reference encoder over every supported type."""
 
 from __future__ import annotations
 
+import math
 import struct
+import time
 from datetime import date, datetime, timezone
 from decimal import Decimal
 
+import pyarrow as pa
 import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
+from pyspark.sql.types import (
+    BinaryType,
+    BooleanType,
+    ByteType,
+    DateType,
+    DecimalType,
+    DoubleType,
+    FloatType,
+    IntegerType,
+    LongType,
+    ShortType,
+    StringType,
+    StructField,
+    StructType,
+    TimestampNTZType,
+    TimestampType,
+)
 
 from s3_parquet_to_postgres_spark.sinks.copy import (
     BINARY_HEADER,
     BINARY_TRAILER,
     CopySink,
     binary_encoders,
+    encode_batch_binary,
     encode_numeric,
     encode_rows_binary,
 )
@@ -242,3 +265,195 @@ def test_binary_rows_round_trip(rows):
             assert date(2000, 1, 1) + __import__("datetime").timedelta(
                 days=struct.unpack(">i", got[6])[0]
             ) == dt
+
+
+# -- columnar encoder: byte parity with the per-row reference ---------------
+
+# (column, Spark type, the Arrow type Spark's Arrow conversion emits for
+# it under the UTC session this package builds)
+_TYPES = [
+    ("b", BooleanType(), pa.bool_()),
+    ("t", ByteType(), pa.int8()),
+    ("s", ShortType(), pa.int16()),
+    ("i", IntegerType(), pa.int32()),
+    ("l", LongType(), pa.int64()),
+    ("f", FloatType(), pa.float32()),
+    ("d", DoubleType(), pa.float64()),
+    ("str", StringType(), pa.string()),
+    ("bin", BinaryType(), pa.binary()),
+    ("dt", DateType(), pa.date32()),
+    ("ts", TimestampType(), pa.timestamp("us", tz="UTC")),
+    ("ntz", TimestampNTZType(), pa.timestamp("us")),
+    ("dec", DecimalType(18, 4), pa.decimal128(18, 4)),
+]
+_SPARK_SCHEMA = StructType([StructField(n, t) for n, t, _ in _TYPES])
+_UTC = timezone.utc
+
+_EDGE_ROWS = [
+    (True, 127, 32767, 2**31 - 1, 2**63 - 1, 1.5, 2.5, "hé€😀", b"\x00\xff",
+     date(2024, 1, 2), datetime(2024, 1, 2, 3, 4, 5, 6, _UTC),
+     datetime(2024, 1, 2, 3, 4, 5, 6), Decimal("12.3400")),
+    (None,) * 13,
+    (False, -128, -32768, -2**31, -2**63, -0.0, -0.0, "", b"",
+     date(1969, 12, 31), datetime(1969, 12, 31, 23, 59, 59, 999999, _UTC),
+     datetime(1900, 1, 1), Decimal("-0.0001")),
+    (True, 0, 0, 0, 0, math.nan, math.nan, "tab\tnew\nline\\", b"\x00",
+     date(1999, 12, 31), datetime(1999, 12, 31, 23, 59, 59, 999999, _UTC),
+     datetime(1999, 12, 31, 23, 59, 59), Decimal("0")),
+    (None, 1, None, 2, None, math.inf, -math.inf, None, b"x" * 300, None,
+     datetime(1900, 6, 1, tzinfo=_UTC), None, Decimal("99999999999999.9999")),
+    (False, None, 3, None, 4, -math.inf, math.inf, "ß" * 40, None,
+     date(1, 1, 1), None, datetime(9999, 12, 31, 23, 59, 59, 999999), None),
+]
+
+
+def _batch(rows) -> pa.RecordBatch:
+    cols = list(zip(*rows)) if rows else [()] * len(_TYPES)
+    return pa.RecordBatch.from_arrays(
+        [pa.array(list(c), type=t) for c, (_, _, t) in zip(cols, _TYPES)],
+        names=[n for n, _, _ in _TYPES],
+    )
+
+
+def _row_reference(batch: pa.RecordBatch) -> bytes:
+    """The per-row encoder over the same values (tz-aware timestamps
+    are UTC instants, which the row encoder normalizes to UTC)."""
+    rows = zip(*(c.to_pylist() for c in batch.columns))
+    return b"".join(encode_rows_binary(rows, binary_encoders(_SPARK_SCHEMA)))
+
+
+def _large(batch: pa.RecordBatch) -> pa.RecordBatch:
+    """Same values with 64-bit string/binary offsets."""
+    return batch.cast(pa.schema([
+        pa.field(f.name, {pa.string(): pa.large_string(),
+                          pa.binary(): pa.large_binary()}.get(f.type, f.type))
+        for f in batch.schema
+    ]))
+
+
+def test_batch_encoder_matches_row_encoder_every_type():
+    batch = _batch(_EDGE_ROWS)
+    want = _row_reference(batch)
+    assert encode_batch_binary(batch) == want
+    assert encode_batch_binary(_large(batch)) == want
+    for sliced in (batch.slice(1), batch.slice(2, 3), batch.slice(5, 1)):
+        assert sliced.column(0).offset > 0
+        assert encode_batch_binary(sliced) == _row_reference(sliced)
+        assert encode_batch_binary(_large(sliced)) == _row_reference(sliced)
+
+
+def test_batch_encoder_all_null_columns():
+    n = 4
+    valued = _batch([_EDGE_ROWS[0]] * n)
+    for j, (name, _, t) in enumerate(_TYPES):
+        batch = valued.set_column(j, name, pa.nulls(n, t))
+        assert encode_batch_binary(batch) == _row_reference(batch)
+    all_null = _batch([(None,) * len(_TYPES)] * n)
+    assert encode_batch_binary(all_null) == _row_reference(all_null)
+    assert encode_batch_binary(all_null) == (
+        struct.pack(">h", len(_TYPES)) + struct.pack(">i", -1) * len(_TYPES)
+    ) * n
+
+
+@pytest.mark.parametrize("t", [pa.string(), pa.large_string(),
+                               pa.binary(), pa.large_binary()])
+def test_batch_encoder_null_slots_spanning_bytes(t):
+    # Arrow lets a NULL slot's offsets span data bytes; they must not
+    # leak into the neighbouring fields.
+    values = pa.array(["ab", "cd", "", "éf", "gh"], type=t)
+    validity = pa.py_buffer(bytes([0b11010]))  # rows 0 and 2 are NULL
+    col = pa.Array.from_buffers(t, 5, [validity, *values.buffers()[1:]])
+    assert col.to_pylist()[:2] == [None, values[1].as_py()]
+    for arr in (col, col.slice(1)):
+        batch = pa.RecordBatch.from_arrays([arr], names=["x"])
+        text = pa.types.is_string(t) or pa.types.is_large_string(t)
+        schema = StructType([StructField(
+            "x", StringType() if text else BinaryType())])
+        rows = ((v,) for v in arr.to_pylist())
+        want = b"".join(encode_rows_binary(rows, binary_encoders(schema)))
+        assert encode_batch_binary(batch) == want
+
+
+def test_batch_encoder_empty_batch():
+    assert encode_batch_binary(_batch([])) == b""
+    assert encode_batch_binary(_batch(_EDGE_ROWS).slice(3, 0)) == b""
+
+
+def test_batch_encoder_rejects_types_spark_does_not_emit():
+    for t in (pa.uint32(), pa.timestamp("ns"), pa.list_(pa.int32())):
+        with pytest.raises(TypeError, match="unsupported Arrow type"):
+            encode_batch_binary(pa.RecordBatch.from_arrays(
+                [pa.array([None], type=t)], names=["x"]))
+
+
+def test_batch_encoder_nan_payloads_match_row_encoder():
+    """double NaN payloads survive bit for bit (signalling ones too);
+    float signalling NaNs come out quieted, as the row encoder's
+    round trip through a Python float leaves them."""
+    snan64 = struct.unpack("<d", struct.pack("<Q", 0x7FF544D4CA2D8191))[0]
+    snan32 = struct.pack("<I", 0x7F812345)
+    batch = pa.RecordBatch.from_arrays(
+        [pa.Array.from_buffers(pa.float32(), 1, [None, pa.py_buffer(snan32)]),
+         pa.array([snan64], pa.float64())],
+        names=["f", "d"])
+    got = encode_batch_binary(batch)
+    rows = zip(*(c.to_pylist() for c in batch.columns))
+    assert got == b"".join(encode_rows_binary(
+        rows, binary_encoders(StructType([
+            StructField("f", FloatType()), StructField("d", DoubleType())]))))
+    assert got == (struct.pack(">hi", 2, 4) + struct.pack(">I", 0x7FC12345)
+                   + struct.pack(">iQ", 8, 0x7FF544D4CA2D8191))
+
+
+_row = st.tuples(
+    st.one_of(st.none(), st.booleans()),
+    st.one_of(st.none(), st.integers(-2**7, 2**7 - 1)),
+    st.one_of(st.none(), st.integers(-2**15, 2**15 - 1)),
+    st.one_of(st.none(), st.integers(-2**31, 2**31 - 1)),
+    st.one_of(st.none(), st.integers(-2**63, 2**63 - 1)),
+    st.one_of(st.none(), st.floats(width=32)),
+    st.one_of(st.none(), st.floats()),
+    st.one_of(st.none(), st.text(max_size=12)),
+    st.one_of(st.none(), st.binary(max_size=12)),
+    st.one_of(st.none(), st.dates()),
+    st.one_of(st.none(), st.datetimes(timezones=st.just(_UTC))),
+    st.one_of(st.none(), st.datetimes()),
+    st.one_of(st.none(), st.decimals(
+        min_value=Decimal("-1e13"), max_value=Decimal("1e13"),
+        allow_nan=False, places=4)),
+)
+
+
+@settings(max_examples=150, deadline=None)
+@given(st.lists(_row, max_size=12), st.integers(0, 3), st.booleans())
+def test_batch_encoder_parity_property(rows, start, large):
+    batch = _batch(rows)
+    if large:
+        batch = _large(batch)
+    batch = batch.slice(min(start, len(rows)))
+    assert encode_batch_binary(batch) == _row_reference(batch)
+
+
+@pytest.mark.skipif(
+    time.timezone != 0 or time.daylight,
+    reason="the row path renders timestamps in the local zone; "
+    "parity holds where that zone is UTC",
+)
+def test_batch_encoder_matches_row_encoder_through_spark(spark):
+    """Spark's own Arrow batches (``mapInArrow``) against Spark's own
+    rows (``collect``) under the package's UTC session."""
+    rows = [
+        tuple(v.replace(tzinfo=None) if isinstance(v, datetime) else v
+              for v in r)
+        for r in _EDGE_ROWS
+    ]
+    df = spark.createDataFrame(rows, _SPARK_SCHEMA).coalesce(1)
+
+    def encode(batches):
+        for b in batches:
+            yield pa.RecordBatch.from_pydict({"blob": [encode_batch_binary(b)]})
+
+    got = b"".join(r.blob for r in df.mapInArrow(encode, "blob binary").collect())
+    want = encode_rows_binary(
+        (tuple(r) for r in df.collect()), binary_encoders(df.schema))
+    assert got == b"".join(want)

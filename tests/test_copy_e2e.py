@@ -1,8 +1,9 @@
-"""End-to-end CopySink tests through the REAL foreachPartition path,
-using an injected connection factory instead of live Postgres: framing
-and flush boundaries, accumulator row counts, commit/rollback
-semantics -- the 'socket half' the container otherwise can't reach
-(reference e2e runs against real PG, src/runner.rs:163-374)."""
+"""End-to-end CopySink tests through the REAL executor paths
+(foreachPartition for TEXT, mapInArrow for BINARY), using an injected
+connection factory instead of live Postgres: framing and flush
+boundaries, row counts, commit/rollback semantics -- the 'socket
+half' the container otherwise can't reach (reference e2e runs against
+real PG, src/runner.rs:163-374)."""
 
 from __future__ import annotations
 

@@ -205,6 +205,51 @@ def test_copy_text_over_socket_from_executors(spark, tmp_path):
         assert lines == ["1\ta\\tb", "2\t\\N"]
 
 
+@pytest.mark.parametrize("fmt", ["text", "binary"])
+def test_copy_write_is_one_job_and_returns_count(spark, tmp_path, fmt):
+    df = spark.range(0, 1000, numPartitions=4).selectExpr(
+        "id", "cast(id / 4 as decimal(10,2)) as amt"
+    )
+    sc = spark.sparkContext
+    group = f"copy-one-job-{fmt}"
+    with FakePgServer(str(tmp_path / "spool")) as srv:
+        sink = CopySink(srv.conn_string, "t", ("id", "amt"), format=fmt)
+        sc.setJobGroup(group, "CopySink.write")
+        try:
+            n = sink.write(df)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert n == 1000
+        assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+        copies = srv.committed_copies()
+        if fmt == "binary":
+            blob = b"".join(_strip_frames(c) for c in copies)
+            ids = sorted(struct.unpack(">q", t[0])[0]
+                         for t in parse_tuples(blob, 2))
+        else:
+            lines = b"".join(copies).decode().splitlines()
+            ids = sorted(int(ln.split("\t")[0]) for ln in lines)
+        assert ids == list(range(1000))
+
+
+@pytest.mark.parametrize("fmt", ["text", "binary"])
+def test_empty_partitions_open_no_connection(spark, tmp_path, fmt):
+    # range(8) over 8 partitions puts one id in each partition.
+    base = spark.range(0, 8, numPartitions=8).selectExpr(
+        "id", "cast(id as string) as s"
+    )
+    two = base.where("id % 4 = 1")  # ids 1 and 5: 6 of 8 partitions empty
+    none = base.where("id < 0")
+    assert two.rdd.getNumPartitions() == none.rdd.getNumPartitions() == 8
+    with FakePgServer(str(tmp_path / "spool")) as srv:
+        sink = CopySink(srv.conn_string, "t", ("id", "s"), format=fmt)
+        assert sink.write(two) == 2
+        assert srv.connections == 2
+        assert len(srv.committed_copies()) == 2
+        assert sink.write(none) == 0
+        assert srv.connections == 2
+
+
 def test_copy_socket_failure_fails_job_and_commits_nothing(spark, tmp_path):
     df = spark.createDataFrame([(1,), (2,)], "id: long").repartition(2)
     with FakePgServer(
