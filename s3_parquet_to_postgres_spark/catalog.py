@@ -6,6 +6,10 @@ TIMESTAMP(NANOS,false), which Spark cannot represent. With
 bigint and we convert to microsecond TIMESTAMP_NTZ here, truncating the
 same way DuckDB's ``CAST(ts_ns AS TIMESTAMP)`` does so oracle
 comparisons line up (verified: identical to DuckDB at sf0.001).
+
+That conf is owned by the session (``session._BASE_CONFS``, applied by
+``build_session`` and ``apply_required_confs``); loading a table never
+writes session state.
 """
 
 from __future__ import annotations
@@ -30,18 +34,10 @@ TABLES = (
 BROADCAST_TABLES = frozenset({"region", "nation", "supplier"})
 
 
-def _ensure_nanos_conf(spark: SparkSession) -> None:
-    try:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    except Exception:
-        pass  # static in this session; reads will fail loudly if unset
-
-
 def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one synthetic table; normalizes events.ts to microseconds."""
     path = f"{sf_dir.rstrip('/')}/{name}.parquet"
     if name == "events":
-        _ensure_nanos_conf(spark)
         df = spark.read.parquet(path)
         # The generator has shipped ts as TIMESTAMP(NANOS) (surfacing
         # as bigint under nanosAsLong) and as TIMESTAMP(MICROS);

@@ -319,33 +319,24 @@ def pagerank(
     from ..functions.layout import shuffle_partitions
     from .ranking import register_pin
 
-    sp_key = "spark.sql.shuffle.partitions"
-    sp_was = spark.conf.get(sp_key)
     sp = shuffle_partitions(spark)
     width = max(1, min(-(-int(n_e) // 250_000), sp))
-    with eager_build_scope(spark):
+    with eager_build_scope(spark, shuffle_partitions=width):
         if width != sp:
             adj = adj.repartition(width, "a_id").localCheckpoint(
                 eager=True
             )
             register_pin(adj, "pagerank")
-        spark.conf.set(sp_key, str(width))
-        try:
-            ranks = adj.select(
-                F.col("a_id").alias("id"), F.lit(1.0 / n).alias("r")
-            )
-            base_term = F.lit((1.0 - damping) / n)
-            d = F.lit(damping)
-            ranks = _pagerank_rounds(ranks, adj, iters, base_term, d)
-            # The eager checkpoint MUST sit inside the conf scope:
-            # shuffle.partitions is read at PHYSICAL planning time,
-            # which for every lazily-built round happens right here --
-            # checkpointing after the restore planned rounds 6-10 at
-            # the session width (measured: five 32-task stages of a
-            # 15k-row exchange, ~0.3 s each, in the loop job).
-            ranks = ranks.localCheckpoint(eager=True)
-        finally:
-            spark.conf.set(sp_key, sp_was)
+        ranks = adj.select(
+            F.col("a_id").alias("id"), F.lit(1.0 / n).alias("r")
+        )
+        base_term = F.lit((1.0 - damping) / n)
+        d = F.lit(damping)
+        ranks = _pagerank_rounds(ranks, adj, iters, base_term, d)
+        # Checkpoint inside the scope: the lazily built rounds are
+        # physically planned right here, and only the scope's width
+        # keeps their exchanges at the loop width.
+        ranks = ranks.localCheckpoint(eager=True)
     from ..functions import dround
 
     register_pin(ranks, "pagerank")
@@ -354,7 +345,7 @@ def pagerank(
 
 def _pagerank_rounds(ranks, adj, iters, base_term, d):
     """The damped power-iteration rounds (see ``pagerank``); split out
-    so the conf scoping above stays readable."""
+    so the eager-build scope above stays readable."""
     for i in range(iters):
         # Deliberate join strategy (guide §3.1): the planner's size
         # estimates put the V-row rank table under the broadcast

@@ -237,88 +237,6 @@ def lsh_topk(
     )
 
 
-def cosine_topk_pandas(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Exact top-k cosine via an Arrow-batched numpy kernel.
-
-    Same contract and results as ``cosine_topk``; different engine
-    trade: the dot products run as one BLAS matmul per Arrow batch
-    (queries collected once to the driver, shipped inside the
-    by-value-pickled closure) instead of per-row Catalyst expressions.
-    Wins when dims are large (matmul >> expression interpretation per
-    element); loses the JVM-only purity. Per-partition top-k keeps the
-    shuffle at k rows per query per partition, identical to the
-    expression variant.
-    """
-    import sys as _sys
-    from typing import Iterator as _Iter
-
-    import numpy as np
-    from pyspark import cloudpickle as _cp
-    from pyspark.sql.types import (
-        DoubleType,
-        LongType,
-        StructField,
-        StructType,
-    )
-
-    _cp.register_pickle_by_value(_sys.modules[__name__])
-
-    q_rows = queries.select(id_col, vec_col).collect()
-    q_ids = np.array([r[id_col] for r in q_rows], dtype=np.int64)
-    q_mat = np.array([list(r[vec_col]) for r in q_rows], dtype=np.float64)
-    q_norm = q_mat / np.linalg.norm(q_mat, axis=1, keepdims=True)
-
-    out_schema = StructType(
-        [
-            StructField("query_id", LongType()),
-            StructField("neighbor_id", LongType()),
-            StructField("sim", DoubleType()),
-        ]
-    )
-
-    def score(batches: _Iter) -> _Iter:
-        import pandas as pd
-
-        for pdf in batches:
-            c_ids = pdf[id_col].to_numpy(dtype=np.int64)
-            c_mat = np.array([list(v) for v in pdf[vec_col]], dtype=np.float64)
-            c_mat /= np.linalg.norm(c_mat, axis=1, keepdims=True)
-            sims = c_mat @ q_norm.T  # (batch, n_queries)
-            for qi in range(len(q_ids)):
-                col = sims[:, qi]
-                mask = c_ids != q_ids[qi]
-                idx = np.nonzero(mask)[0]
-                # Same (sim desc, id asc) order as the final ranking,
-                # so boundary ties survive batch-local pruning.
-                order = np.lexsort((c_ids[idx], -col[idx]))
-                take = idx[order[: k]]
-                yield pd.DataFrame(
-                    {
-                        "query_id": q_ids[qi],
-                        "neighbor_id": c_ids[take],
-                        "sim": col[take],
-                    }
-                )
-
-    partial = corpus.select(id_col, vec_col).mapInPandas(score, out_schema)
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        partial.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id",
-                dround("sim", 4).alias("cosine_sim"),
-                F.col("rank").cast("long").alias("rank"))
-    )
-
-
 def nearest_centroid(cents: Column, v: Column) -> Column:
     """Argmax over a broadcast-folded (centroid_id, cent_vec) array:
     a narrow transform-then-fold, so the corpus never shuffles for

@@ -20,6 +20,7 @@ from pyspark.sql.window import Window
 
 from ..functions import dround, md5_unit
 from ..functions.numeric import sql_md5_unit
+from ..session import eager_build_scope
 from .base import QuerySpec, size_scaled_partitions, t
 from .ext import pagerank_oracle_sql
 
@@ -369,12 +370,13 @@ def ml_logreg_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     size-scaled (see base.size_scaled_partitions: derived from the
     documents table's on-disk bytes, clamped to the conf cap — 1 at
     local test scale, cluster-sized on a cluster), explicit so AQE
-    coalescing cannot desynchronize the two sides' partitioning. AQE is toggled OFF just around the
-    two checkpoint builds: under AQE the checkpointed LogicalRDD
-    records UnknownPartitioning (measured: the repartition then buys
-    nothing and every iteration exchange stays); planned without AQE
-    it records hashpartitioning(doc_id, n) and the iteration plans
-    collapse to exchange-free aggregates/joins.
+    coalescing cannot desynchronize the two sides' partitioning. AQE is
+    off (``eager_build_scope``) just around the two checkpoint builds:
+    under AQE the checkpointed LogicalRDD records UnknownPartitioning
+    (measured: the repartition then buys nothing and every iteration
+    exchange stays); planned without AQE it records
+    hashpartitioning(doc_id, n) and the iteration plans collapse to
+    exchange-free aggregates/joins.
     """
     from ..functions import md5_unit
 
@@ -382,10 +384,7 @@ def ml_logreg_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = t(spark, sf_dir, "documents").select(
         "doc_id", "lang", F.expr(_WS_TOKS_SPARK).alias("w")
     )
-    aqe_key = "spark.sql.adaptive.enabled"
-    aqe_was = spark.conf.get(aqe_key)
-    spark.conf.set(aqe_key, "false")
-    try:
+    with eager_build_scope(spark):
         x = (
             d.select("doc_id", F.explode("w").alias("tok"))
             .withColumn(
@@ -406,8 +405,6 @@ def ml_logreg_train(spark: SparkSession, sf_dir: str) -> DataFrame:
             .repartition(n_part, "doc_id")
             .localCheckpoint(eager=True)
         )
-    finally:
-        spark.conf.set(aqe_key, aqe_was)
     # ONE bounded scalar (doc count), computed once off the
     # checkpointed feature table: as a lazy aggregate it re-ran its
     # distinct-shuffle inside every iteration's weight update.

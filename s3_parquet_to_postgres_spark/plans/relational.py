@@ -717,14 +717,13 @@ GROUP BY CUBE (o_orderstatus, o_orderpriority)
 
 
 def agg_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t(spark, sf_dir, "lineitem").createOrReplaceTempView("_gs_lineitem")
     return spark.sql("""
         SELECT coalesce(l_returnflag, '<all>') AS flag,
                coalesce(l_linestatus, '<all>') AS status,
                count(*) AS cnt
-        FROM _gs_lineitem
+        FROM {l}
         GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), ())
-    """)
+    """, l=t(spark, sf_dir, "lineitem"))
 
 
 AGG_GROUPING_SETS_SQL = """
@@ -939,17 +938,15 @@ def subquery_correlated(spark: SparkSession, sf_dir: str) -> DataFrame:
     # an aggregate + left outer join (RewriteCorrelatedScalarSubquery),
     # EXISTS to a left semi join -- at scale both are ordinary shuffled
     # joins with partial aggregation, never per-row re-execution.
-    t(spark, sf_dir, "customer").createOrReplaceTempView("_sq_customer")
-    t(spark, sf_dir, "orders").createOrReplaceTempView("_sq_orders")
     return spark.sql("""
         SELECT c.c_custkey,
-               (SELECT max(o.o_totalprice) FROM _sq_orders o
+               (SELECT max(o.o_totalprice) FROM {o} o
                 WHERE o.o_custkey = c.c_custkey) AS max_order
-        FROM _sq_customer c
-        WHERE EXISTS (SELECT 1 FROM _sq_orders o
+        FROM {c} c
+        WHERE EXISTS (SELECT 1 FROM {o} o
                       WHERE o.o_custkey = c.c_custkey
                         AND o.o_totalprice > 200000.0)
-    """)
+    """, c=t(spark, sf_dir, "customer"), o=t(spark, sf_dir, "orders"))
 
 
 SUBQUERY_CORRELATED_SQL = """
@@ -2016,7 +2013,8 @@ FROM prep GROUP BY event_type
 
 def udtf_json_kv(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Python UDTF (Spark 3.5+/4): one input row -> N output rows, used
-    # through a SQL LATERAL join. Class defined in-function so
+    # through a LATERAL join -- applied as a DataFrame, so nothing is
+    # registered in the session. Class defined in-function so
     # cloudpickle ships it by value (workers can't import this repo).
     from pyspark.sql.functions import udtf
 
@@ -2029,14 +2027,13 @@ def udtf_json_kv(spark: SparkSession, sf_dir: str) -> DataFrame:
                 for key, val in sorted(json.loads(props).items()):
                     yield key, int(val)
 
-    spark.udtf.register("explode_props", ExplodeProps)
-    t(spark, sf_dir, "events").filter(F.col("event_id") < 1000) \
-        .createOrReplaceTempView("events_udtf_src")
-    return spark.sql(
-        """
-        SELECT e.event_id, t.k AS prop_key, t.v AS prop_value
-        FROM events_udtf_src e, LATERAL explode_props(e.props) t
-        """
+    e = t(spark, sf_dir, "events").filter(F.col("event_id") < 1000)
+    return e.alias("e").lateralJoin(
+        ExplodeProps(F.col("e.props").outer()).alias("t")
+    ).select(
+        "e.event_id",
+        F.col("t.k").alias("prop_key"),
+        F.col("t.v").alias("prop_value"),
     )
 
 

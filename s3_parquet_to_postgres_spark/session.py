@@ -14,7 +14,9 @@ mode.
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import SparkSession
 
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
@@ -121,13 +123,17 @@ def local_session(app_name: str = "s3-parquet-to-postgres-spark") -> SparkSessio
     )
 
 
-from contextlib import contextmanager
-
-
 @contextmanager
-def eager_build_scope(spark: SparkSession):
+def eager_build_scope(
+    spark: SparkSession, shuffle_partitions: int | None = None
+):
     """AQE off for the duration of a plan-construction-time eager build
     (``localCheckpoint`` + the stats/count job that materializes it).
+
+    This is the ONLY code in the engine that writes a session conf
+    while a plan is built; both confs it touches are restored on exit,
+    exception or not, so a construction leaves the session as it found
+    it.
 
     Two reasons, both measured (r10 ml_logreg_train, r11 dedup/graph):
 
@@ -140,6 +146,12 @@ def eager_build_scope(spark: SparkSession):
       scale) where the non-adaptive plan runs one job. Queries that
       construct several checkpoints pay this per checkpoint.
 
+    ``shuffle_partitions``, when given, also sets
+    ``spark.sql.shuffle.partitions`` for the scope: without AQE's
+    coalescing every exchange planned inside takes that width, and the
+    conf is read at physical planning time, so an eager build planned
+    inside the scope keeps it (pagerank sizes its loop this way).
+
     The scope only covers driver-side plan construction of bounded
     intermediate tables (checkpoint + one stats job); the main query
     still plans and runs under AQE with its coalescing/skew handling.
@@ -151,24 +163,29 @@ def eager_build_scope(spark: SparkSession):
     each thread its own session (``spark.newSession()``) before
     reusing this helper.
     """
-    key = "spark.sql.adaptive.enabled"
-    was = spark.conf.get(key)
-    spark.conf.set(key, "false")
+    scoped = {"spark.sql.adaptive.enabled": "false"}
+    if shuffle_partitions is not None:
+        scoped["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
+    was = {k: spark.conf.get(k) for k in scoped}
     try:
+        for k, v in scoped.items():
+            spark.conf.set(k, v)
         yield
     finally:
-        spark.conf.set(key, was)
+        for k, v in was.items():
+            spark.conf.set(k, v)
 
 
 def apply_required_confs(spark: SparkSession) -> SparkSession:
     """Apply the runtime-settable subset of base confs to an existing
-    session (the driver hands us a pre-built SparkSession; static confs
-    like nanosAsLong may already be fixed, but the rest are dynamic)."""
+    session (``__spark_entry__`` is handed a pre-built SparkSession,
+    whose static confs are already fixed; the rest are dynamic)."""
     for k, v in _BASE_CONFS.items():
         try:
             spark.conf.set(k, v)
-        except Exception:
-            # Static conf on a live session (e.g. already-set legacy
-            # parquet switches) -- keep whatever the session has.
-            pass
+        except AnalysisException as e:
+            # A static conf (spark.sql.codegen.cache.maxEntries) on a
+            # live session: keep whatever the session has.
+            if e.getCondition() != "CANNOT_MODIFY_STATIC_CONFIG":
+                raise
     return spark

@@ -109,15 +109,6 @@ def test_exact_dedup_survivor_is_min(spark, docs):
     assert out.count() == expected.count()
 
 
-def test_pandas_cosine_matches_expression(spark, emb):
-    # The numpy/Arrow kernel and the JVM expression variant are the
-    # same operator: identical output.
-    queries = emb.filter(F.col("vec_id") < 5)
-    a = sorted(map(tuple, S.cosine_topk(emb, queries, k=10).collect()))
-    b = sorted(map(tuple, S.cosine_topk_pandas(emb, queries, k=10).collect()))
-    assert a == b
-
-
 def test_shingles_and_minhash_survive_short_texts(spark):
     """sequence(1, 0) is descending in Spark; docs shorter than the
     shingle width must yield empty shingle sets, not a slice() error."""

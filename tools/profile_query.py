@@ -10,9 +10,6 @@ Usage: python tools/profile_query.py <query> [reps=2]
 
 from __future__ import annotations
 
-import glob
-import gzip
-import json
 import os
 import sys
 import tempfile
@@ -23,6 +20,7 @@ sys.path.insert(0, ROOT)
 
 from s3_parquet_to_postgres_spark.plans import all_queries  # noqa: E402
 from s3_parquet_to_postgres_spark.session import build_session  # noqa: E402
+from tools import eventlog  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -35,13 +33,7 @@ def main() -> None:
         "profile",
         master=f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]",
         shuffle_partitions=32,
-        extra_confs={
-            "spark.eventLog.enabled": "true",
-            "spark.eventLog.compress": "false",
-            "spark.eventLog.rolling.enabled": "false",
-            "spark.eventLog.dir": log_dir,
-            "spark.ui.enabled": "false",
-        },
+        extra_confs={**eventlog.confs(log_dir), "spark.ui.enabled": "false"},
     )
     spark.sparkContext.setLogLevel("ERROR")
     queries = all_queries()
@@ -63,85 +55,27 @@ def main() -> None:
 
     print(f"{name}: walls={['%.3f' % w for w in walls]}")
 
-    # Parse the event log for the LAST rep's job group.
-    paths = [
-        p
-        for p in glob.glob(os.path.join(log_dir, "**", "*"), recursive=True)
-        if os.path.isfile(p) and "appstatus" not in os.path.basename(p)
-    ]
-    want = f"rep{reps - 1}"
-    stage_to_job: dict[int, int] = {}
-    jobs: dict[int, dict] = {}
-    stages: dict[int, dict] = {}
-    for path in sorted(paths):
-        opener = gzip.open if path.endswith(".gz") else open
-        with opener(path, "rt") as f:
-            for line in f:
-                try:
-                    ev = json.loads(line)
-                except json.JSONDecodeError:
-                    continue
-                kind = ev.get("Event")
-                if kind == "SparkListenerJobStart":
-                    if (ev.get("Properties") or {}).get(
-                        "spark.jobGroup.id"
-                    ) != want:
-                        continue
-                    jid = ev["Job ID"]
-                    jobs[jid] = {"sub": ev.get("Submission Time")}
-                    for sid in ev.get("Stage IDs", []):
-                        stage_to_job[sid] = jid
-                elif kind == "SparkListenerJobEnd":
-                    if ev.get("Job ID") in jobs:
-                        jobs[ev["Job ID"]]["end"] = ev.get("Completion Time")
-                elif kind == "SparkListenerStageCompleted":
-                    si = ev["Stage Info"]
-                    sid = si["Stage ID"]
-                    if sid not in stage_to_job:
-                        continue
-                    scopes = []
-                    for ri in si.get("RDD Info", []):
-                        sc = ri.get("Scope")
-                        if sc:
-                            try:
-                                scopes.append(json.loads(sc)["name"])
-                            except (json.JSONDecodeError, KeyError):
-                                pass
-                    st = stages.setdefault(
-                        sid, {"bytes": 0, "recs": 0, "task_ms": 0}
-                    )
-                    st.update(
-                        job=stage_to_job[sid],
-                        name=" <- ".join(dict.fromkeys(scopes))[:90],
-                        wall=(si.get("Completion Time", 0)
-                              - si.get("Submission Time", 0)) / 1e3,
-                        tasks=si.get("Number of Tasks"),
-                    )
-                elif kind == "SparkListenerTaskEnd":
-                    sid = ev.get("Stage ID")
-                    if sid not in stage_to_job:
-                        continue
-                    tm = ev.get("Task Metrics") or {}
-                    sw = tm.get("Shuffle Write Metrics") or {}
-                    st = stages.setdefault(
-                        sid, {"bytes": 0, "recs": 0, "task_ms": 0}
-                    )
-                    st["bytes"] += sw.get("Shuffle Bytes Written", 0)
-                    st["recs"] += sw.get("Shuffle Records Written", 0)
-                    st["task_ms"] += tm.get("Executor Run Time", 0)
+    # The LAST rep's job group.
+    g = eventlog.job_groups(log_dir)[f"rep{reps - 1}"]
+    jobs, stages = g["jobs"], g["stages"]
+    per_stage: dict[int, list[int]] = {}
+    for t in g["tasks"]:
+        acc = per_stage.setdefault(t.stage, [0, 0, 0])
+        acc[0] += t.shuffle_bytes
+        acc[1] += t.shuffle_records
+        acc[2] += t.run_ms
 
     for jid in sorted(jobs):
         j = jobs[jid]
         jw = (j.get("end", 0) - j.get("sub", 0)) / 1e3
         print(f"job {jid}: {jw:.3f}s")
-        for sid in sorted(
-            s for s, st in stages.items() if st.get("job") == jid
-        ):
+        for sid in sorted(s for s, st in stages.items() if st["job"] == jid):
             st = stages[sid]
+            nbytes, recs, task_ms = per_stage.get(sid, (0, 0, 0))
             print(
                 f"  stage {sid} [{st['tasks']}t] wall={st['wall']:.3f}s"
-                f" taskms={st['task_ms']} shuf={st['bytes'] / 1e6:.2f}MB"
-                f"/{st['recs']}r  {st['name']}"
+                f" taskms={task_ms} shuf={nbytes / 1e6:.2f}MB"
+                f"/{recs}r  {st['name'][:90]}"
             )
     n_jobs = len(jobs)
     total = sum(

@@ -22,9 +22,6 @@ Usage:
 from __future__ import annotations
 
 import argparse
-import glob
-import gzip
-import json
 import os
 import shutil
 import sys
@@ -38,6 +35,7 @@ from pyspark.sql import functions as F  # noqa: E402
 
 from s3_parquet_to_postgres_spark.plans import all_queries  # noqa: E402
 from s3_parquet_to_postgres_spark.session import build_session  # noqa: E402
+from tools import eventlog  # noqa: E402
 
 BASE = "/root/testdata/sf0.1"
 SCALED = "/tmp/spark_scale_check_16x"
@@ -166,48 +164,14 @@ def max_task_secs(log_dir: str) -> dict[str, float]:
     per-key window with a hot key shows up as ONE task holding the
     whole key regardless of how the other 7 cores amortize the wall
     time; a chunk-and-stitch twin caps it at one bucket."""
-    stage_to_group: dict[int, str] = {}
-    out: dict[str, float] = {}
-    paths = [
-        p
-        for p in glob.glob(os.path.join(log_dir, "**", "*"), recursive=True)
-        if os.path.isfile(p) and "appstatus" not in os.path.basename(p)
-    ]
-    for path in sorted(paths):
-        opener = gzip.open if path.endswith(".gz") else open
-        with opener(path, "rt") as f:
-            for line in f:
-                try:
-                    ev = json.loads(line)
-                except json.JSONDecodeError:
-                    continue
-                kind = ev.get("Event")
-                if kind == "SparkListenerJobStart":
-                    group = (ev.get("Properties") or {}).get(
-                        "spark.jobGroup.id"
-                    )
-                    if not group:
-                        continue
-                    for sid in ev.get("Stage IDs", []):
-                        stage_to_group[sid] = group
-                elif kind == "SparkListenerTaskEnd":
-                    group = stage_to_group.get(ev.get("Stage ID"))
-                    if not group:
-                        continue
-                    reason = (ev.get("Task End Reason") or {}).get("Reason")
-                    ti = ev.get("Task Info") or {}
-                    # Only successful tasks carry a representative
-                    # duration: a failed / killed / speculative-retry
-                    # TaskEnd would otherwise inflate the max-task
-                    # column with a non-straggler artifact.
-                    if reason != "Success" or ti.get("Failed") or \
-                            ti.get("Killed"):
-                        continue
-                    dur = (ti.get("Finish Time", 0)
-                           - ti.get("Launch Time", 0)) / 1000.0
-                    if dur > out.get(group, 0.0):
-                        out[group] = dur
-    return out
+    # Only successful tasks carry a representative duration: a failed /
+    # killed / speculative-retry TaskEnd would otherwise inflate the
+    # max-task column with a non-straggler artifact.
+    return {
+        group: max(secs)
+        for group, g in eventlog.job_groups(log_dir).items()
+        if (secs := [t.secs for t in g["tasks"] if t.ok])
+    }
 
 
 def main() -> None:
@@ -238,10 +202,7 @@ def main() -> None:
         "scale-check", master="local[8]", shuffle_partitions=8,
         extra_confs={"spark.ui.enabled": "false",
                      "spark.driver.memory": "16g",
-                     "spark.eventLog.enabled": "true",
-                     "spark.eventLog.compress": "false",
-                     "spark.eventLog.rolling.enabled": "false",
-                     "spark.eventLog.dir": event_dir},
+                     **eventlog.confs(event_dir)},
     )
     spark.sparkContext.setLogLevel("ERROR")
     build_scaled(spark, scaled_dir, copies, args.tables)

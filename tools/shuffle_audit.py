@@ -16,9 +16,6 @@ Usage: python tools/shuffle_audit.py
 
 from __future__ import annotations
 
-import glob
-import gzip
-import json
 import os
 import sys
 import tempfile
@@ -28,6 +25,7 @@ sys.path.insert(0, ROOT)
 
 from s3_parquet_to_postgres_spark.plans import all_queries  # noqa: E402
 from s3_parquet_to_postgres_spark.session import build_session  # noqa: E402
+from tools import eventlog  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -131,43 +129,14 @@ def plan_counts(df):
     return shuffles, broadcasts
 
 
-def parse_event_log(log_dir):
+def shuffle_totals(log_dir):
     """group -> {bytes, records} summed over all TaskEnd events of the
     jobs launched under that job group."""
-    paths = [
-        p
-        for p in glob.glob(os.path.join(log_dir, "**", "*"), recursive=True)
-        if os.path.isfile(p) and "appstatus" not in os.path.basename(p)
-    ]
-    stage_to_group: dict[int, str] = {}
-    totals: dict[str, dict[str, int]] = {}
-    for path in sorted(paths):
-        opener = gzip.open if path.endswith(".gz") else open
-        with opener(path, "rt") as f:
-            for line in f:
-                try:
-                    ev = json.loads(line)
-                except json.JSONDecodeError:
-                    continue
-                kind = ev.get("Event")
-                if kind == "SparkListenerJobStart":
-                    group = (ev.get("Properties") or {}).get(
-                        "spark.jobGroup.id"
-                    )
-                    if not group:
-                        continue
-                    for sid in ev.get("Stage IDs", []):
-                        stage_to_group[sid] = group
-                elif kind == "SparkListenerTaskEnd":
-                    group = stage_to_group.get(ev.get("Stage ID"))
-                    if not group:
-                        continue
-                    tm = ev.get("Task Metrics") or {}
-                    sw = tm.get("Shuffle Write Metrics") or {}
-                    t = totals.setdefault(group, {"bytes": 0, "records": 0})
-                    t["bytes"] += sw.get("Shuffle Bytes Written", 0)
-                    t["records"] += sw.get("Shuffle Records Written", 0)
-    return totals
+    return {
+        group: {"bytes": sum(t.shuffle_bytes for t in g["tasks"]),
+                "records": sum(t.shuffle_records for t in g["tasks"])}
+        for group, g in eventlog.job_groups(log_dir).items()
+    }
 
 
 def main() -> None:
@@ -176,13 +145,7 @@ def main() -> None:
         "shuffle-audit",
         master=f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]",
         shuffle_partitions=32,
-        extra_confs={
-            "spark.eventLog.enabled": "true",
-            "spark.eventLog.compress": "false",
-            "spark.eventLog.rolling.enabled": "false",
-            "spark.eventLog.dir": log_dir,
-            "spark.ui.enabled": "false",
-        },
+        extra_confs={**eventlog.confs(log_dir), "spark.ui.enabled": "false"},
     )
     spark.sparkContext.setLogLevel("ERROR")
     queries = all_queries()
@@ -195,7 +158,7 @@ def main() -> None:
         spark.sparkContext.setJobGroup("idle", "idle")
     spark.stop()  # flushes the event log
 
-    totals = parse_event_log(log_dir)
+    totals = shuffle_totals(log_dir)
     lines = [
         "# SHUFFLE_AUDIT — measured shuffle volumes (sf0.1, task metrics"
         " from the event log)",
