@@ -30,10 +30,6 @@ TABLES = (
     "embeddings",
 )
 
-# Dimension tables small enough to broadcast at any fact scale.
-BROADCAST_TABLES = frozenset({"region", "nation", "supplier"})
-
-
 def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one synthetic table; normalizes events.ts to microseconds."""
     path = f"{sf_dir.rstrip('/')}/{name}.parquet"
@@ -53,10 +49,6 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             return df.withColumn("ts", F.col("ts").cast("timestamp_ntz"))
         return df
     return spark.read.parquet(path)
-
-
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {t: read_table(spark, sf_dir, t) for t in TABLES}
 
 
 def register_temp_views(spark: SparkSession, sf_dir: str) -> None:

@@ -894,7 +894,6 @@ FROM parsed GROUP BY host, domain
 # --------------------------------------------------------------------------
 
 _CMS_DEPTH = 4
-_CMS_WIDTH = 256
 
 
 def _cms_bucket(h, j: int):

@@ -1,11 +1,12 @@
 """Postgres COPY sink: the reference's bulk-ingest fast path.
 
-The reference streams rows through ``COPY <t> (<cols>) FROM STDIN
-BINARY`` (reference: src/db.rs:161-240, COPY SQL at :167-171) -- PG's
-fastest ingest path, well ahead of JDBC INSERT batches. Spark has no
-built-in COPY writer, so this is the one custom *physical* sink this
+The reference streams each file through one ``COPY <t> (<cols>) FROM
+STDIN BINARY`` (reference: src/db.rs:161-240, COPY SQL at :167-171) --
+PG's fastest ingest path, well ahead of JDBC INSERT batches. Spark has
+no built-in COPY writer, so this is the one custom *physical* sink this
 engine needs (SURVEY.md §4.2): each non-empty partition opens its own
-connection and pipes the encoded stream through ``copy_expert``.
+connection and streams itself through ``copy_expert`` as one COPY
+statement.
 
 Both COPY wire formats are implemented: TEXT (tab-separated, ``\\N``
 nulls) and the reference's BINARY (PGCOPY header, int16 field count,
@@ -17,38 +18,40 @@ so ``CopySink(format="binary")`` checks the Spark schema on the driver
 before any task starts (fail-fast on unsupported types, like the cast
 planner).
 
-The BINARY write is columnar: one ``mapInArrow`` job hands each task
-its partition as Arrow record batches, and ``encode_batch_binary``
-turns a whole batch into PGCOPY tuples with numpy, so no row is ever
-pickled into a Python ``Row``. Each task yields its row count and the
-driver sums them: the count comes from the same single job as the
-COPY. Executors need pyarrow and numpy, which the package's Arrow
-kernels already require. The per-row encoder (``binary_encoders`` +
-``encode_rows_binary``) stays as the reference the columnar one is
-tested against byte for byte. TEXT keeps a ``foreachPartition`` job
-with per-row ``encode_rows`` and an accumulator count. Both formats
-share one framing/commit loop (``CopySink._copy_partition``).
+Both formats share one write path. One ``mapInArrow`` job hands each
+task its partition as Arrow record batches. BINARY turns a whole batch
+into PGCOPY tuples with numpy (``encode_batch_binary``), so no row is
+ever pickled into a Python ``Row``; TEXT feeds the batch's columns to
+the per-row ``encode_rows`` (``encode_batch_text``). ``copy_expert``
+reads the partition from a file object over header + encoded batches
++ trailer that encodes a batch only when it is read, so the partition
+is never held whole, and that counts the rows it hands out. Each task
+yields its row count and the driver sums them: the count comes from
+the same single job as the COPY. Executors need pyarrow and numpy,
+which the package's Arrow kernels already require. The per-row binary
+encoder (``binary_encoders`` + ``encode_rows_binary``) stays as the
+reference the columnar one is tested against byte for byte.
 
 The executor connection resolves in order: an injected factory
 (tests / alternative drivers), psycopg2 when the executor image has
 it, else the bundled pure-stdlib v3 wire-protocol client
 (``pgwire.py``) -- so the COPY path has no hard C-extension
-dependency. The socket half (framing, flush boundaries,
-commit/rollback) is exercised end-to-end against an in-process fake
-PG wire server in tests/test_copy_socket_e2e.py. Error semantics
-match the reference's fail-fast model: the first
-bad row or constraint violation raises inside the partition, failing
-the task and (with retries exhausted) the job (reference:
-src/db.rs:202-239). Idempotence at scale: point ``table`` at a
-staging table and swap atomically after the job, since a retried task
-replays its whole partition.
+dependency. The socket half (framing, one statement per partition,
+commit/rollback, CopyFail) is exercised end-to-end against an
+in-process fake PG wire server in tests/test_copy_socket_e2e.py. Error
+semantics match the reference's fail-fast model: the first bad row or
+constraint violation raises inside the partition, failing the task and
+(with retries exhausted) the job (reference: src/db.rs:202-239).
+Idempotence at scale: point ``table`` at a staging table and swap
+atomically after the job, since a retried task replays its whole
+partition.
 """
 
 from __future__ import annotations
 
-import io
 import itertools
 import struct
+from contextlib import contextmanager
 from dataclasses import dataclass
 from datetime import date, datetime, timezone
 from decimal import Decimal
@@ -81,6 +84,28 @@ def encode_rows(rows: Iterable[tuple]) -> Iterator[str]:
     """Rows -> COPY TEXT lines. Pure function, unit-testable sans PG."""
     for row in rows:
         yield "\t".join(_encode_value(v) for v in row) + "\n"
+
+
+def encode_batch_text(batch) -> bytes:
+    """One Arrow ``RecordBatch`` -> its COPY TEXT lines as UTF-8: the
+    batch's columns, as Python values, through ``encode_rows``.
+
+    The bytes equal ``encode_rows`` over the Rows PySpark builds for
+    the same partition. Arrow holds a ``timestamp`` as a UTC instant,
+    while the Row conversion renders it as a naive wall clock in the
+    Python worker's local zone; such columns go through that same
+    conversion, ``TimestampType.fromInternal``, here.
+    """
+    import pyarrow as pa
+    from pyspark.sql.types import TimestampType
+
+    local = TimestampType().fromInternal
+    cols = [
+        [local(us) for us in col.cast(pa.int64()).to_pylist()]
+        if pa.types.is_timestamp(col.type) and col.type.tz else col.to_pylist()
+        for col in batch.columns
+    ]
+    return "".join(encode_rows(zip(*cols))).encode()
 
 
 # ---------------------------------------------------------------------------
@@ -201,8 +226,7 @@ def encode_rows_binary(
     rows: Iterable[tuple], encoders: list[Callable[[Any], bytes]]
 ) -> Iterator[bytes]:
     """Rows -> PGCOPY binary tuples (no header/trailer -- the caller
-    frames the stream, since one COPY statement may span several
-    buffer flushes on one connection)."""
+    frames the stream once per COPY statement)."""
     nfields = struct.pack(">h", len(encoders))
     null = struct.pack(">i", -1)
     for row in rows:
@@ -333,16 +357,16 @@ def _arrow_field(col):
 
 @dataclass
 class CopySink:
-    """Writes a DataFrame with COPY ... FROM STDIN [BINARY], one
-    connection and one transaction per non-empty partition.
+    """Writes a DataFrame with COPY ... FROM STDIN [BINARY]: one
+    connection, one COPY statement and one transaction per non-empty
+    partition.
 
-    ``format="text"`` needs no type information and encodes rows in a
-    ``foreachPartition`` job. ``format="binary"`` (the reference's
-    fast path, src/db.rs:167-171) checks every column type on the
-    driver in ``write``, then encodes whole Arrow record batches in a
-    ``mapInArrow`` job (``encode_batch_binary``), so rows never become
-    Python objects; executors need pyarrow and numpy, which the
-    package's Arrow kernels already require.
+    Both formats run one ``mapInArrow`` job over Arrow record batches.
+    ``format="text"`` needs no type information and encodes with
+    ``encode_batch_text``. ``format="binary"`` (the reference's fast
+    path, src/db.rs:167-171) checks every column type on the driver in
+    ``write``, then encodes with ``encode_batch_binary``, so rows never
+    become Python objects.
     """
 
     conn_string: str
@@ -351,9 +375,8 @@ class CopySink:
     format: str = "text"  # "text" | "binary"
     # Injectable for tests / alternative drivers: a picklable callable
     # (conn_string) -> DB-API connection. None -> psycopg2.connect on
-    # the executor. Lets the full executor path (framing, flush
-    # boundaries, commit/rollback, row counts) run end-to-end without
-    # a live Postgres.
+    # the executor. Lets the full executor path (framing, commit /
+    # rollback, row counts) run end-to-end without a live Postgres.
     connection_factory: Callable[[str], Any] | None = None
 
     def __post_init__(self) -> None:
@@ -367,82 +390,89 @@ class CopySink:
 
     def write(self, df) -> int:
         """Write df and return rows written, counted by the same single
-        job that runs the COPY -- no second scan. Binary: each
-        ``mapInArrow`` task yields its row count and the driver sums
-        the collected counts. Text: the count rides an accumulator
-        (the Observation API does not resolve for RDD-backed actions
-        such as ``foreachPartition``)."""
+        ``mapInArrow`` job that runs the COPY -- no second scan: each
+        task yields its partition's row count and the driver sums the
+        collected counts."""
         sink = self  # capture a picklable copy for executors
         projected = df.select(*self.columns)
-        if self.format == "text":
-            rows_acc = df.sparkSession.sparkContext.accumulator(0)
-
-            def write_text_partition(rows: Iterator) -> None:
-                lines = encode_rows(tuple(r) for r in rows)
-                rows_acc.add(sink._copy_partition((line, 1) for line in lines))
-
-            projected.foreachPartition(write_text_partition)
-            return rows_acc.value
-
-        # Plan-time fail-fast: unsupported binary column types raise
-        # here on the driver, before any task launches.
-        binary_encoders(projected.schema)
+        encode = encode_batch_text
+        if self.format == "binary":
+            # Plan-time fail-fast: unsupported binary column types raise
+            # here on the driver, before any task launches.
+            binary_encoders(projected.schema)
+            encode = encode_batch_binary
 
         def write_partition(batches: Iterator) -> Iterator:
             import pyarrow as pa
 
-            n = sink._copy_partition(
-                (encode_batch_binary(b), b.num_rows) for b in batches
-            )
+            n = sink._copy_partition((encode(b), b.num_rows) for b in batches)
             yield pa.RecordBatch.from_pydict({"n": pa.array([n], pa.int64())})
 
         counts = projected.mapInArrow(write_partition, "n long").collect()
         return sum(r.n for r in counts)
 
-    def _copy_partition(self, chunks: Iterable[tuple[Any, int]]) -> int:
+    def _copy_partition(self, chunks: Iterable[tuple[bytes, int]]) -> int:
         """Executor side: stream ``(encoded chunk, rows in it)`` pairs
-        through COPY and return the rows committed.
+        through one COPY statement and return the rows committed.
 
         The connection opens on the first chunk that holds rows, so an
-        empty partition costs no connect. The encoded chunks are
-        buffered and flushed every ~8 MiB; each ``copy_expert`` call is
-        one complete stream (for BINARY: header + tuples + trailer).
-        The partition commits once, all-or-nothing; any error rolls
-        back and fails the task (fail-fast like the reference,
+        empty partition costs no connect. ``copy_expert`` reads the
+        whole stream (for BINARY: header + tuples + trailer) from one
+        ``_CopyStream``, which pulls each chunk only when it is read.
+        The partition commits once, all-or-nothing; any error, one
+        raised by the chunk source mid-stream included, rolls back and
+        fails the task (fail-fast like the reference,
         src/db.rs:202-239)."""
-        binary = self.format == "binary"
-        head, tail = (BINARY_HEADER, BINARY_TRAILER) if binary else ("", "")
-        new_buf = io.BytesIO if binary else io.StringIO
         chunks = iter(chunks)
         first = next((c for c in chunks if c[1]), None)
         if first is None:
             return 0
-        conn = _connect(self.conn_string, self.connection_factory)
-        n = 0
-        try:
-            with conn.cursor() as cur:
-                buf = new_buf()
-                buf.write(head)
-                for data, rows in itertools.chain([first], chunks):
-                    buf.write(data)
-                    n += rows
-                    if buf.tell() > 8 << 20:
-                        buf.write(tail)
-                        buf.seek(0)
-                        cur.copy_expert(self.copy_sql(), buf)
-                        buf = new_buf()
-                        buf.write(head)
-                if buf.tell() > len(head):
-                    buf.write(tail)
-                    buf.seek(0)
-                    cur.copy_expert(self.copy_sql(), buf)
-            conn.commit()
-        except Exception:
-            conn.rollback()
-            raise
-        finally:
-            conn.close()
-        return n
+        head, tail = (BINARY_HEADER, BINARY_TRAILER) if self.format == "binary" else (b"", b"")
+        stream = _CopyStream(itertools.chain([(head, 0), first], chunks, [(tail, 0)]))
+        with _transaction(self.conn_string, self.connection_factory) as cur:
+            cur.copy_expert(self.copy_sql(), stream)
+        return stream.rows
+
+
+class _CopyStream:
+    """Read-only file object over ``(bytes, rows)`` chunks, pulled one
+    at a time as ``read`` needs them; ``rows`` sums the rows of every
+    chunk pulled so far. A sized read returns at most the rest of one
+    chunk, which is all a COPY driver asks of its file."""
+
+    def __init__(self, chunks: Iterator[tuple[bytes, int]]):
+        self._chunks = chunks
+        self._cur = memoryview(b"")
+        self.rows = 0
+
+    def read(self, size: int = -1) -> bytes:
+        if size < 0:
+            return b"".join(iter(lambda: self.read(1 << 20), b""))
+        while not self._cur:
+            chunk = next(self._chunks, None)
+            if chunk is None:
+                return b""
+            self._cur = memoryview(chunk[0])
+            self.rows += chunk[1]
+        part, self._cur = self._cur[:size], self._cur[size:]
+        return bytes(part)
+
+
+@contextmanager
+def _transaction(conn_string: str, factory: "Callable[[str], Any] | None" = None):
+    """One connection and one transaction around a cursor: commit when
+    the block completes, roll back when it raises, close either way.
+    The all-or-nothing unit of every PG sink here."""
+    conn = _connect(conn_string, factory)
+    try:
+        with conn.cursor() as cur:
+            yield cur
+        conn.commit()
+    except Exception:
+        conn.rollback()
+        raise
+    finally:
+        conn.close()
 
 
 def _connect(conn_string: str, factory: "Callable[[str], Any] | None" = None):
@@ -456,5 +486,12 @@ def _connect(conn_string: str, factory: "Callable[[str], Any] | None" = None):
     except ImportError:
         from . import pgwire
 
-        return pgwire.connect(conn_string)
+        try:
+            return pgwire.connect(conn_string)
+        except OSError as e:
+            # Spark's simplified worker traceback drops the chained
+            # ImportError, so the error itself names the fallback.
+            e.add_note("psycopg2 is not installed; the bundled pgwire "
+                       "client could not connect")
+            raise
     return psycopg2.connect(conn_string)

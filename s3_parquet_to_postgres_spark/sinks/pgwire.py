@@ -23,7 +23,9 @@ with a bare Python:
   otherwise so a MITM stripping -PLUS is detectable server-side);
 * simple Query ('Q') for BEGIN/COMMIT/ROLLBACK and to initiate COPY;
 * COPY-in streaming: CopyInResponse ('G') -> CopyData ('d') chunks ->
-  CopyDone ('c') -> CommandComplete ('C') -> ReadyForQuery ('Z');
+  CopyDone ('c') -> CommandComplete ('C') -> ReadyForQuery ('Z'); a
+  reader that raises mid-stream gets CopyFail ('f') instead of
+  CopyDone, like psycopg2, so the connection can still roll back;
 * DB-API-ish surface (``connect() -> conn.cursor().copy_expert`` /
   ``commit`` / ``rollback`` / ``close``) so it drops into
   ``CopySink.connection_factory`` -- and is the automatic fallback in
@@ -35,9 +37,10 @@ first statement on a connection implicitly opens a transaction
 sink's all-or-nothing-per-partition contract holds identically under
 either driver.
 
-Scale shape: one socket per executor partition task, 64 KiB CopyData
-frames, no per-row syscalls; the hot loop is ``sendall`` over an
-already-encoded buffer. Everything here is driver-agnostic plumbing
+Scale shape: one socket per executor partition task, one CopyData
+frame per ``read(COPY_CHUNK)`` of the caller's file object (64 KiB),
+no per-row syscalls, and the stream is never held whole in memory.
+Everything here is driver-agnostic plumbing
 -- the PGCOPY byte encoding itself lives in ``copy.py``.
 """
 
@@ -46,7 +49,6 @@ from __future__ import annotations
 import base64
 import hashlib
 import hmac
-import io
 import os
 import socket
 import ssl
@@ -517,19 +519,20 @@ class PgWireConnection:
 
     # -- statements
 
+    def _drain(self) -> str | None:
+        """Read to ReadyForQuery, skipping 'C' CommandComplete / 'N' /
+        'S' / empty results; return the ErrorResponse seen, if any."""
+        err: str | None = None
+        while (msg := _read_message(self._sock))[0] != b"Z":
+            if msg[0] == b"E":
+                err = _error_fields(msg[1])
+        return err
+
     def _simple_query(self, sql: str) -> None:
         """Run a result-less statement; drain to ReadyForQuery."""
         self._sock.sendall(_msg(b"Q", sql.encode() + b"\x00"))
-        err: str | None = None
-        while True:
-            t, body = _read_message(self._sock)
-            if t == b"E":
-                err = _error_fields(body)
-            elif t == b"Z":
-                if err:
-                    raise PgWireError(err)
-                return
-            # 'C' CommandComplete / 'N' / 'S' / empty results: skip
+        if err := self._drain():
+            raise PgWireError(err)
 
     def _ensure_txn(self) -> None:
         if not self._in_txn:
@@ -547,32 +550,29 @@ class PgWireConnection:
             t, body = _read_message(self._sock)
             if t not in (b"N", b"S", b"K"):
                 break
-        if t == b"E":
-            # drain to ReadyForQuery, then raise
-            while _read_message(self._sock)[0] != b"Z":
-                pass
-            raise PgWireError(_error_fields(body))
         if t != b"G":  # CopyInResponse
-            # Not a COPY-accepting statement: drain to ReadyForQuery
-            # so the connection stays usable, then raise.
-            while _read_message(self._sock)[0] != b"Z":
-                pass
-            raise PgWireError(f"expected CopyInResponse, got {t!r}")
-        data = buf.read()
-        if isinstance(data, str):
-            data = data.encode()
-        for off in range(0, len(data), self.COPY_CHUNK):
-            self._sock.sendall(_msg(b"d", data[off : off + self.COPY_CHUNK]))
-        self._sock.sendall(_msg(b"c", b""))
-        err: str | None = None
+            # An error, or not a COPY-accepting statement: drain to
+            # ReadyForQuery so the connection stays usable, then raise.
+            self._drain()
+            raise PgWireError(_error_fields(body) if t == b"E"
+                              else f"expected CopyInResponse, got {t!r}")
         while True:
-            t, body = _read_message(self._sock)
-            if t == b"E":
-                err = _error_fields(body)
-            elif t == b"Z":
-                if err:
-                    raise PgWireError(err)
-                return
+            try:
+                data = buf.read(self.COPY_CHUNK)
+            except Exception as e:
+                # The source failed mid-COPY: abort the statement and
+                # drain, so the caller can still roll back on this
+                # connection (psycopg2 does the same).
+                why = f"COPY source raised {type(e).__name__}\x00"
+                self._sock.sendall(_msg(b"f", why.encode()))
+                self._drain()
+                raise
+            if not data:
+                break
+            self._sock.sendall(_msg(b"d", data.encode() if isinstance(data, str) else data))
+        self._sock.sendall(_msg(b"c", b""))
+        if err := self._drain():
+            raise PgWireError(err)
 
     # -- DB-API-ish surface
 

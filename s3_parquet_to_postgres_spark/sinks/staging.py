@@ -10,8 +10,9 @@ failure, reference: src/db.rs:202-239 -- this module is the Spark-era
 completion of that gap, documented in SURVEY.md §7.3.)
 
 All SQL generation is pure and unit-tested without a database; the
-execution half goes through the same gated psycopg2 import as
-CopySink. Both swap styles are provided:
+execution half goes through the same connection and transaction
+helper as CopySink (``copy._transaction``). Both swap styles are
+provided:
 
 * ``swap_by_rename`` -- ALTER TABLE RENAME shuffle inside a
   transaction. Fully atomic in Postgres (DDL is transactional), takes
@@ -190,18 +191,10 @@ class StagedLoad:
         )
 
     def _execute(self, script: str) -> None:
-        from .copy import _connect
+        from .copy import _transaction
 
-        conn = _connect(self.conn_string, self.connection_factory)
-        try:
-            with conn.cursor() as cur:
-                cur.execute(script)
-            conn.commit()
-        except Exception:
-            conn.rollback()
-            raise
-        finally:
-            conn.close()
+        with _transaction(self.conn_string, self.connection_factory) as cur:
+            cur.execute(script)
 
 
 @dataclass

@@ -14,8 +14,7 @@ which need backtick quoting in Spark.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame, SparkSession
 
 
 class FieldResolutionError(ValueError):
@@ -118,11 +117,6 @@ def partition_filters_of(df: DataFrame) -> str:
     plan = df._jdf.queryExecution().executedPlan().toString()
     m = re.search(r"PartitionFilters: \[([^\]]*)\]", plan)
     return m.group(1) if m else ""
-
-
-def quoted(name: str) -> Column:
-    """Column ref that tolerates dots in physical column names."""
-    return F.col(f"`{name}`")
 
 
 def resolve_fields(df: DataFrame, desired_fields: list[str] | tuple[str, ...]) -> list[str]:

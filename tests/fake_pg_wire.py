@@ -3,7 +3,8 @@
 Implements the SERVER side of exactly the protocol subset
 ``sinks/pgwire.py`` speaks: startup (trust, cleartext, or
 SCRAM-SHA-256 auth), simple Query for BEGIN/COMMIT/ROLLBACK, and
-COPY-in (CopyInResponse -> CopyData -> CopyDone -> CommandComplete).
+COPY-in (CopyInResponse -> CopyData -> CopyDone -> CommandComplete,
+or CopyFail -> ErrorResponse).
 Runs on a real TCP socket so Spark executor worker PROCESSES (not
 threads) connect to it -- the closest this container can get to the
 reference's live-Postgres e2e harness (reference:
@@ -85,8 +86,13 @@ class FakePgServer:
         self.last_mech: str | None = None
         self.last_gs2: str | None = None
         # Accepted TCP connections (one per client connect), so tests
-        # can assert that work needing no database opens none.
+        # can assert that work needing no database opens none; COMMITs,
+        # CopyFails and Terminates received, for the transaction and
+        # teardown contract of a partition.
         self.connections = 0
+        self.commits = 0
+        self.copy_fails = 0
+        self.terminates = 0
         self._srv = socket.socket(socket.AF_INET, socket.SOCK_STREAM)
         self._srv.setsockopt(socket.SOL_SOCKET, socket.SO_REUSEADDR, 1)
         self._srv.bind(("127.0.0.1", 0))
@@ -180,6 +186,7 @@ class FakePgServer:
                 t, ln = head[:1], struct.unpack(">i", head[1:])[0]
                 body = _recv_exact(conn, ln - 4)
                 if t == b"X":
+                    self.terminates += 1
                     return
                 if t != b"Q":
                     conn.sendall(
@@ -193,6 +200,7 @@ class FakePgServer:
                 elif u == "BEGIN":
                     self._complete(conn, b"BEGIN")
                 elif u == "COMMIT":
+                    self.commits += 1
                     for p in pending:
                         os.rename(p, p.replace(".pending", ""))
                     pending.clear()
@@ -246,6 +254,7 @@ class FakePgServer:
             elif t == b"c":
                 break
             elif t == b"f":  # CopyFail
+                self.copy_fails += 1
                 conn.sendall(
                     _msg(b"E", b"SERROR\x00Mcopy failed by client\x00\x00")
                     + READY_IDLE

@@ -4,7 +4,9 @@ PostgreSQL manual's "Binary Format" section without needing a live
 PG: known byte vectors for every supported type, a NUMERIC round-trip
 decoder under hypothesis, and stream-framing checks). The columnar
 encoder the sink runs (``encode_batch_binary``) is pinned byte for
-byte to the per-row reference encoder over every supported type."""
+byte to the per-row reference encoder over every supported type, and
+so is the TEXT batch encoder (``encode_batch_text``) to the per-row
+``encode_rows`` over the Rows Spark builds."""
 
 from __future__ import annotations
 
@@ -42,7 +44,9 @@ from s3_parquet_to_postgres_spark.sinks.copy import (
     CopySink,
     binary_encoders,
     encode_batch_binary,
+    encode_batch_text,
     encode_numeric,
+    encode_rows,
     encode_rows_binary,
 )
 
@@ -457,3 +461,58 @@ def test_batch_encoder_matches_row_encoder_through_spark(spark):
     want = encode_rows_binary(
         (tuple(r) for r in df.collect()), binary_encoders(df.schema))
     assert got == b"".join(want)
+
+
+# TEXT escapes and values the edge rows above leave out.
+_TEXT_ROWS = [
+    (True, 1, 2, 3, 4, 0.1, 1e300, "cr\rlf\r\n\\N\tend\\", b"\t\n\\",
+     date(1970, 1, 1), datetime(1970, 1, 1), datetime(1999, 1, 1, 0, 0, 0, 1),
+     Decimal("100.0000")),
+    (None, None, None, None, None, None, None, "\\N", b"\\N", None, None,
+     None, Decimal("-0.1000")),
+]
+
+
+def test_text_batch_encoder_matches_row_path_through_spark(spark):
+    """``encode_batch_text`` over Spark's own Arrow batches
+    (``mapInArrow``) against ``encode_rows`` over Spark's own rows
+    (``collect``), for every type ``binary_encoders`` accepts. Both
+    sides render a ``timestamp`` through ``TimestampType.fromInternal``,
+    so this needs no UTC zone."""
+    rows = [
+        tuple(v.replace(tzinfo=None) if isinstance(v, datetime) else v
+              for v in r)
+        for r in _EDGE_ROWS + _TEXT_ROWS
+    ]
+    df = spark.createDataFrame(rows, _SPARK_SCHEMA).coalesce(1)
+
+    def encode(batches):
+        for b in batches:
+            yield pa.RecordBatch.from_pydict({"blob": [encode_batch_text(b)]})
+
+    got = b"".join(r.blob for r in df.mapInArrow(encode, "blob binary").collect())
+    want = "".join(encode_rows(tuple(r) for r in df.collect()))
+    assert got == want.encode()
+
+
+def test_text_batch_encoder_renders_local_wall_clock(monkeypatch):
+    """A zone-aware timestamp comes out as the naive wall clock of the
+    local zone, as PySpark's Row conversion renders it; a
+    ``timestamp_ntz`` comes out as stored."""
+    batch = pa.RecordBatch.from_arrays([
+        pa.array([datetime(2024, 1, 2, 3, 4, 5, 6, _UTC), None,
+                  datetime(1969, 7, 20, 20, 17, tzinfo=_UTC)],
+                 pa.timestamp("us", tz="UTC")),
+        pa.array([datetime(2024, 1, 2, 3, 4, 5), None, None],
+                 pa.timestamp("us")),
+    ], names=["ts", "ntz"])
+    monkeypatch.setenv("TZ", "EST+5")  # POSIX: UTC-5 all year, no tzdata
+    time.tzset()
+    try:
+        got = encode_batch_text(batch)
+    finally:
+        monkeypatch.undo()
+        time.tzset()
+    assert got == (b"2024-01-01 22:04:05.000006\t2024-01-02 03:04:05\n"
+                   b"\\N\t\\N\n"
+                   b"1969-07-20 15:17:00\t\\N\n")

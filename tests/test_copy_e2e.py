@@ -1,9 +1,10 @@
-"""End-to-end CopySink tests through the REAL executor paths
-(foreachPartition for TEXT, mapInArrow for BINARY), using an injected
-connection factory instead of live Postgres: framing and flush
-boundaries, row counts, commit/rollback semantics -- the 'socket
-half' the container otherwise can't reach (reference e2e runs against
-real PG, src/runner.rs:163-374)."""
+"""End-to-end CopySink tests through the REAL executor path (one
+mapInArrow job for both TEXT and BINARY), using an injected
+connection factory instead of live Postgres: framing, row counts,
+commit/rollback semantics -- the 'socket half' the container
+otherwise can't reach (reference e2e runs against real PG,
+src/runner.rs:163-374). Two test names still say foreachPartition,
+the job TEXT and BINARY ran before both moved to mapInArrow."""
 
 from __future__ import annotations
 

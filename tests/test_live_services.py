@@ -125,11 +125,26 @@ def test_live_pgwire_scram_copy_binary():
         conn.close()
 
 
-def test_live_copy_sink_binary_every_type(spark):
-    """CopySink(format="binary").write over every supported type, NULLs
-    in each value column, from Spark executors into a real backend;
-    the row count and per-column checksums are asserted in the
-    server."""
+def _assert_in_server(conn, table: str, checks) -> None:
+    """Statement-only client: the checks run in the server and the
+    failing one RAISEs its index into ``checks``."""
+    body = " ".join(
+        f"IF (SELECT {expr} FROM {table}) IS DISTINCT FROM "
+        f"'{want}' THEN RAISE EXCEPTION 'checksum % mismatch: got %', "
+        f"{k}, (SELECT {expr} FROM {table}); END IF;"
+        for k, (expr, want) in enumerate(checks)
+    )
+    with conn.cursor() as cur:
+        cur.execute(f"DO $$ BEGIN {body} END $$;")
+    conn.commit()
+
+
+@pytest.mark.parametrize("fmt", ["text", "binary"])
+def test_live_copy_sink_binary_every_type(spark, fmt):
+    """CopySink.write in either format over every type COPY BINARY
+    supports, NULLs in each value column, from Spark executors into a
+    real backend; the row count and per-column checksums are asserted
+    in the server."""
     import datetime as dt
     import hashlib
     from decimal import Decimal
@@ -205,19 +220,42 @@ def test_live_copy_sink_binary_every_type(spark):
                 "ntz timestamp, dec numeric(18,4))"
             )
         conn.commit()
-        sink = CopySink(PG, "live_types", cols, format="binary")
+        sink = CopySink(PG, "live_types", cols, format=fmt)
         assert sink.write(df) == n
-        # statement-only client: the checks run in the server and the
-        # failing one RAISEs its index into ``checks``.
-        body = " ".join(
-            f"IF (SELECT {expr} FROM live_types) IS DISTINCT FROM "
-            f"'{want}' THEN RAISE EXCEPTION 'checksum % mismatch: got %', "
-            f"{k}, (SELECT {expr} FROM live_types); END IF;"
-            for k, (expr, want) in enumerate(checks)
-        )
+        _assert_in_server(conn, "live_types", checks)
+    finally:
+        conn.close()
+
+
+@pytest.mark.parametrize("fmt", ["text", "binary"])
+def test_live_copy_sink_partition_over_8mib(spark, fmt):
+    """One partition of ~10 MiB of COPY data, one COPY statement into a
+    real backend: count and checksums asserted in the server."""
+    import hashlib
+
+    from s3_parquet_to_postgres_spark.sinks import pgwire
+    from s3_parquet_to_postgres_spark.sinks.copy import CopySink
+
+    n = 50_000
+    df = spark.range(0, n, numPartitions=1).selectExpr(
+        "id", "concat(repeat('x', 200), cast(id as string)) as s"
+    )
+    texts = ("x" * 200 + str(i) for i in range(n))
+    checks = [
+        ("count(*)", n),
+        ("sum(id)", n * (n - 1) // 2),
+        ("md5(string_agg(s, ',' ORDER BY id))",
+         hashlib.md5(",".join(texts).encode()).hexdigest()),
+    ]
+    conn = pgwire.connect(PG)
+    try:
         with conn.cursor() as cur:
-            cur.execute(f"DO $$ BEGIN {body} END $$;")
+            cur.execute("DROP TABLE IF EXISTS live_big")
+            cur.execute("CREATE TABLE live_big (id bigint, s text)")
         conn.commit()
+        sink = CopySink(PG, "live_big", ("id", "s"), format=fmt)
+        assert sink.write(df) == n
+        _assert_in_server(conn, "live_big", checks)
     finally:
         conn.close()
 
