@@ -6,8 +6,8 @@ matching ``oracle_sql()[name]`` via DuckDB (row-count + schema +
 order-insensitive value-hash -> CORRECTNESS_r{N}.json).
 
 Implementation lives in s3_parquet_to_postgres_spark/ (plans/ holds
-the query catalog; operators/, sources/, sinks/, streaming/ the
-engine itself).
+the query catalog; operators/, sources/, sinks/ the engine
+itself).
 """
 
 from __future__ import annotations

@@ -10,21 +10,20 @@ its tests exercise plus LLM-data-pipeline operators (dedup, similarity
 search, text analysis, multimodal columns).
 
 Layout:
-  session     SparkSession factory tuned for scale (AQE, Arrow, S3A)
+  session     SparkSession factory tuned for scale (AQE, Arrow, UTC)
   catalog     test-table loading helpers (incl. ns-timestamp handling)
   config      YAML job-spec model (reference: src/config.rs:7-37)
-  sources/    parquet scan/partitioning, work-list manifest, bucketed
-              tables, small-file compaction
+  sources/    parquet scan, work-list manifest, S3 REST staging client
   operators/  cast planner, dedup ladder (exact/MinHash/SimHash/
               Jaccard/components), similarity (exact/LSH/IVF), text
               stats + PII scrub, as-of & range joins, skew salting,
-              Z-order clustering, multimodal binary columns
+              multimodal binary columns
   functions/  cross-engine-exact numerics, UDF surface, layout helpers
-  sinks/      JDBC + Postgres COPY writers, fail-fast validation
+  sinks/      JDBC + Postgres COPY writers, staging-table swap,
+              fail-fast validation
   plans/      declared query catalog (Spark query + DuckDB oracle SQL)
-  streaming/  incremental ingestion, watermarked windows, stateful
-              processing, stream-stream joins, incremental aggregates
-  pipeline    end-to-end runner (reference: src/runner.rs:47-112)
+  pipeline    the one resumable drain: work list -> scan -> sink
+              (reference: src/runner.rs:47-112)
 """
 
 __version__ = "0.1.0"

@@ -76,14 +76,13 @@ def _make_sink_fn(args, spec: JobSpec, spark):
         # plan time with the columns named (parquet sink allows them).
         return lambda df: sink.write(require_flat(df, "copy sink"))
     else:
-        from .sinks.jdbc import JdbcSink, validate_target_schema
+        from .sinks.jdbc import JdbcSink
 
-        # Fail-fast catalog validation before any batch moves
-        # (reference: src/db.rs:86-153).
-        validate_target_schema(
-            spark, spec.sink.conn_string, spec.sink.table, list(out_cols)
-        )
         sink = JdbcSink(spec.sink.conn_string, spec.sink.table, spec.sink.mode)
+        # Fail-fast catalog validation before any batch moves, through
+        # the same driver properties the write uses
+        # (reference: src/db.rs:86-153).
+        sink.validate(spark, list(out_cols))
 
     def db_sink(df):
         df, obs = _observed(require_flat(df, "jdbc sink"))

@@ -49,9 +49,3 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             return df.withColumn("ts", F.col("ts").cast("timestamp_ntz"))
         return df
     return spark.read.parquet(path)
-
-
-def register_temp_views(spark: SparkSession, sf_dir: str) -> None:
-    """Expose every table as a temp view so plans can use spark.sql."""
-    for t in TABLES:
-        read_table(spark, sf_dir, t).createOrReplaceTempView(t)

@@ -33,8 +33,6 @@ standard (1 - e^{-kn/m})^k.
 
 from __future__ import annotations
 
-import math
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -43,17 +41,6 @@ DEFAULT_NUM_BITS = 1 << 20
 DEFAULT_NUM_HASHES = 5
 
 _MASK = "__bloom_mask"
-
-
-def optimal_params(expected_items: int, fpp: float = 0.01) -> tuple[int, int]:
-    """(num_bits, num_hashes) minimizing memory for a target false-
-    positive rate: m = -n ln p / (ln 2)^2, k = (m/n) ln 2."""
-    if expected_items <= 0:
-        return 64, 1
-    m = int(-expected_items * math.log(fpp) / (math.log(2) ** 2)) + 1
-    m = (m + 63) // 64 * 64  # whole words
-    k = max(1, round(m / expected_items * math.log(2)))
-    return m, k
 
 
 def _positions(key: F.Column, num_bits: int, num_hashes: int) -> list[F.Column]:

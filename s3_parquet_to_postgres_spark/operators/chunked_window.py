@@ -9,9 +9,7 @@ buys back. These operators split each key's timeline into TIME
 BUCKETS, compute the order-dependent state per (key, bucket) — each
 task bounded by one bucket's rows — then stitch buckets with a second
 window over the per-bucket SUMMARY table (one row per (key, bucket),
-data-volume-independent), the same bounded-state + boundary-merge
-shape streaming/cep.py uses to keep micro-batch splits parity with
-the batch answer.
+data-volume-independent).
 
 Primitives: running sums (`chunked_cumsum`), gap sessionization
 (`sessionize_chunked`), lag-1 (`chunked_lag`), running non-null carry

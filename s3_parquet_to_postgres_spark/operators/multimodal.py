@@ -8,9 +8,9 @@ decode / feature-extraction step runs as ``mapInPandas`` (Arrow batches
 in, Arrow batches out) -- the only sane shape for per-item Python work
 at scale. The actual codecs (PIL/librosa/av) are NOT in this container,
 so ``decode_fn`` is pluggable: the default deterministic fake derives
-"features" from the payload bytes, and ``strict_decode_stub`` raises
-NotImplementedError to mark the integration point. The Spark-side
-plumbing -- schema, batching, partitioning -- is real and tested.
+"features" from the payload bytes, and a real codec is injected in
+its place. The Spark-side plumbing -- schema, batching,
+partitioning -- is real and tested.
 """
 
 from __future__ import annotations
@@ -81,14 +81,6 @@ def fake_decode(payload: bytes) -> list[float]:
         float(payload[-1]),
         float(sum(payload[:: max(1, n // 16)]) % 997),
     ]
-
-
-def strict_decode_stub(payload: bytes) -> list[float]:
-    """The real integration point; codecs are not installed here."""
-    raise NotImplementedError(
-        "media decode requires PIL/librosa/av, not available in this "
-        "environment -- inject fake_decode or a real codec"
-    )
 
 
 RESIZE_SCHEMA = StructType(

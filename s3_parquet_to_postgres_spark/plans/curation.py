@@ -998,7 +998,7 @@ def agg_histogram_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     first reaches ceil(q*n/100) -- the estimate is the bin's [lo, hi)
     edge pair, so the error bound IS the bin width, and the per-bin
     counter table from disjoint shards simply ADDS (merge == rebuild
-    is pinned by tests/test_incremental_agg.py).
+    is pinned by tests/test_sketch_quality.py).
 
     Scale shape: one map-side-combinable aggregate to <=64 cells --
     constant state per partition at any corpus size; the cumulative
@@ -1230,8 +1230,7 @@ def table_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     merge key (delta is usually small enough to broadcast; Spark
     picks that automatically below the threshold). The durable-write
     half of this pattern is sinks/staging.py's staging-table +
-    one-transaction swap; the streaming half is
-    streaming/ivm_join.py's delta-rule view maintenance.
+    one-transaction swap.
     """
     o = t(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice", "o_orderstatus"

@@ -1083,22 +1083,16 @@ FROM documents GROUP BY 1
 """
 
 
-def curation_signals(d: DataFrame, gated: bool = True) -> DataFrame:
+def curation_signals(d: DataFrame) -> DataFrame:
     """The NARROW per-doc stage of the curation funnel: one Project
     computing every signal (token count, the five marker-language
     scores as a single struct-fold, the PII-scrubbed sha256 content
-    key), with the quality and language gates filtering inline. No
-    shuffle, no state -- which means it runs unchanged on a STREAMING
-    DataFrame (see test_streaming_curation.py: incremental file
-    ingest of the same signals, batch-parity checked).
+    key). No shuffle, no state.
 
-    ``gated=False`` returns the ungated signals: the batch pipeline
-    gates AFTER its dedup window instead, because a filter this early
-    gets predicate-pushed below the Project, duplicating every
-    non-cheap signal expression into the scan (measured 14 split()
-    evaluations per row vs 2). Streaming consumers keep the default:
-    they gate early (no dedup state) and the scan-level filter is the
-    point.
+    The signals come back ungated: the pipeline gates AFTER its dedup
+    window, because a filter this early gets predicate-pushed below
+    the Project, duplicating every non-cheap signal expression into
+    the scan (measured 14 split() evaluations per row vs 2).
 
     Signals: token count, the five marker-language scores, the
     Gopher-style duplicate-2-gram fraction (repetition gate), and the
@@ -1160,7 +1154,7 @@ def curation_signals(d: DataFrame, gated: bool = True) -> DataFrame:
     pred = F.lit(None).cast("string")
     for lang in sorted(cols, reverse=True):
         pred = F.when(cols[lang] == best, F.lit(lang)).otherwise(pred)
-    sig = scored.select(
+    return scored.select(
         "doc_id",
         "n_tokens",
         pred.alias("lang_pred"),
@@ -1168,14 +1162,6 @@ def curation_signals(d: DataFrame, gated: bool = True) -> DataFrame:
         "content_key",
         "dup2_frac",
     )
-    if gated:
-        # Quality (length), language-confidence, and repetition gates.
-        sig = sig.filter(
-            (F.col("n_tokens") >= 20)
-            & (F.col("lang_score") >= 1)
-            & (F.col("dup2_frac") <= 0.08)
-        )
-    return sig
 
 
 def corpus_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1194,7 +1180,7 @@ def corpus_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     per row (14 split() evaluations vs 2; ~2x the whole query). At
     100 TB the narrow stage scales linearly and everything after the
     dedup shuffle is tiny."""
-    sig = curation_signals(t(spark, sf_dir, "documents"), gated=False)
+    sig = curation_signals(t(spark, sf_dir, "documents"))
     w = Window.partitionBy("content_key").orderBy(F.col("doc_id").asc())
     kept = (
         sig.withColumn("__rn", F.row_number().over(w))
@@ -2685,9 +2671,8 @@ FROM b GROUP BY ws
 
 
 def event_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Session windows (30 min inactivity gap) as a *batch* groupBy --
-    # the same F.session_window drives the streaming variant
-    # (streaming/windows.py).
+    # Session windows (30 min inactivity gap): one groupBy on
+    # (F.session_window, user_id).
     e = t(spark, sf_dir, "events")
     return (
         e.groupBy(F.session_window("ts", "30 minutes").alias("w"), "user_id")
@@ -2851,21 +2836,15 @@ ORDER BY lift DESC, part_a ASC, part_b ASC LIMIT 25
 
 
 def event_enrich_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Stream-static enrichment, batch half: events joined to the
-    # customer dimension (user_id -> c_custkey) and rolled up per
-    # (market segment, event type). The dim is explicitly broadcast --
-    # the fact stream never shuffles for the join -- and the same
-    # stream_static_enrich operator runs this join per micro-batch
-    # with exact parity (test_streaming_joins.py).
-    from ..streaming.joins import stream_static_enrich
-
+    # Fact-to-dimension enrichment: events joined to the customer
+    # dimension (user_id -> c_custkey) and rolled up per (market
+    # segment, event type). The dim is explicitly broadcast -- the
+    # fact side never shuffles for the join.
     e = t(spark, sf_dir, "events")
     c = t(spark, sf_dir, "customer").select(
         F.col("c_custkey"), F.col("c_mktsegment")
     )
-    joined = stream_static_enrich(
-        e, c, on=e["user_id"] == c["c_custkey"], how="inner"
-    )
+    joined = e.join(F.broadcast(c), e["user_id"] == c["c_custkey"], "inner")
     return (
         joined.groupBy(
             F.col("c_mktsegment").alias("segment"), F.col("event_type")
@@ -3215,9 +3194,7 @@ def event_pattern_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     Bounded-lookahead patterns like this compile to lead() columns
     over ONE (user_id, ts) window pass -- a single shuffle, no
     self-join of the log, output one row per match. Patterns with
-    unbounded lookahead are the job of the stateful streaming
-    operator instead (streaming/stateful.py's
-    applyInPandasWithState sessionizer).
+    unbounded lookahead do not compile to this shape.
     """
     e = t(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
@@ -3884,9 +3861,8 @@ SPECS: list[QuerySpec] = [
               "grouped + paired in-array, vocabulary joins via AQE"),
     QuerySpec("event_enrich_customer", event_enrich_customer,
               EVENT_ENRICH_CUSTOMER_SQL,
-              "stream-static enrichment (batch half): broadcast dim "
-              "join + segment rollup; streaming half tested for "
-              "exact parity"),
+              "fact-to-dimension enrichment: broadcast dim join + "
+              "segment rollup"),
     QuerySpec("cohort_retention", cohort_retention, COHORT_RETENTION_SQL),
     QuerySpec("event_user_anomaly", event_user_anomaly,
               EVENT_USER_ANOMALY_SQL,

@@ -557,7 +557,7 @@ def agg_hll_mergeable(spark: SparkSession, sf_dir: str) -> DataFrame:
     # per-partition (here per-nation) HLL sketches are unioned upward
     # instead of re-scanning raw data. hll_union_agg is register-wise
     # max, so rollup-then-estimate EQUALS estimate-over-everything
-    # (pinned by test_incremental_agg). The estimate itself has no
+    # (pinned by test_sketch_quality). The estimate itself has no
     # exact oracle, so the driver-checked output pairs the merged
     # estimate with the exact distinct (same pass) and asserts the
     # sketch error bound as a boolean the oracle predicts as TRUE.
@@ -2146,7 +2146,7 @@ SPECS: list[QuerySpec] = [
               "error bounds asserted as oracle-checkable booleans"),
     QuerySpec("agg_hll_mergeable", agg_hll_mergeable, AGG_HLL_MERGEABLE_SQL,
               "mergeable HLL rollup vs exact distinct; merged==direct "
-              "pinned by test_incremental_agg"),
+              "pinned by test_sketch_quality"),
     QuerySpec("agg_bitmap_distinct", agg_bitmap_distinct,
               AGG_BITMAP_DISTINCT_SQL),
     QuerySpec("agg_pivot", agg_pivot, AGG_PIVOT_SQL),

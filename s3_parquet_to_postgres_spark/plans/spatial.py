@@ -481,9 +481,9 @@ def layout_zorder_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     linear sort on l_partkey alone, then report — from per-file
     min/max stats, exactly what a parquet footer stores — how many
     files a range probe on EACH column would scan. This is the
-    row-group-skipping arithmetic behind ``operators/zorder.py``'s
-    ``cluster_by_zorder``: linear layout prunes perfectly on its sort
-    column and not at all on the second; Z-order prunes well on both.
+    row-group-skipping arithmetic behind a Z-order clustered write:
+    linear layout prunes perfectly on its sort column and not at all
+    on the second; Z-order prunes well on both.
 
     Determinism/scale shape: per-column quantization uses the global
     min/max (ONE tiny aggregate, broadcast back — no global-window

@@ -50,43 +50,6 @@ _BASE_CONFS: dict[str, str] = {
 }
 
 
-def s3a_confs(
-    max_connections: int = 96,
-    upload_buffer: str = "disk",
-    committer: str = "magic",
-) -> dict[str, str]:
-    """Recommended S3A configs for production object-store reads/writes.
-
-    The reference stages S3 objects to local disk with <=5 concurrent
-    GETs before reading them (reference: src/s3_download.rs:34-128);
-    under Spark, executors read s3a:// directly and these settings are
-    the knobs that matter at 1000-executor scale:
-
-    * connection pool sized to executor-core fan-out,
-    * the "magic" S3A committer (writes task output straight to the
-      final location via multipart uploads -- no rename phase, which
-      S3 cannot do atomically),
-    * credentials resolved by the default AWS provider chain (env,
-      instance profile); never hardcoded.
-
-    Returned as a plain dict so callers can merge into build_session's
-    extra_confs. Untested in this container (no S3 endpoint); values
-    are the stock Hadoop S3A settings.
-    """
-    return {
-        "spark.hadoop.fs.s3a.connection.maximum": str(max_connections),
-        "spark.hadoop.fs.s3a.fast.upload.buffer": upload_buffer,
-        "spark.hadoop.fs.s3a.committer.name": committer,
-        "spark.sql.sources.commitProtocolClass": (
-            "org.apache.spark.internal.io.cloud.PathOutputCommitProtocol"
-        ),
-        "spark.sql.parquet.output.committer.class": (
-            "org.apache.spark.internal.io.cloud.BindingParquetOutputCommitter"
-        ),
-        "spark.hadoop.fs.s3a.experimental.input.fadvise": "normal",
-    }
-
-
 def build_session(
     app_name: str = "s3-parquet-to-postgres-spark",
     master: str | None = None,

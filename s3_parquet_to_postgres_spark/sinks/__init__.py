@@ -1,24 +1,12 @@
 from .copy import CopySink
 from .jdbc import JdbcSink, SchemaValidationError, validate_target_schema
-from .staging import (
-    ExactlyOnceBatchSink,
-    StagedLoad,
-    applied_log_ddl,
-    clone_then_swap_ddl,
-    exactly_once_merge_sql,
-    merge_upsert_sql,
-    swap_by_rename,
-)
+from .staging import StagedLoad, clone_then_swap_ddl, swap_by_rename
 
 __all__ = [
     "JdbcSink",
     "CopySink",
     "StagedLoad",
-    "ExactlyOnceBatchSink",
-    "applied_log_ddl",
-    "exactly_once_merge_sql",
     "clone_then_swap_ddl",
-    "merge_upsert_sql",
     "swap_by_rename",
     "validate_target_schema",
     "SchemaValidationError",

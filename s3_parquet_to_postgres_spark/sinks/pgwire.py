@@ -334,9 +334,9 @@ class _Scram:
 
 class _Cursor:
     """Just enough cursor for every _connect() consumer: CopySink
-    needs ``copy_expert``; StagedLoad/ExactlyOnceBatchSink run DDL /
-    promote scripts through ``execute`` (result rows, if any, are
-    drained and discarded -- the callers are statement-only)."""
+    needs ``copy_expert``; StagedLoad runs DDL / promote scripts
+    through ``execute`` (result rows, if any, are drained and
+    discarded -- the callers are statement-only)."""
 
     def __init__(self, conn: "PgWireConnection"):
         self._conn = conn

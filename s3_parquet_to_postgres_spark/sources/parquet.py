@@ -94,31 +94,6 @@ def scan_parquet(
     return reader.parquet(*paths)
 
 
-def write_partitioned(
-    df: DataFrame,
-    path: str,
-    partition_cols: list[str],
-    mode: str = "overwrite",
-) -> None:
-    """Hive-style partitioned layout (path/col=value/...): the storage
-    arrangement that turns partition-column predicates into directory
-    pruning -- at 100 TB a date/tenant filter then reads only the
-    matching directories, with no footer even opened elsewhere.
-    Partition columns should be low-cardinality (date, region, source);
-    high-cardinality keys belong in bucketing (sources/bucketed.py)."""
-    df.write.mode(mode).partitionBy(*partition_cols).parquet(path)
-
-
-def partition_filters_of(df: DataFrame) -> str:
-    """The PartitionFilters clause content of the scan in df's plan
-    (diagnostic: non-empty proves directory pruning will happen)."""
-    import re
-
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    m = re.search(r"PartitionFilters: \[([^\]]*)\]", plan)
-    return m.group(1) if m else ""
-
-
 def resolve_fields(df: DataFrame, desired_fields: list[str] | tuple[str, ...]) -> list[str]:
     """Validate that every desired field exists (case-sensitive, like
     the reference's HashMap lookup). Returns the fields in config

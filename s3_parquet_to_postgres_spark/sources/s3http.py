@@ -6,9 +6,8 @@ the stored object (reference: src/s3_download.rs:34-128, download
 verification at :362-371; nested-key runs driven by
 src/runner.rs:238-295). On a real Spark cluster this repo's primary
 path is the opposite -- executors read ``s3a://`` URIs directly and
-no staging step exists (see ``config.SourceSpec.key_to_path`` and
-``session.s3a_confs``) -- but two cases still want the reference's
-download-then-read shape:
+no staging step exists (see ``config.SourceSpec.key_to_path``) --
+but two cases still want the reference's download-then-read shape:
 
 * environments whose Spark image lacks the hadoop-aws/S3A jars (this
   test container is one), where the driver can still drain a manifest
@@ -17,7 +16,7 @@ download-then-read shape:
   driver-local byte-verified copy is the point, not a distributed
   scan.
 
-Everything here is stdlib (urllib + xml.etree + ThreadPoolExecutor):
+Everything here is stdlib (urllib + ThreadPoolExecutor):
 executors never import it; the staging runs on the driver and the
 staged files feed the normal distributed parquet scan. Object
 integrity is checked against the S3 ``ETag`` (MD5 of the body for
@@ -38,7 +37,6 @@ import hashlib
 import os
 import shutil
 import uuid
-import xml.etree.ElementTree as ET
 from concurrent.futures import ThreadPoolExecutor
 from urllib.parse import quote, urlparse
 from urllib.request import Request, urlopen
@@ -60,7 +58,7 @@ def parse_s3_url(url: str) -> tuple[str, str]:
 
 
 class S3HttpClient:
-    """Minimal S3 REST subset: GetObject + ListObjectsV2.
+    """Minimal S3 REST subset: GetObject.
 
     ``endpoint`` is the base URL of an S3-compatible HTTP service
     (``http://127.0.0.1:9000``). Path-style addressing
@@ -113,42 +111,6 @@ class S3HttpClient:
                 )
         return body
 
-    # -- listing
-
-    def list_objects(self, bucket: str, prefix: str = "") -> list[str]:
-        """All keys under ``prefix`` via ListObjectsV2, following
-        continuation tokens (the nested-key enumeration the reference
-        drives in src/runner.rs:238-295)."""
-        keys: list[str] = []
-        token: str | None = None
-        while True:
-            q = f"list-type=2&prefix={quote(prefix, safe='')}"
-            if token:
-                q += f"&continuation-token={quote(token, safe='')}"
-            url = f"{self.endpoint}/{quote(bucket)}?{q}"
-            try:
-                with urlopen(self._request(url), timeout=self.timeout) as resp:
-                    doc = resp.read()
-            except OSError as e:
-                raise S3HttpError(f"LIST {bucket}/{prefix} failed: {e}") from e
-            root = ET.fromstring(doc)
-            ns = ""
-            if root.tag.startswith("{"):
-                ns = root.tag[: root.tag.index("}") + 1]
-            for c in root.iter(f"{ns}Contents"):
-                k = c.find(f"{ns}Key")
-                if k is not None and k.text:
-                    keys.append(k.text)
-            truncated = root.find(f"{ns}IsTruncated")
-            if truncated is None or truncated.text != "true":
-                return keys
-            tok = root.find(f"{ns}NextContinuationToken")
-            if tok is None or not tok.text:
-                raise S3HttpError(
-                    "IsTruncated without NextContinuationToken"
-                )
-            token = tok.text
-
     # -- staging
 
     def stage(self, urls: list[str], dest_dir: str) -> list[str]:
@@ -183,41 +145,6 @@ class S3HttpClient:
         with ThreadPoolExecutor(self.max_concurrency) as pool:
             by_loc = dict(zip(unique, pool.map(fetch, unique)))
         return [by_loc[loc] for loc in locs]
-
-
-def write_todo_from_listing(
-    client: S3HttpClient,
-    bucket: str,
-    prefix: str,
-    work_dir: str,
-    suffix: str = ".parquet",
-) -> int:
-    """Seed a work-list ``todo`` file from a live bucket listing --
-    the reference's nested-key run driver (src/runner.rs:238-295
-    enumerates keys under a prefix and feeds them through the same
-    drain). Keys are filtered to ``suffix`` (skip _SUCCESS /
-    checkpoint markers), written one per line in listing order.
-    Returns the number of keys written. Refuses to clobber a
-    non-empty todo (an operator hand-curating a list should not lose
-    it to an automated seed)."""
-    todo = os.path.join(work_dir, "todo")
-    if os.path.exists(todo):
-        with open(todo) as fh:
-            if any(ln.strip() and not ln.startswith("#") for ln in fh):
-                raise S3HttpError(
-                    f"refusing to overwrite non-empty todo at {todo!r}"
-                )
-    keys = [
-        k for k in client.list_objects(bucket, prefix)
-        if k.endswith(suffix)
-    ]
-    os.makedirs(work_dir, exist_ok=True)
-    tmp = todo + ".tmp"
-    with open(tmp, "w") as fh:
-        for k in keys:
-            fh.write(k + "\n")
-    os.replace(tmp, todo)
-    return len(keys)
 
 
 def unstage(dest_dir: str) -> None:

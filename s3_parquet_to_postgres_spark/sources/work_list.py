@@ -25,10 +25,9 @@ what an operator wants, so this engine treats the work list as an
 ordered SET of keys.
 
 This is driver-side bookkeeping (tiny files, one writer); the data
-path itself stays fully distributed. For pure-streaming ingestion the
-same semantics come from Structured Streaming's file-source commit log
-(see streaming/ingest.py); this manifest exists for batch jobs that
-want explicit, human-editable key lists like the reference.
+path itself stays fully distributed. This manifest is the engine's
+one resumable drain (``pipeline.run``): explicit, human-editable key
+lists like the reference's.
 """
 
 from __future__ import annotations
@@ -114,15 +113,6 @@ class WorkList:
             fh.write(key + "\n")
         self.wip.remove(key)
         _write_lines(self.wip_path, self.wip)
-
-    def completed(self) -> list[str]:
-        return [ln for ln in _read_lines(self.completed_path) if _is_work(ln)]
-
-    def is_drained(self) -> bool:
-        self._check_wip_consistency()
-        return not self.wip and not any(
-            _is_work(ln) for ln in _read_lines(self.todo_path)
-        )
 
     # -- invariants ------------------------------------------------------
 

@@ -1,16 +1,14 @@
-"""In-process S3-compatible HTTP stub (GetObject + ListObjectsV2).
+"""In-process S3-compatible HTTP stub (GetObject).
 
 The S3 sibling of ``fake_pg_wire.FakePgServer``: serves a local
-directory tree as one bucket over the two REST calls
-``sources/s3http.py`` speaks, so the work-list drain can run against
+directory tree as one bucket over the REST call ``sources/s3http.py``
+speaks, so the work-list drain can run against
 real ``s3://``-shaped URLs end-to-end without docker or network
 access -- the reference's localstack-backed download test
 (reference: src/s3_download.rs:362-371) minus localstack.
 
 Faithful bits: path-style addressing, MD5-hex ``ETag`` on GETs
-(single-part semantics), XML ``ListBucketResult`` with prefix
-filtering, lexicographic key order, ``max-keys`` + continuation
-tokens, S3-style XML errors (404 NoSuchKey). ``corrupt_keys`` serves
+(single-part semantics), S3-style XML errors (404 NoSuchKey). ``corrupt_keys`` serves
 deliberately damaged bytes WITH the original ETag to exercise the
 client's integrity check.
 """
@@ -21,18 +19,16 @@ import hashlib
 import os
 import threading
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
-from urllib.parse import parse_qs, unquote, urlparse
+from urllib.parse import unquote, urlparse
 
 
 class FakeS3Server:
     """``with FakeS3Server(root, bucket="b") as srv: srv.endpoint``."""
 
     def __init__(self, root: str, bucket: str = "bucket",
-                 max_keys: int = 1000,
                  corrupt_keys: set[str] | None = None):
         self.root = root
         self.bucket = bucket
-        self.max_keys = max_keys
         self.corrupt_keys = corrupt_keys or set()
         outer = self
 
@@ -65,24 +61,13 @@ class FakeS3Server:
 
     # -- request handling
 
-    def _keys(self) -> list[str]:
-        out = []
-        for dirpath, _dirs, files in os.walk(self.root):
-            for f in files:
-                full = os.path.join(dirpath, f)
-                out.append(os.path.relpath(full, self.root).replace(os.sep, "/"))
-        return sorted(out)
-
     def _handle(self, req: BaseHTTPRequestHandler) -> None:
         u = urlparse(req.path)
         parts = unquote(u.path).lstrip("/").split("/", 1)
         if parts[0] != self.bucket:
             self._error(req, 404, "NoSuchBucket", parts[0])
             return
-        if len(parts) == 1 or not parts[1]:
-            self._list(req, parse_qs(u.query))
-            return
-        self._get(req, parts[1])
+        self._get(req, parts[1] if len(parts) == 2 else "")
 
     def _get(self, req: BaseHTTPRequestHandler, key: str) -> None:
         path = os.path.join(self.root, *key.split("/"))
@@ -98,38 +83,6 @@ class FakeS3Server:
         req.send_header("ETag", f'"{etag}"')
         req.send_header("Content-Length", str(len(body)))
         req.send_header("Content-Type", "application/octet-stream")
-        req.end_headers()
-        req.wfile.write(body)
-
-    def _list(self, req: BaseHTTPRequestHandler,
-              q: dict[str, list[str]]) -> None:
-        prefix = q.get("prefix", [""])[0]
-        start_after = q.get("continuation-token", [""])[0]
-        max_keys = int(q.get("max-keys", [str(self.max_keys)])[0])
-        matched = [k for k in self._keys() if k.startswith(prefix)]
-        if start_after:
-            matched = [k for k in matched if k > start_after]
-        page, rest = matched[:max_keys], matched[max_keys:]
-        contents = "".join(
-            f"<Contents><Key>{k}</Key></Contents>" for k in page
-        )
-        trunc = "true" if rest else "false"
-        nxt = (
-            f"<NextContinuationToken>{page[-1]}</NextContinuationToken>"
-            if rest else ""
-        )
-        body = (
-            '<?xml version="1.0" encoding="UTF-8"?>'
-            '<ListBucketResult xmlns='
-            '"http://s3.amazonaws.com/doc/2006-03-01/">'
-            f"<Name>{self.bucket}</Name><Prefix>{prefix}</Prefix>"
-            f"<KeyCount>{len(page)}</KeyCount>"
-            f"<IsTruncated>{trunc}</IsTruncated>{nxt}{contents}"
-            "</ListBucketResult>"
-        ).encode()
-        req.send_response(200)
-        req.send_header("Content-Type", "application/xml")
-        req.send_header("Content-Length", str(len(body)))
         req.end_headers()
         req.wfile.write(body)
 

@@ -10,7 +10,6 @@ from pyspark.sql import functions as F
 from s3_parquet_to_postgres_spark.operators.bloom import (
     bloom_filter_join,
     bloom_prune,
-    optimal_params,
 )
 
 
@@ -89,13 +88,6 @@ def test_unsound_join_types_rejected(probe, build):
     for how in ("left", "left_outer", "full", "full_outer", "left_anti"):
         with pytest.raises(ValueError):
             bloom_filter_join(probe, build, "k", "bk", how=how)
-
-
-def test_optimal_params_shrink_with_fpp():
-    m1, _ = optimal_params(10**6, 0.01)
-    m2, _ = optimal_params(10**6, 0.10)
-    assert m1 > m2 > 0
-    assert m1 % 64 == 0 and m2 % 64 == 0
 
 
 def test_probe_side_plan_has_no_python_stage(probe, build):

@@ -349,7 +349,7 @@ def test_source_failure_mid_copy_sends_copy_fail(spark, tmp_path, fmt):
 
 
 def test_staged_load_ddl_over_socket(tmp_path):
-    # StagedLoad's prepare/swap/merge run plain statements through
+    # StagedLoad's prepare/swap run plain statements through
     # cursor.execute(); with psycopg2 absent this exercises the
     # pgwire _Cursor.execute path end-to-end against the fake server
     # (which acks non-COPY statements with CommandComplete).

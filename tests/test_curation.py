@@ -304,80 +304,6 @@ def test_knn_eval_metrics_are_consistent(spark, sf_dir):
             assert 0.0 <= r.recall <= 1.0
 
 
-def test_streaming_rollup_maintains_continuous_aggregate(spark, tmp_path):
-    """Streaming half of event_rollup_incremental: per-micro-batch
-    partials append via foreachBatch; merging the stored partials
-    reproduces the exact batch rollup (merge == recompute, now across
-    micro-batches instead of shards)."""
-    import os
-
-    from s3_parquet_to_postgres_spark.streaming.ingest import (
-        foreach_batch_load,
-    )
-
-    sf = "/root/testdata/sf0.001"
-    src = str(tmp_path / "landing")
-    partials_dir = str(tmp_path / "partials")
-    ckpt = str(tmp_path / "ckpt")
-    events = spark.read.parquet(os.path.join(sf, "events.parquet"))
-    events.repartition(5).write.parquet(src)
-
-    def sink(batch_df, batch_id):
-        (
-            batch_df.groupBy(
-                F.date_format(
-                    F.date_trunc("hour", F.col("ts")), "yyyy-MM-dd HH:00:00"
-                ).alias("hour")
-            )
-            .agg(
-                F.count("*").alias("pn"),
-                F.sum(
-                    F.floor(
-                        F.col("value") * F.lit(10000.0) + F.lit(0.5)
-                    ).cast("long")
-                ).alias("psum"),
-            )
-            .write.mode("append")
-            .parquet(partials_dir)
-        )
-
-    foreach_batch_load(spark, src, ckpt, sink, max_files_per_trigger=2)
-
-    merged = {
-        r.hour: (r.n_events, r.total_value)
-        for r in spark.read.parquet(partials_dir)
-        .groupBy("hour")
-        .agg(
-            F.sum("pn").cast("long").alias("n_events"),
-            (F.sum("psum").cast("double") / F.lit(10000.0)).alias(
-                "total_value"
-            ),
-        )
-        .collect()
-    }
-    direct = {
-        r.hour: (r.n_events, r.total_value)
-        for r in events.groupBy(
-            F.date_format(
-                F.date_trunc("hour", F.col("ts")), "yyyy-MM-dd HH:00:00"
-            ).alias("hour")
-        )
-        .agg(
-            F.count("*").alias("n_events"),
-            (
-                F.sum(
-                    F.floor(
-                        F.col("value") * F.lit(10000.0) + F.lit(0.5)
-                    ).cast("long")
-                ).cast("double")
-                / F.lit(10000.0)
-            ).alias("total_value"),
-        )
-        .collect()
-    }
-    assert merged == direct and len(merged) > 0
-
-
 def test_quality_checks_all_pass_on_clean_data(spark, sf_dir):
     rows = {r.check_name: r for r in
             C.table_quality_checks(spark, sf_dir).collect()}

@@ -104,150 +104,6 @@ def test_identifier_quoting_doubles_embedded_quotes():
     assert '"we""ird"' in sql
 
 
-def test_merge_upsert_sql_shape():
-    from s3_parquet_to_postgres_spark.sinks.staging import merge_upsert_sql
-
-    sql = merge_upsert_sql("events", ["event_id"], ["value", "ts"])
-    assert sql.startswith('INSERT INTO "events" ("event_id", "value", "ts")')
-    assert 'SELECT "event_id", "value", "ts" FROM "events__staging"' in sql
-    assert 'ON CONFLICT ("event_id") DO UPDATE SET' in sql
-    assert '"value" = EXCLUDED."value"' in sql
-    assert '"ts" = EXCLUDED."ts"' in sql
-
-
-def test_merge_upsert_sql_insert_only():
-    from s3_parquet_to_postgres_spark.sinks.staging import merge_upsert_sql
-
-    sql = merge_upsert_sql("t", ["a", "b"], [])
-    assert 'ON CONFLICT ("a", "b") DO NOTHING;' in sql
-    assert "EXCLUDED" not in sql
-
-
-def test_staged_merge_executes_one_script():
-    from s3_parquet_to_postgres_spark.sinks.staging import StagedLoad
-
-    scripts = []
-
-    class _Cur:
-        def execute(self, s):
-            scripts.append(s)
-
-        def __enter__(self):
-            return self
-
-        def __exit__(self, *a):
-            return False
-
-    class _Conn:
-        def cursor(self):
-            return _Cur()
-
-        def commit(self):
-            scripts.append("<commit>")
-
-        def rollback(self):
-            scripts.append("<rollback>")
-
-        def close(self):
-            pass
-
-    staged = StagedLoad(
-        "postgresql://x", table="events",
-        connection_factory=lambda cs: _Conn(),
-    )
-    staged.merge(["event_id"], ["value"])
-    assert len(scripts) == 2 and scripts[1] == "<commit>"
-    assert 'ON CONFLICT ("event_id") DO UPDATE SET' in scripts[0]
-
-
-def test_exactly_once_merge_sql_gates_on_claim():
-    from s3_parquet_to_postgres_spark.sinks.staging import (
-        exactly_once_merge_sql,
-    )
-
-    sql = exactly_once_merge_sql("events", ["event_id"], ["value"], 42)
-    assert sql.count(";") == 1  # ONE atomic statement
-    assert 'INSERT INTO "__applied_batches" (batch_id) VALUES (42)' in sql
-    assert "ON CONFLICT DO NOTHING RETURNING batch_id" in sql
-    assert "WHERE EXISTS (SELECT 1 FROM claimed)" in sql
-    assert 'ON CONFLICT ("event_id") DO UPDATE SET' in sql
-
-
-def test_applied_log_ddl_keys_batch_id():
-    from s3_parquet_to_postgres_spark.sinks.staging import applied_log_ddl
-
-    ddl = applied_log_ddl()
-    assert "batch_id BIGINT PRIMARY KEY" in ddl
-    assert ddl.startswith("CREATE TABLE IF NOT EXISTS")
-
-
-def test_exactly_once_sink_drives_stream(spark, tmp_path):
-    # End-to-end: incremental files -> foreach_batch_load ->
-    # ExactlyOnceBatchSink over an injected fake connection. Asserts
-    # every batch re-clones staging, stages its rows, and issues the
-    # claimed-CTE merge carrying that batch's id.
-    from s3_parquet_to_postgres_spark.sinks.staging import (
-        ExactlyOnceBatchSink,
-        StagedLoad,
-    )
-    from s3_parquet_to_postgres_spark.streaming.ingest import (
-        foreach_batch_load,
-    )
-
-    scripts: list[str] = []
-    staged_rows: list[int] = []
-
-    class _Cur:
-        def execute(self, s):
-            scripts.append(s)
-
-        def __enter__(self):
-            return self
-
-        def __exit__(self, *a):
-            return False
-
-    class _Conn:
-        def cursor(self):
-            return _Cur()
-
-        def commit(self):
-            pass
-
-        def rollback(self):
-            pass
-
-        def close(self):
-            pass
-
-    src = tmp_path / "src"
-    df = spark.range(10).selectExpr("id AS event_id", "id * 2 AS value")
-    df.filter("event_id < 5").write.parquet(str(src))
-    df.filter("event_id >= 5").write.mode("append").parquet(str(src))
-
-    staged = StagedLoad(
-        "postgresql://x", table="events",
-        connection_factory=lambda cs: _Conn(),
-    )
-    sink = ExactlyOnceBatchSink(
-        staged=staged, key_cols=["event_id"], update_cols=["value"],
-        stage_fn=lambda bdf: staged_rows.append(bdf.count()),
-    )
-    sink.ensure_log()
-    foreach_batch_load(
-        spark, str(src), str(tmp_path / "ckpt"), sink,
-        max_files_per_trigger=1, schema=df.schema,
-    )
-    assert sum(staged_rows) == 10
-    n_batches = len(staged_rows)
-    assert n_batches >= 2  # maxFilesPerTrigger=1 over 2+ files
-    merges = [s for s in scripts if "WITH claimed AS" in s]
-    prepares = [s for s in scripts if "CREATE TABLE" in s and "LIKE" in s]
-    assert len(merges) == n_batches and len(prepares) == n_batches
-    # each merge carries a distinct batch id
-    assert len(set(merges)) == n_batches
-
-
 def test_staged_load_fails_cleanly_without_psycopg2():
     # psycopg2 is absent in this container; StagedLoad falls back to
     # the bundled pure-stdlib wire client (sinks/pgwire.py), which

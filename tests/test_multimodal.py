@@ -37,8 +37,16 @@ def test_extract_features_shape(spark, payloads):
     assert all(again[r["doc_id"]] == r["features"] for r in rows)
 
 
+def strict_decode_stub(payload: bytes) -> list[float]:
+    """The real integration point; codecs are not installed here."""
+    raise NotImplementedError(
+        "media decode requires PIL/librosa/av, not available in this "
+        "environment -- inject fake_decode or a real codec"
+    )
+
+
 def test_strict_stub_raises(spark, payloads):
-    out = M.extract_features(payloads, decode_fn=M.strict_decode_stub)
+    out = M.extract_features(payloads, decode_fn=strict_decode_stub)
     with pytest.raises(Exception, match="NotImplementedError|media decode"):
         out.collect()
 

@@ -1,10 +1,8 @@
-"""Partition-pruning and property-based invariants.
+"""Property-based and partitioning invariants.
 
-The pruning test pins the engine's core scale claim: a filter on a
-partition column must show up as a PartitionFilter (directory pruning),
-not a data filter. The hypothesis tests pin the pure functions whose
-corner cases matter at scale (COPY encoding round-trips, cast-plan
-totality).
+The hypothesis tests pin the pure functions whose corner cases matter
+at scale (COPY encoding round-trips, cast-plan totality); the rest pin
+how the engine sizes its scans and shuffles.
 """
 
 from __future__ import annotations
@@ -12,18 +10,12 @@ from __future__ import annotations
 import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
-from pyspark.sql import functions as F
 
-from s3_parquet_to_postgres_spark.catalog import read_table
 from s3_parquet_to_postgres_spark.operators.casts import (
     CastPlanError,
     cast_expr,
 )
 from s3_parquet_to_postgres_spark.sinks.copy import encode_rows
-from s3_parquet_to_postgres_spark.sources.parquet import (
-    partition_filters_of,
-    write_partitioned,
-)
 from pyspark.sql.types import (
     BinaryType,
     DateType,
@@ -35,32 +27,6 @@ from pyspark.sql.types import (
 )
 
 SF = "/root/testdata/sf0.001"
-
-
-def test_partition_pruning_reaches_scan(spark, tmp_path):
-    li = read_table(spark, SF, "lineitem").withColumn(
-        "ship_month", F.date_format("l_shipdate", "yyyy-MM")
-    )
-    out = str(tmp_path / "li_part")
-    write_partitioned(li, out, ["ship_month"])
-
-    filtered = spark.read.parquet(out).filter(F.col("ship_month") == "1997-03")
-    pf = partition_filters_of(filtered)
-    assert "ship_month" in pf, f"no partition filter in plan: {pf!r}"
-    # And the filter is NOT also a post-scan data filter on all rows:
-    # row counts must match the unpartitioned filter exactly.
-    expected = li.filter(F.col("ship_month") == "1997-03").count()
-    assert filtered.count() == expected > 0
-
-
-def test_partition_pruning_absent_for_data_columns(spark, tmp_path):
-    li = read_table(spark, SF, "lineitem").withColumn(
-        "ship_month", F.date_format("l_shipdate", "yyyy-MM")
-    )
-    out = str(tmp_path / "li_part2")
-    write_partitioned(li, out, ["ship_month"])
-    unpruned = spark.read.parquet(out).filter(F.col("l_quantity") > 10)
-    assert partition_filters_of(unpruned) == ""
 
 
 # ---------------------------------------------------------------------------

@@ -56,25 +56,6 @@ def test_get_object_is_byte_identical_and_etag_checked(tmp_path):
             cli.get_object("b", "nope.bin")
 
 
-def test_list_objects_prefix_and_pagination(tmp_path):
-    root = tmp_path / "objects"
-    for i in range(7):
-        p = root / "year=2024" / f"m={i}"
-        p.mkdir(parents=True)
-        (p / "part-0.parquet").write_bytes(b"x")
-    (root / "other.txt").parent.mkdir(exist_ok=True)
-    (root / "other.txt").write_bytes(b"y")
-    # max_keys=3 forces 3 continuation round-trips for 7 keys
-    with FakeS3Server(str(root), bucket="b", max_keys=3) as srv:
-        cli = S3HttpClient(srv.endpoint)
-        keys = cli.list_objects("b", prefix="year=2024/")
-        assert len(keys) == 7
-        assert keys == sorted(keys)
-        assert all(k.startswith("year=2024/m=") for k in keys)
-        assert cli.list_objects("b") == sorted(keys + ["other.txt"])
-        assert cli.list_objects("b", prefix="zzz") == []
-
-
 def test_stage_preserves_nested_layout(tmp_path):
     root = tmp_path / "objects"
     (root / "a/b").mkdir(parents=True)
@@ -140,34 +121,6 @@ parquet:
     assert sorted(completed) == sorted(keys)
     # per-batch staged copies are deleted after the completed log
     assert not any(stage_dir.rglob("*.parquet"))
-
-
-def test_write_todo_from_listing(tmp_path):
-    """Nested-key run seeding (reference: src/runner.rs:238-295): a
-    live prefix listing becomes the todo manifest, marker files
-    filtered, hand-curated lists protected from clobbering."""
-    from s3_parquet_to_postgres_spark.sources.s3http import (
-        write_todo_from_listing,
-    )
-
-    root = tmp_path / "objects"
-    for i in range(3):
-        p = root / "lake/year=2024" / f"d={i}"
-        p.mkdir(parents=True)
-        (p / "part-0.parquet").write_bytes(b"x")
-    (root / "lake/year=2024/_SUCCESS").write_bytes(b"")
-    work = tmp_path / "work"
-    with FakeS3Server(str(root), bucket="b") as srv:
-        cli = S3HttpClient(srv.endpoint)
-        n = write_todo_from_listing(cli, "b", "lake/year=2024/", str(work))
-        assert n == 3
-        lines = (work / "todo").read_text().strip().splitlines()
-        assert len(lines) == 3
-        assert all(ln.endswith(".parquet") for ln in lines)
-        assert not any("_SUCCESS" in ln for ln in lines)
-        # non-empty todo is protected
-        with pytest.raises(S3HttpError, match="refusing"):
-            write_todo_from_listing(cli, "b", "lake/year=2024/", str(work))
 
 
 def test_stage_dedupes_duplicate_urls_and_cleans_failed_temps(tmp_path):

@@ -3,8 +3,8 @@ a session conf, ``eager_build_scope`` is the only construction-time
 writer and restores what it touched, and plan code creates no temp
 view or function.
 
-``catalog.register_temp_views`` is the explicit test-loader API and
-lives outside the scanned directories."""
+The test-only temp-view loader, ``register_temp_views``, lives in
+``tests/conftest.py``."""
 
 from __future__ import annotations
 

@@ -1,6 +1,7 @@
 """Quality checks for the approximate operators -- the promises the
 rows-only catalog entries make (LSH/IVF recall vs exact top-k, MinHash
-estimate vs exact Jaccard, SimHash vs exact Jaccard ordering)."""
+estimate vs exact Jaccard, SimHash vs exact Jaccard ordering, sketch
+merge == rebuild)."""
 
 from __future__ import annotations
 
@@ -291,3 +292,43 @@ def test_adversarial_mega_duplicate_corpus_stays_bounded(spark):
     assert cont.count() == 0
     kept = D.exact_dedup(df, ["text"], "doc_id")
     assert [r["doc_id"] for r in kept.collect()] == [0]
+
+
+def test_histogram_sketch_merge_equals_rebuild(spark):
+    """agg_histogram_quantiles' per-bin counter table from disjoint
+    shards must ADD to the global sketch (the mergeability claim the
+    entry's docstring makes)."""
+    li = read_table(spark, SF, "lineitem")
+    bin_col = (
+        F.least(F.floor(F.col("l_extendedprice") / F.lit(1750.0)), F.lit(63))
+        .cast("long").alias("bin")
+    )
+    global_hist = {
+        r["bin"]: r["cnt"]
+        for r in li.groupBy(bin_col).agg(F.count("*").alias("cnt")).collect()
+    }
+    merged: dict = {}
+    for shard in range(3):
+        part = li.filter(F.col("l_orderkey") % 3 == shard)
+        for r in part.groupBy(bin_col).agg(F.count("*").alias("cnt")).collect():
+            merged[r["bin"]] = merged.get(r["bin"], 0) + r["cnt"]
+    assert merged == global_hist
+
+
+def test_hll_union_of_per_nation_sketches_equals_direct_estimate(spark):
+    """agg_hll_mergeable's claim: hll_union_agg is register-wise max, so
+    the estimate of the per-nation sketches' union EQUALS the estimate
+    of one sketch over all customers, not just approximately."""
+    c = read_table(spark, SF, "customer")
+    merged = (
+        c.groupBy("c_nationkey")
+        .agg(F.hll_sketch_agg("c_custkey").alias("sk"))
+        .agg(F.hll_sketch_estimate(F.hll_union_agg("sk")).alias("est"))
+        .first()["est"]
+    )
+    direct = c.agg(
+        F.hll_sketch_estimate(F.hll_sketch_agg("c_custkey")).alias("est")
+    ).first()["est"]
+    n_nations = c.select("c_nationkey").distinct().count()
+    assert n_nations > 1
+    assert merged == direct

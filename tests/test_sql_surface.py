@@ -4,8 +4,9 @@ the DataFrame plans (Catalyst parses both into the same algebra)."""
 
 from __future__ import annotations
 
-from s3_parquet_to_postgres_spark.catalog import register_temp_views
 from s3_parquet_to_postgres_spark.plans import all_queries
+
+from .conftest import register_temp_views
 
 SF = "/root/testdata/sf0.001"
 

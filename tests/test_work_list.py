@@ -46,7 +46,8 @@ def test_batch_larger_than_todo(tmp_path):
     for key in list(wl.wip):
         wl.mark_completed(key)
     assert wl.next_batch(5) == []
-    assert wl.is_drained()
+    assert (tmp_path / "todo").read_text() == ""
+    assert (tmp_path / "wip").read_text() == ""
 
 
 def test_resume_from_wip(tmp_path):
@@ -59,7 +60,7 @@ def test_mark_completed_appends_first(tmp_path):
     wl = make(tmp_path, todo="a\nb\n")
     wl.next_batch(2)
     wl.mark_completed("a")
-    assert wl.completed() == ["a"]
+    assert (tmp_path / "completed").read_text() == "a\n"
     assert (tmp_path / "wip").read_text() == "b\n"
 
 
@@ -108,4 +109,5 @@ def test_duplicate_keys_collapsed_on_wip_resume(tmp_path):
     assert wl.next_batch(10) == ["a", "b"]
     wl.mark_completed("a")
     wl.mark_completed("b")
-    assert wl.is_drained()
+    assert wl.next_batch(10) == []
+    assert (tmp_path / "completed").read_text() == "a\nb\n"

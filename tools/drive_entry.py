@@ -6,10 +6,10 @@ sys.path.insert(0, "/root/repo")
 
 import duckdb
 import __spark_entry__ as entrymod
+from s3_parquet_to_postgres_spark.catalog import TABLES
 from s3_parquet_to_postgres_spark.session import build_session
 
 SF_DIR = __import__("os").environ.get("DRIVE_SF_DIR", "/root/testdata/sf0.01")
-TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
 
 
 def canon_value(v):

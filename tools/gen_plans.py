@@ -66,9 +66,8 @@ SECTIONS = [
     (
         "event_sessionize",
         "Session windows as a first-class aggregation (MergingSessions"
-        " operator) -- the batch half of the streaming sessionization in"
-        " streaming/windows.py; partial merge before the exchange bounds"
-        " shuffle volume by session count, not event count.",
+        " operator); partial merge before the exchange bounds shuffle"
+        " volume by session count, not event count.",
     ),
     (
         "event_sessionize_chunked",

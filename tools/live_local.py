@@ -14,8 +14,8 @@ this launcher stands the services up as plain subprocesses:
   with a self-signed TLS cert so SCRAM-SHA-256-PLUS channel binding
   runs against a real backend too;
 * S3: moto_server (an HTTP implementation of the S3 REST API --
-  ListObjectsV2 with continuation tokens, MD5 ETags), standing in for
-  the compose file's localstack.
+  GetObject with MD5 ETags), standing in for the compose file's
+  localstack.
 
 Usage:  python tools/live_local.py            # sets up, runs pytest, tears down
         python tools/live_local.py --keep     # leave services running
