@@ -87,6 +87,34 @@ def local_session(app_name: str = "s3-parquet-to-postgres-spark") -> SparkSessio
 
 
 @contextmanager
+def conf_scope(spark: SparkSession, confs: dict[str, str]):
+    """Set ``confs`` on the session for the duration of the block and
+    put back what was there before, exception or not.
+
+    A key the caller had set gets its old value back; a key the caller
+    never set (``conf.get(k, None)`` is None: only Spark's default
+    applies) is unset again, so ``spark.conf.getAll`` leaves the scope
+    exactly as it entered it, with no default pinned as an explicit
+    setting. This is the one restore path for every scoped conf write
+    in the engine (``eager_build_scope``, ``CopySink.write``).
+
+    Confs are session-wide, so the same thread-safety caveat as
+    ``eager_build_scope`` applies.
+    """
+    was = {k: spark.conf.get(k, None) for k in confs}
+    try:
+        for k, v in confs.items():
+            spark.conf.set(k, v)
+        yield
+    finally:
+        for k, v in was.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+
+@contextmanager
 def eager_build_scope(
     spark: SparkSession, shuffle_partitions: int | None = None
 ):
@@ -94,9 +122,11 @@ def eager_build_scope(
     (``localCheckpoint`` + the stats/count job that materializes it).
 
     This is the ONLY code in the engine that writes a session conf
-    while a plan is built; both confs it touches are restored on exit,
-    exception or not, so a construction leaves the session as it found
-    it.
+    while a plan is built. It writes through ``conf_scope``, the one
+    conf writer outside session setup, so both confs it touches are
+    restored (or unset, if the caller never set them) on exit,
+    exception or not, and a construction leaves the session as it
+    found it.
 
     Two reasons, both measured (r10 ml_logreg_train, r11 dedup/graph):
 
@@ -129,14 +159,8 @@ def eager_build_scope(
     scoped = {"spark.sql.adaptive.enabled": "false"}
     if shuffle_partitions is not None:
         scoped["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
-    was = {k: spark.conf.get(k) for k in scoped}
-    try:
-        for k, v in scoped.items():
-            spark.conf.set(k, v)
+    with conf_scope(spark, scoped):
         yield
-    finally:
-        for k, v in was.items():
-            spark.conf.set(k, v)
 
 
 def apply_required_confs(spark: SparkSession) -> SparkSession:

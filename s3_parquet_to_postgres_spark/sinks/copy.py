@@ -57,6 +57,12 @@ from datetime import date, datetime, timezone
 from decimal import Decimal
 from typing import Any, Callable, Iterable, Iterator
 
+from ..session import conf_scope
+
+# Int.MaxValue turns off Spark's per-row Arrow batch sizing for the
+# COPY job (see CopySink); batches stay bounded by maxRecordsPerBatch.
+_NO_ARROW_BYTE_CAP = {"spark.sql.execution.arrow.maxBytesPerBatch": str(2**31 - 1)}
+
 
 def _encode_value(v: Any) -> str:
     r"""One value -> PG text-format COPY field (\N for NULL)."""
@@ -367,6 +373,15 @@ class CopySink:
     path, src/db.rs:167-171) checks every column type on the driver in
     ``write``, then encodes with ``encode_batch_binary``, so rows never
     become Python objects.
+
+    Each Arrow batch holds at most ``spark.sql.execution.arrow.
+    maxRecordsPerBatch`` rows (10,000 by default). The job runs with
+    ``maxBytesPerBatch`` off (``Int.MaxValue``), set and restored by
+    ``session.conf_scope`` around this one job only: with any other
+    value Spark sizes the Arrow writer's vectors after every row it
+    hands to Python, which measured as most of the executor CPU of a
+    bulk COPY. The row cap still bounds a batch; it only passes
+    the 64 MiB byte default when rows average more than 6.5 KiB.
     """
 
     conn_string: str
@@ -408,7 +423,8 @@ class CopySink:
             n = sink._copy_partition((encode(b), b.num_rows) for b in batches)
             yield pa.RecordBatch.from_pydict({"n": pa.array([n], pa.int64())})
 
-        counts = projected.mapInArrow(write_partition, "n long").collect()
+        with conf_scope(df.sparkSession, _NO_ARROW_BYTE_CAP):
+            counts = projected.mapInArrow(write_partition, "n long").collect()
         return sum(r.n for r in counts)
 
     def _copy_partition(self, chunks: Iterable[tuple[bytes, int]]) -> int:

@@ -317,6 +317,49 @@ def test_partition_over_8mib_is_one_copy_and_one_commit(spark, tmp_path, fmt):
         assert len(rows) == n
 
 
+ARROW_BYTE_CAP = "spark.sql.execution.arrow.maxBytesPerBatch"
+
+
+class _ReportsArrowByteCap(CopySink):
+    """A sink whose partitions report, in place of a row count, the
+    Arrow byte cap their task ran with."""
+
+    def _copy_partition(self, chunks):
+        from pyspark import TaskContext
+
+        for _ in chunks:
+            pass
+        return int(TaskContext.get().getLocalProperty(ARROW_BYTE_CAP))
+
+
+def test_copy_job_runs_without_arrow_byte_cap(spark):
+    # Spark skips its per-row Arrow batch sizing only at Int.MaxValue.
+    df = spark.range(0, 100, numPartitions=1)
+    sink = _ReportsArrowByteCap("unused", "t", ("id",), format="binary")
+    assert sink.write(df) == 2**31 - 1
+
+
+@pytest.mark.parametrize("cap", [None, "32m"])
+@pytest.mark.parametrize("table", ["t", "reject"])
+def test_copy_write_leaves_session_confs_as_found(spark, tmp_path, cap, table):
+    s = spark.newSession()
+    if cap is not None:
+        s.conf.set(ARROW_BYTE_CAP, cap)
+    before = s.conf.getAll
+    df = s.range(0, 100, numPartitions=2)
+    with FakePgServer(
+        str(tmp_path / "spool"), fail_copy_matching='"reject"'
+    ) as srv:
+        sink = CopySink(srv.conn_string, table, ("id",), format="binary")
+        if table == "reject":
+            with pytest.raises(Exception, match="duplicate key|SparkException"):
+                sink.write(df)
+        else:
+            assert sink.write(df) == 100
+    assert s.conf.getAll == before
+    assert s.conf.get(ARROW_BYTE_CAP, None) == cap
+
+
 class _SourceFailsAfterFirstChunk(CopySink):
     """A sink whose chunk source raises once its first chunk is read."""
 

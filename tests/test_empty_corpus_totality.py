@@ -25,13 +25,10 @@ from __future__ import annotations
 import pyarrow.parquet as pq
 import pytest
 
+from s3_parquet_to_postgres_spark.catalog import TABLES
 from s3_parquet_to_postgres_spark.plans import all_queries
 
 SRC = "/root/testdata/sf0.001"
-TABLES = (
-    "region nation customer supplier part orders lineitem "
-    "events documents embeddings"
-).split()
 
 
 @pytest.fixture(scope="session")

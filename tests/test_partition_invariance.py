@@ -22,12 +22,8 @@ import os
 
 import pytest
 
+from s3_parquet_to_postgres_spark.catalog import TABLES
 from s3_parquet_to_postgres_spark.plans import get_registry
-
-TABLES = (
-    "region nation customer supplier part orders lineitem events "
-    "documents embeddings"
-).split()
 
 ALL_NAMES = sorted(get_registry())
 

@@ -50,6 +50,23 @@ def test_eager_build_scope_sets_and_restores_both_confs(spark):
     assert (spark.conf.get(AQE), spark.conf.get(WIDTH)) == was
 
 
+def test_scope_unsets_confs_the_caller_never_set(spark):
+    # A foreign session that never set AQE or the shuffle width must not
+    # leave the scope with either pinned to its default.
+    s = spark.newSession()
+    for k in (AQE, WIDTH):
+        s.conf.unset(k)
+    before = s.conf.getAll
+    with eager_build_scope(s, shuffle_partitions=2):
+        assert (s.conf.get(AQE), s.conf.get(WIDTH)) == ("false", "2")
+    assert s.conf.getAll == before
+    with pytest.raises(RuntimeError, match="boom"):
+        with eager_build_scope(s, shuffle_partitions=2):
+            raise RuntimeError("boom")
+    assert s.conf.getAll == before
+    assert s.conf.get(AQE, None) is None and s.conf.get(WIDTH, None) is None
+
+
 def test_apply_required_confs_reraises_unexpected_errors():
     def refuse(key, value):
         raise RuntimeError(f"cannot set {key}")
