@@ -19,8 +19,8 @@ Layout:
               stats + PII scrub, as-of & range joins, skew salting,
               multimodal binary columns
   functions/  cross-engine-exact numerics, UDF surface, layout helpers
-  sinks/      JDBC + Postgres COPY writers, staging-table swap,
-              fail-fast validation
+  sinks/      Postgres COPY writer (BINARY/TEXT) with its catalog
+              check, pure-stdlib wire client, staging-table swap
   plans/      declared query catalog (Spark query + DuckDB oracle SQL)
   pipeline    the one resumable drain: work list -> scan -> sink
               (reference: src/runner.rs:47-112)

@@ -2,19 +2,26 @@
 
 Parity with the reference binary (reference: src/main.rs:1-23,
 src/cmd_args.rs:16-28): one positional argument naming the YAML job
-config, then the work-list drain runs to completion. Extras the
-reference lacks:
+config, then the work-list drain runs to completion into the config's
+``db.table``, through the COPY sink (sinks/copy.py). Before any batch
+moves, the destination's column types are read from the Postgres
+catalog (reference: src/db.rs:37-75). When every column type is one
+COPY BINARY can load (``copy.BINARY_PG_TYPES``), each batch is cast
+to those types and streamed as ``COPY ... FROM STDIN BINARY``
+(reference: src/converters.rs:224-268, src/db.rs:167-177); otherwise,
+or when a batch has a source/destination type pair the cast plan does
+not cover, it is streamed as TEXT and Postgres parses each field.
+Extras the reference lacks:
 
-* ``--sink {jdbc,copy,parquet}`` -- the Postgres path can use either
-  batched-insert JDBC or the COPY FROM STDIN fast path; ``parquet``
-  writes to ``--output-dir`` so the pipeline is runnable (and
-  testable) without a database.
+* ``--output-dir`` -- write Parquet there instead of Postgres, so the
+  pipeline is runnable (and testable) without a database.
 * ``--master`` -- defaults to an externally configured cluster
   (spark-submit); pass ``local[N]`` for single-machine runs.
 
-Exit codes: 0 on success, 2 on bad arguments/config (fail-fast before
-any data moves, like Config::from_yaml_file + Db::connect), 1 on a
-failed batch (nothing in that batch is marked completed).
+Exit codes: 0 on success, 2 on bad arguments/config or a destination
+that fails the catalog check (fail-fast before the JVM starts and any
+data moves, like Config::from_yaml_file + Db::connect), 1 on a failed
+batch (nothing in that batch is marked completed).
 """
 
 from __future__ import annotations
@@ -23,23 +30,15 @@ import argparse
 import sys
 
 from .config import ConfigError, JobSpec
-from .operators.casts import require_flat
+from .operators.casts import CastPlanError, build_cast_plan, require_flat
 from .pipeline import run
 from .session import build_session
-from .sinks.jdbc import SchemaValidationError
-
-
-def _validate_sink_args(args, spec: JobSpec) -> None:
-    """Structural sink-arg checks that need no SparkSession -- run
-    BEFORE build_session so a bad invocation exits 2 without paying
-    JVM startup (fail-fast, reference: src/main.rs:9-14)."""
-    if args.sink == "parquet":
-        if not args.output_dir:
-            raise ConfigError("--sink parquet requires --output-dir")
-    elif not (spec.sink.conn_string and spec.sink.table):
-        raise ConfigError(
-            "db.conn_string and db.table are required for a Postgres sink"
-        )
+from .sinks.copy import (
+    BINARY_PG_TYPES,
+    CopySink,
+    SchemaValidationError,
+    destination_types,
+)
 
 
 def _observed(df):
@@ -53,77 +52,71 @@ def _observed(df):
     return df.observe(obs, F.count(F.lit(1)).alias("n")), obs
 
 
-def _make_sink_fn(args, spec: JobSpec, spark):
-    if args.sink == "parquet":
-
-        def parquet_sink(df):
-            df, obs = _observed(df)
-            df.write.mode("append").parquet(args.output_dir)
-            return obs.get["n"]
-
-        return parquet_sink
-
-    out_cols = tuple(
-        spec.projection.output_name(c) for c in spec.projection.desired_fields
-    )
-    if args.sink == "copy":
-        from .sinks.copy import CopySink
-
-        sink = CopySink(spec.sink.conn_string, spec.sink.table, out_cols)
-        # CopySink.write returns the rows it wrote, counted by the same
-        # single job that runs the COPY -- no extra scan. Flat-schema
-        # gate: PG tables are flat; nested projection columns fail at
-        # plan time with the columns named (parquet sink allows them).
-        return lambda df: sink.write(require_flat(df, "copy sink"))
-    else:
-        from .sinks.jdbc import JdbcSink
-
-        sink = JdbcSink(spec.sink.conn_string, spec.sink.table, spec.sink.mode)
-        # Fail-fast catalog validation before any batch moves, through
-        # the same driver properties the write uses
-        # (reference: src/db.rs:86-153).
-        sink.validate(spark, list(out_cols))
-
-    def db_sink(df):
-        df, obs = _observed(require_flat(df, "jdbc sink"))
-        sink.write(df)
+def _parquet_sink(output_dir: str):
+    def parquet_sink(df):
+        df, obs = _observed(df)
+        df.write.mode("append").parquet(output_dir)
         return obs.get["n"]
 
-    return db_sink
+    return parquet_sink
+
+
+def _postgres_sink(spec: JobSpec):
+    """Check the destination and return the per-batch COPY writer.
+    Needs no SparkSession, so a bad destination exits 2 before the JVM
+    starts (fail-fast, reference: src/db.rs:50-54, :134-145)."""
+    conn, table = spec.sink.conn_string, spec.sink.table
+    if not (conn and table):
+        raise ConfigError(
+            "db.conn_string and db.table are required unless --output-dir "
+            "is given"
+        )
+    cols = tuple(
+        spec.projection.output_name(c) for c in spec.projection.desired_fields
+    )
+    types = destination_types(conn, table, cols)
+    text = CopySink(conn, table, cols)
+    binary = (CopySink(conn, table, cols, format="binary")
+              if set(types.values()) <= BINARY_PG_TYPES else None)
+
+    def copy_sink(df):
+        # PG tables are flat: nested projection columns fail at plan
+        # time with the columns named. CopySink.write counts the rows
+        # in the same single job that runs the COPY.
+        df = require_flat(df, "copy sink")
+        if binary is not None:
+            try:
+                cast = build_cast_plan(df, types)
+            except CastPlanError:
+                pass  # a pair outside the cast matrix: Postgres parses it
+            else:
+                return binary.write(cast)
+        return text.write(df)
+
+    return copy_sink
 
 
 def main(argv: list[str] | None = None) -> int:
     ap = argparse.ArgumentParser(
         prog="s3_parquet_to_postgres_spark",
-        description="Drain a parquet work list into a sink.",
+        description="Drain a parquet work list into Postgres (or Parquet).",
     )
     ap.add_argument("config", help="YAML job config (reference layout)")
-    ap.add_argument("--sink", choices=["jdbc", "copy", "parquet"],
-                    default="jdbc")
     ap.add_argument("--output-dir", default=None,
-                    help="destination directory for --sink parquet")
+                    help="write Parquet here instead of the db.table")
     ap.add_argument("--master", default=None,
                     help="Spark master (default: external/cluster config)")
     args = ap.parse_args(argv)
 
     try:
         spec = JobSpec.from_yaml_file(args.config)
-        _validate_sink_args(args, spec)
-    except (ConfigError, OSError) as e:
+        sink_fn = (_parquet_sink(args.output_dir) if args.output_dir
+                   else _postgres_sink(spec))
+    except (ConfigError, SchemaValidationError, OSError) as e:
         print(f"config error: {e}", file=sys.stderr)
         return 2
 
     spark = build_session("s3-parquet-to-postgres-spark", master=args.master)
-    try:
-        sink_fn = _make_sink_fn(args, spec, spark)
-    except (ConfigError, SchemaValidationError) as e:
-        # Destination validation failures are config-class errors:
-        # fail fast BEFORE any data moves, exit 2 (not the mid-run
-        # exit 1), session stopped.
-        print(f"config error: {e}", file=sys.stderr)
-        spark.stop()
-        return 2
-
     try:
         results = run(spark, spec, sink_fn)
     except Exception as e:  # failed batch stays in wip -- rerun resumes

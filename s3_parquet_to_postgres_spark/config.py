@@ -91,7 +91,6 @@ class ProjectionSpec:
 class SinkSpec:
     conn_string: str | None = None
     table: str | None = None
-    mode: str = "append"
 
 
 @dataclass(frozen=True)
@@ -110,6 +109,13 @@ class JobSpec:
             raise ConfigError("parquet.desired_fields must be a non-empty list")
         s3 = raw["s3"]
         db = raw.get("db", {})
+        if "mode" in db:
+            # The sink runs once per batch: a per-write mode such as
+            # overwrite would keep only the last batch of a drain.
+            raise ConfigError(
+                "db.mode is not supported: the drain appends every batch "
+                "to db.table; remove the key"
+            )
         return JobSpec(
             source=SourceSpec(
                 bucket=s3.get("bucket"),
@@ -125,7 +131,6 @@ class JobSpec:
             sink=SinkSpec(
                 conn_string=db.get("conn_string"),
                 table=db.get("table"),
-                mode=db.get("mode", "append"),
             ),
         )
 

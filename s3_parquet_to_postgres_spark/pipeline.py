@@ -59,9 +59,13 @@ def run(
     """Drain the work list through the transform into the sink.
 
     ``sink_fn`` receives the transformed DataFrame for one batch and
-    returns rows written (JdbcSink/CopySink .write wrapped, or a
-    test-local parquet writer). Raises on the first failed batch --
-    fail-fast, nothing marked completed (reference: src/db.rs:202-239).
+    returns rows written: the CLI's COPY writer (``CopySink.write``,
+    BINARY or TEXT) or its Parquet writer. ``column_targets`` maps
+    output columns to Postgres type names for the cast plan; the CLI
+    casts inside its COPY writer instead, so that a batch whose types
+    the cast plan does not cover can still go as TEXT. Raises on the
+    first failed batch -- fail-fast, nothing marked completed
+    (reference: src/db.rs:202-239).
     """
     if spec.source.work_lists_dir is None:
         raise ValueError("spec.source.work_lists_dir is required for run()")

@@ -45,6 +45,13 @@ constraint violation raises inside the partition, failing the task and
 Idempotence at scale: point ``table`` at a staging table and swap
 atomically after the job, since a retried task replays its whole
 partition.
+
+Before any data moves, ``destination_types`` reads the table's column
+types from the Postgres catalog over the same connection path and
+fails on a missing table or column (reference: src/db.rs:37-75,
+:50-54, :134-145). The CLI picks the format from those types:
+BINARY with the cast plan when every column type is in
+``BINARY_PG_TYPES``, TEXT otherwise.
 """
 
 from __future__ import annotations
@@ -472,6 +479,66 @@ class _CopyStream:
             self.rows += chunk[1]
         part, self._cur = self._cur[:size], self._cur[size:]
         return bytes(part)
+
+
+# Destination column types (pg_type.typname) that BINARY can load: the
+# cast plan maps each to a Spark type whose encoding above is what the
+# type's binary receive function reads. inet, cidr and jsonb are left
+# out (their receive functions take no UTF-8 text), and so is "char",
+# whose receive function takes exactly one byte. Checked against PG 15.
+BINARY_PG_TYPES = frozenset({
+    "bool", "int2", "int4", "int8", "float4", "float8", "numeric", "date",
+    "timestamp", "timestamptz", "varchar", "text", "bpchar", "json", "bytea",
+})
+
+
+class SchemaValidationError(RuntimeError):
+    """Destination table or column missing, or the catalog unreadable."""
+
+
+def check_destination_columns(
+    table: str,
+    dest_cols: list[str] | set[str] | tuple[str, ...],
+    expected_columns: list[str] | tuple[str, ...],
+) -> None:
+    """Every expected column must exist in the destination column set,
+    else abort naming the gap (reference: src/db.rs:134-145 -- "Column
+    '{}' not found"). Matching is case-sensitive like the reference's
+    HashMap lookup; PG folds unquoted identifiers to lowercase, so
+    configs should use the exact stored spelling."""
+    dest = set(dest_cols)
+    missing = [c for c in expected_columns if c not in dest]
+    if missing:
+        raise SchemaValidationError(
+            f"destination table {table!r} lacks column(s) {missing}; "
+            f"has {sorted(dest)}"
+        )
+
+
+def destination_types(
+    conn_string: str, table: str, columns: tuple[str, ...]
+) -> dict[str, str]:
+    """Read ``table``'s column types from the catalog and return
+    ``{column: typname}`` for ``columns``. The table resolves like
+    ``CopySink.copy_sql`` names it. A failed connect, a missing table
+    or a missing column raises SchemaValidationError."""
+    relation = f'"{table}"'.replace("'", "''")
+    sql = (
+        "SELECT a.attname, t.typname FROM pg_attribute a "
+        "JOIN pg_type t ON t.oid = a.atttypid "
+        f"WHERE a.attrelid = '{relation}'::regclass "
+        "AND a.attnum > 0 AND NOT a.attisdropped"
+    )
+    try:
+        with _transaction(conn_string) as cur:
+            cur.execute(sql)
+            found = dict(cur.fetchall())
+    except Exception as e:  # psycopg2 and pgwire errors share no base
+        raise SchemaValidationError(
+            f"cannot read the columns of destination table {table!r}: {e}"
+        ) from e
+    check_destination_columns(table, found, columns)
+    return {c: found[c] for c in columns}
 
 
 @contextmanager

@@ -21,7 +21,8 @@ with a bare Python:
   disable/prefer/require (default prefer: bind when the server
   advertises -PLUS over TLS, advertise-capable 'y' gs2 flag
   otherwise so a MITM stripping -PLUS is detectable server-side);
-* simple Query ('Q') for BEGIN/COMMIT/ROLLBACK and to initiate COPY;
+* simple Query ('Q') for BEGIN/COMMIT/ROLLBACK, to initiate COPY, and
+  for the catalog read of the destination check (DataRows collected);
 * COPY-in streaming: CopyInResponse ('G') -> CopyData ('d') chunks ->
   CopyDone ('c') -> CommandComplete ('C') -> ReadyForQuery ('Z'); a
   reader that raises mid-stream gets CopyFail ('f') instead of
@@ -136,6 +137,18 @@ def _read_message(sock: socket.socket) -> tuple[bytes, bytes]:
 
 def _msg(t: bytes, payload: bytes) -> bytes:
     return t + struct.pack(">i", len(payload) + 4) + payload
+
+
+def _data_row(payload: bytes) -> tuple:
+    """DataRow payload (int16 count, then int32-length-prefixed text
+    values, -1 for NULL) -> tuple of str / None."""
+    out, pos = [], 2
+    for _ in range(struct.unpack_from(">h", payload)[0]):
+        ln = struct.unpack_from(">i", payload, pos)[0]
+        pos += 4
+        out.append(None if ln < 0 else payload[pos:pos + ln].decode())
+        pos += max(ln, 0)
+    return tuple(out)
 
 
 def _error_fields(payload: bytes) -> str:
@@ -335,8 +348,8 @@ class _Scram:
 class _Cursor:
     """Just enough cursor for every _connect() consumer: CopySink
     needs ``copy_expert``; StagedLoad runs DDL / promote scripts
-    through ``execute`` (result rows, if any, are drained and
-    discarded -- the callers are statement-only)."""
+    through ``execute``; the destination check reads the catalog with
+    ``execute`` + ``fetchall`` (text-format values, NULL as None)."""
 
     def __init__(self, conn: "PgWireConnection"):
         self._conn = conn
@@ -350,6 +363,9 @@ class _Cursor:
     def execute(self, sql: str) -> None:
         self._conn._ensure_txn()
         self._conn._simple_query(sql)
+
+    def fetchall(self) -> list[tuple]:
+        return self._conn._rows
 
     def copy_expert(self, sql: str, buf: Any) -> None:
         self._conn._copy_in(sql, buf)
@@ -365,6 +381,7 @@ class PgWireConnection:
         )
         self._sock.setsockopt(socket.IPPROTO_TCP, socket.TCP_NODELAY, 1)
         self._in_txn = False
+        self._rows: list[tuple] = []
         self._closed = False
         self._tls = False
         self._sslmode = p["sslmode"]
@@ -520,12 +537,16 @@ class PgWireConnection:
     # -- statements
 
     def _drain(self) -> str | None:
-        """Read to ReadyForQuery, skipping 'C' CommandComplete / 'N' /
-        'S' / empty results; return the ErrorResponse seen, if any."""
+        """Read to ReadyForQuery, keeping 'D' DataRows in ``_rows`` and
+        skipping 'C' CommandComplete / 'T' / 'N' / 'S' / empty results;
+        return the ErrorResponse seen, if any."""
         err: str | None = None
+        self._rows = []
         while (msg := _read_message(self._sock))[0] != b"Z":
             if msg[0] == b"E":
                 err = _error_fields(msg[1])
+            elif msg[0] == b"D":
+                self._rows.append(_data_row(msg[1]))
         return err
 
     def _simple_query(self, sql: str) -> None:

@@ -1,6 +1,6 @@
 """Staging-table + atomic-swap: the idempotence half of the PG sinks.
 
-Spark tasks retry; a retried COPY/JDBC partition replays its whole
+Spark tasks retry; a retried COPY partition replays its whole
 partition, so writing straight into the live table is at-least-once.
 The exactly-once pattern at any scale is: write the job's output into
 a staging table, then swap it into place in ONE transaction -- readers
@@ -42,27 +42,24 @@ def clone_then_swap_ddl(table: str, staging: str | None = None) -> str:
     )
 
 
-def swap_by_rename(table: str, staging: str | None = None,
-                   keep_old: bool = False) -> str:
+def swap_by_rename(table: str, staging: str | None = None) -> str:
     """One transaction that promotes the staging table to live.
 
-    The old live table moves to ``<table>__old`` (dropped unless
-    ``keep_old``), the staging table takes the live name. Readers
-    block for the duration of the two renames (microseconds), then
-    see the complete new data -- never a partial load.
+    The old live table moves to ``<table>__old`` and is dropped, the
+    staging table takes the live name. Readers block for the duration
+    of the two renames (microseconds), then see the complete new data
+    -- never a partial load.
     """
     stg = staging or f"{table}__staging"
     old = f"{table}__old"
-    stmts = [
+    return "\n".join([
         "BEGIN;",
         f"DROP TABLE IF EXISTS {_q(old)};",
         f"ALTER TABLE {_q(table)} RENAME TO {_q(old)};",
         f"ALTER TABLE {_q(stg)} RENAME TO {_q(table)};",
-    ]
-    if not keep_old:
-        stmts.append(f"DROP TABLE {_q(old)};")
-    stmts.append("COMMIT;")
-    return "\n".join(stmts)
+        f"DROP TABLE {_q(old)};",
+        "COMMIT;",
+    ])
 
 
 @dataclass
@@ -85,7 +82,6 @@ class StagedLoad:
     conn_string: str
     table: str
     staging: str | None = None
-    keep_old: bool = False
     # Injectable for tests / alternative drivers (same contract as
     # CopySink.connection_factory); None -> psycopg2.connect.
     connection_factory: Callable[[str], Any] | None = None
@@ -98,9 +94,7 @@ class StagedLoad:
         self._execute(clone_then_swap_ddl(self.table, self.staging_table))
 
     def swap(self) -> None:
-        self._execute(
-            swap_by_rename(self.table, self.staging_table, self.keep_old)
-        )
+        self._execute(swap_by_rename(self.table, self.staging_table))
 
     def _execute(self, script: str) -> None:
         from .copy import _transaction

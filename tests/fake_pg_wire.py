@@ -2,9 +2,11 @@
 
 Implements the SERVER side of exactly the protocol subset
 ``sinks/pgwire.py`` speaks: startup (trust, cleartext, or
-SCRAM-SHA-256 auth), simple Query for BEGIN/COMMIT/ROLLBACK, and
-COPY-in (CopyInResponse -> CopyData -> CopyDone -> CommandComplete,
-or CopyFail -> ErrorResponse).
+SCRAM-SHA-256 auth), simple Query for BEGIN/COMMIT/ROLLBACK, the
+destination check's catalog query (RowDescription + DataRows from a
+recorded ``{table: [(column, typname)]}`` dict), and COPY-in
+(CopyInResponse -> CopyData -> CopyDone -> CommandComplete, or
+CopyFail -> ErrorResponse).
 Runs on a real TCP socket so Spark executor worker PROCESSES (not
 threads) connect to it -- the closest this container can get to the
 reference's live-Postgres e2e harness (reference:
@@ -25,6 +27,7 @@ import base64
 import hashlib
 import hmac
 import os
+import re
 import socket
 import ssl
 import struct
@@ -58,6 +61,9 @@ class FakePgServer:
     expected password is ``srv.password``. ``fail_copy_matching``:
     substring -- COPY statements containing it get an ErrorResponse
     instead of CopyInResponse (constraint-violation simulation).
+    ``catalog``: ``{table: [(column, typname)]}`` answering the
+    ``'"<table>"'::regclass`` catalog query; a table not in it gets the
+    ErrorResponse of a missing relation.
     """
 
     def __init__(
@@ -70,8 +76,10 @@ class FakePgServer:
         certfile: str | None = None,
         keyfile: str | None = None,
         advertise_plus: bool = False,
+        catalog: dict[str, list[tuple[str, str]]] | None = None,
     ):
         self.spool = spool_dir
+        self.catalog = catalog or {}
         self.auth = auth
         self.password = password
         self.fail_copy_matching = fail_copy_matching
@@ -195,8 +203,11 @@ class FakePgServer:
                     return
                 sql = body.rstrip(b"\x00").decode()
                 u = sql.strip().upper()
+                relation = re.search(r"'\"(.*)\"'::regclass", sql)
                 if u.startswith("COPY"):
                     self._serve_copy(conn, sql, pending)
+                elif relation:
+                    self._serve_catalog(conn, relation.group(1))
                 elif u == "BEGIN":
                     self._complete(conn, b"BEGIN")
                 elif u == "COMMIT":
@@ -219,6 +230,27 @@ class FakePgServer:
 
     def _complete(self, conn: socket.socket, tag: bytes) -> None:
         conn.sendall(_msg(b"C", tag + b"\x00") + READY_IDLE)
+
+    def _serve_catalog(self, conn: socket.socket, table: str) -> None:
+        if table not in self.catalog:
+            conn.sendall(
+                _msg(b"E", b"SERROR\x00C42P01\x00Mrelation \"%s\" does "
+                           b"not exist\x00\x00" % table.encode())
+                + READY_IDLE
+            )
+            return
+        # RowDescription: two text-format columns of type name (oid 19).
+        fields = b"".join(
+            name + b"\x00" + struct.pack(">ihihih", 0, 0, 19, 64, -1, 0)
+            for name in (b"attname", b"typname")
+        )
+        out = [_msg(b"T", struct.pack(">h", 2) + fields)]
+        for row in self.catalog[table]:
+            vals = [v.encode() for v in row]
+            out.append(_msg(b"D", struct.pack(">h", len(vals)) + b"".join(
+                struct.pack(">i", len(v)) + v for v in vals)))
+        conn.sendall(b"".join(out))
+        self._complete(conn, b"SELECT %d" % len(self.catalog[table]))
 
     def _serve_copy(
         self, conn: socket.socket, sql: str, pending: list[str]

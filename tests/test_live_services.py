@@ -21,7 +21,11 @@ the in-process fakes:
   DO block that RAISEs on mismatch);
 * s3http: listing-seeded work list drained through pipeline.run
   against a real S3 REST implementation, staged files ETag-verified
-  and cleaned up.
+  and cleaned up;
+* the CLI: ``main()`` reads the destination's column types from the
+  catalog, then drains as COPY BINARY with casts, or as TEXT when a
+  column type (jsonb) has no binary form the encoder writes; every
+  member of ``BINARY_PG_TYPES`` loads a cast value.
 """
 
 from __future__ import annotations
@@ -340,5 +344,147 @@ def test_live_pgwire_requires_tls_channel_binding():
         with conn.cursor() as cur:
             cur.execute("SELECT 1")
         conn.commit()
+    finally:
+        conn.close()
+
+
+def test_live_binary_pg_types_load_through_casts(spark):
+    """Every destination type the CLI streams as COPY BINARY loads a
+    cast value the way Postgres reads it: one column per member of
+    BINARY_PG_TYPES, values checked as text in the server."""
+    import datetime as dt
+    from decimal import Decimal
+
+    from s3_parquet_to_postgres_spark.operators.casts import build_cast_plan
+    from s3_parquet_to_postgres_spark.sinks import pgwire
+    from s3_parquet_to_postgres_spark.sinks.copy import (
+        BINARY_PG_TYPES,
+        CopySink,
+        destination_types,
+    )
+
+    ts = dt.datetime(2024, 2, 29, 12, 34, 56, 789012)
+    cases = [  # column DDL type, Spark source type, value, PG literal
+        ("bool", "boolean", True, "true"),
+        ("int2", "bigint", -7, "-7"),
+        ("int4", "bigint", 2**31 - 1, str(2**31 - 1)),
+        ("int8", "bigint", -2**40, str(-2**40)),
+        ("float4", "double", 1.5, "1.5"),
+        ("float8", "double", -2.25, "-2.25"),
+        ("numeric(8,3)", "decimal(6,2)", Decimal("-34.25"), "-34.25"),
+        ("date", "string", "1969-02-28", "1969-02-28"),
+        ("timestamp", "timestamp", ts, "2024-02-29 12:34:56.789012"),
+        ("timestamptz", "timestamp", ts, "2024-02-29 12:34:56.789012+00"),
+        ("varchar(5)", "string", "abé", "abé"),
+        ("text", "string", "é€\\x", "é€\\x"),
+        ("char(3)", "string", "ab", "ab"),
+        ("json", "string", '{"a": [1, "é"]}', '{"a": [1, "é"]}'),
+        ("bytea", "binary", bytearray(b"\x00\xff"), "\\x00ff"),
+    ]
+    cols = tuple(f"c{k}" for k in range(len(cases)))
+    conn = pgwire.connect(PG)
+    try:
+        with conn.cursor() as cur:
+            cur.execute("DROP TABLE IF EXISTS live_bin_types")
+            cur.execute("CREATE TABLE live_bin_types ("
+                        + ", ".join(f"{c} {case[0]}"
+                                    for c, case in zip(cols, cases)) + ")")
+        conn.commit()
+        types = destination_types(PG, "live_bin_types", cols)
+        assert set(types.values()) == BINARY_PG_TYPES
+        df = spark.createDataFrame(
+            [tuple(case[2] for case in cases)],
+            ", ".join(f"{c} {case[1]}" for c, case in zip(cols, cases)))
+        sink = CopySink(PG, "live_bin_types", cols, format="binary")
+        assert sink.write(build_cast_plan(df, types)) == 1
+        _assert_in_server(conn, "live_bin_types", [
+            (f"{c}::text = ('{case[3]}'::{case[0]})::text", "true")
+            for c, case in zip(cols, cases)
+        ])
+    finally:
+        conn.close()
+
+
+def test_live_cli_drains_binary_with_casts_and_jsonb_as_text(
+        spark, tmp_path, monkeypatch):
+    """``main()`` drains two batches into two tables of a real backend:
+    int4/numeric/date/text columns from int64/decimal/date/string
+    sources go as COPY BINARY with casts, and a table with a jsonb
+    column goes as TEXT. Row counts and checksums are asserted in the
+    server."""
+    import datetime as dt
+    import hashlib
+    import json
+    from decimal import Decimal
+
+    from s3_parquet_to_postgres_spark.__main__ import main
+    from s3_parquet_to_postgres_spark.sinks import pgwire
+    from s3_parquet_to_postgres_spark.sinks.copy import CopySink
+
+    formats = []
+    write = CopySink.write
+    monkeypatch.setattr(CopySink, "write", lambda self, df: (
+        formats.append(self.format), write(self, df))[1])
+    n = 2000
+    rows = [
+        (i, Decimal(f"{i * 7919 % 10**6 - 5 * 10**5}.{i % 100:02d}"),
+         dt.date(1960, 1, 1) + dt.timedelta(days=i * 13),
+         None if i % 7 == 0 else f"é{i}\t€",
+         json.dumps({"k": i, "s": f"é{i}"}))
+        for i in range(n)
+    ]
+    src = spark.createDataFrame(
+        rows, "o_id long, o_amount decimal(12,2), o_day date, "
+              "o_name string, o_doc string")
+    keys = []
+    for b in range(2):
+        path = tmp_path / f"batch{b}.parquet"
+        src.where(f"o_id % 2 = {b}").write.parquet(str(path))
+        keys.append(str(path))
+    named = [r[3] for r in rows if r[3] is not None]
+    tables = {
+        "live_cli_bin": (
+            "binary", "id int4, amount numeric, day date, name text",
+            ["o_id", "o_amount", "o_day", "o_name"],
+            [("count(*)", n), ("sum(id)", n * (n - 1) // 2),
+             ("sum(amount)", f"{sum(r[1] for r in rows)}"),
+             ("sum(day - date '1970-01-01')",
+              sum((r[2] - dt.date(1970, 1, 1)).days for r in rows)),
+             ("count(name)", len(named)),
+             ("md5(string_agg(name, ',' ORDER BY id))",
+              hashlib.md5(",".join(named).encode()).hexdigest())],
+        ),
+        "live_cli_json": (
+            "text", "id int8, doc jsonb",
+            ["o_id", "o_doc"],
+            [("count(*)", n), ("sum((doc->>'k')::int)", n * (n - 1) // 2),
+             ("md5(string_agg(doc->>'s', ',' ORDER BY id))",
+              hashlib.md5(",".join(f"é{i}" for i in range(n)).encode())
+              .hexdigest())],
+        ),
+    }
+    conn = pgwire.connect(PG)
+    try:
+        for table, (fmt, ddl, fields, checks) in tables.items():
+            formats.clear()
+            with conn.cursor() as cur:
+                cur.execute(f"DROP TABLE IF EXISTS {table}")
+                cur.execute(f"CREATE TABLE {table} ({ddl})")
+            conn.commit()
+            work = tmp_path / f"work_{table}"
+            work.mkdir()
+            (work / "todo").write_text("\n".join(keys) + "\n")
+            renames = "".join(f"    {f}: {f[2:]}\n" for f in fields)
+            cfg = tmp_path / f"{table}.yml"
+            cfg.write_text(
+                f"s3:\n  download_batch_size: 1\n  work_lists_dir: {work}\n"
+                f"parquet:\n  desired_fields: [{', '.join(fields)}]\n"
+                f"  parquet_to_db:\n{renames}"
+                f"db:\n  conn_string: \"{PG}\"\n  table: {table}\n"
+            )
+            assert main([str(cfg)]) == 0
+            assert formats == [fmt, fmt]
+            assert (work / "completed").read_text().split() == keys
+            _assert_in_server(conn, table, checks)
     finally:
         conn.close()

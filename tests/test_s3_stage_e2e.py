@@ -111,8 +111,7 @@ parquet:
 """
         )
         out_dir = tmp_path / "out"
-        rc = main([str(cfg), "--sink", "parquet",
-                   "--output-dir", str(out_dir)])
+        rc = main([str(cfg), "--output-dir", str(out_dir)])
     assert rc == 0
     got = spark.read.parquet(str(out_dir))
     assert got.count() == orders.count()

@@ -1,12 +1,19 @@
 """COPY-encoder unit tests (the pure-Python piece of the Postgres COPY
-sink; the socket half needs a live PG, reference-style e2e, gated out
-of this container)."""
+sink), the destination column check, and the staging-swap SQL. The
+socket half runs against the fake wire server in
+test_copy_socket_e2e.py and test_cli.py."""
 
 from __future__ import annotations
 
 from datetime import date, datetime
 
-from s3_parquet_to_postgres_spark.sinks.copy import encode_rows
+import pytest
+
+from s3_parquet_to_postgres_spark.sinks.copy import (
+    SchemaValidationError,
+    check_destination_columns,
+    encode_rows,
+)
 
 
 def enc(*row):
@@ -44,16 +51,14 @@ def test_multiple_rows_stream():
 
 
 def test_copy_sink_fails_cleanly_without_psycopg2(spark):
-    # psycopg2 isn't installed in this container; the executor-side
-    # import gate must surface a clear error, not a bare ImportError.
-    import pytest as _pytest
-
+    # Without psycopg2 the executor-side import gate must surface a
+    # clear error, not a bare ImportError.
     from s3_parquet_to_postgres_spark.sinks.copy import CopySink
 
     sink = CopySink(conn_string="postgresql://nope", table="t",
                     columns=("a",))
     df = spark.createDataFrame([(1,), (2,)], ["a"])
-    with _pytest.raises(Exception, match="psycopg2|CopySink"):
+    with pytest.raises(Exception, match="psycopg2|CopySink"):
         sink.write(df)
 
 
@@ -63,3 +68,81 @@ def test_copy_sql_quotes_identifiers():
     sink = CopySink(conn_string="", table="my table",
                     columns=("a", "select"))
     assert sink.copy_sql() == 'COPY "my table" ("a", "select") FROM STDIN'
+
+
+# -- destination column check (reference: src/db.rs:134-145) ---------------
+
+# The reference's users example table
+# (reference: README.md config example; src/db.rs:385-502 tests).
+USERS_COLS = ["id", "email", "age", "signup_date"]
+
+
+def test_all_expected_columns_present_passes():
+    check_destination_columns("users", USERS_COLS, ["id", "email"])
+    check_destination_columns("users", USERS_COLS, USERS_COLS)
+
+
+def test_missing_column_aborts_naming_it():
+    # reference: src/db.rs:134-145 "Column '{}' not found in table"
+    with pytest.raises(SchemaValidationError, match=r"\['nickname'\]"):
+        check_destination_columns("users", USERS_COLS, ["id", "nickname"])
+
+
+def test_multiple_missing_columns_all_named():
+    with pytest.raises(SchemaValidationError, match="a.*b") as ei:
+        check_destination_columns("users", USERS_COLS, ["a", "b", "id"])
+    assert "users" in str(ei.value)
+
+
+def test_case_sensitive_like_reference_hashmap():
+    # PG folds unquoted identifiers to lowercase; the reference's
+    # column lookup is a case-sensitive HashMap hit. 'ID' != 'id'.
+    with pytest.raises(SchemaValidationError):
+        check_destination_columns("users", USERS_COLS, ["ID"])
+
+
+def test_empty_expected_is_vacuously_valid():
+    check_destination_columns("users", USERS_COLS, [])
+
+
+# -- staging swap (the exactly-once promote; SQL pure, no PG needed) --------
+
+def test_clone_ddl_quotes_and_targets_staging():
+    from s3_parquet_to_postgres_spark.sinks.staging import clone_then_swap_ddl
+
+    ddl = clone_then_swap_ddl("events")
+    assert 'DROP TABLE IF EXISTS "events__staging";' in ddl
+    assert 'CREATE TABLE "events__staging" (LIKE "events" INCLUDING ALL);' in ddl
+
+
+def test_swap_is_one_transaction_ordered():
+    from s3_parquet_to_postgres_spark.sinks.staging import swap_by_rename
+
+    sql = swap_by_rename("events")
+    lines = sql.splitlines()
+    assert lines[0] == "BEGIN;" and lines[-1] == "COMMIT;"
+    # old dropped first, live -> old, staging -> live, old dropped
+    assert lines[1] == 'DROP TABLE IF EXISTS "events__old";'
+    assert lines[2] == 'ALTER TABLE "events" RENAME TO "events__old";'
+    assert lines[3] == 'ALTER TABLE "events__staging" RENAME TO "events";'
+    assert lines[4] == 'DROP TABLE "events__old";'
+
+
+def test_identifier_quoting_doubles_embedded_quotes():
+    from s3_parquet_to_postgres_spark.sinks.staging import swap_by_rename
+
+    sql = swap_by_rename('we"ird')
+    assert '"we""ird"' in sql
+
+
+def test_staged_load_fails_cleanly_without_psycopg2():
+    # Without psycopg2, StagedLoad falls back to the bundled
+    # pure-stdlib wire client (sinks/pgwire.py), which must surface a
+    # clean CONNECTION error for an unreachable DSN -- never an
+    # ImportError.
+    from s3_parquet_to_postgres_spark.sinks.staging import StagedLoad
+
+    staged = StagedLoad("postgresql://nope", table="t")
+    assert staged.staging_table == "t__staging"
+    with pytest.raises(OSError):
+        staged.prepare()

@@ -52,79 +52,6 @@ def test_multi_path_scan_unions_files(spark, tmp_path):
     assert both.count() == 2 * r.count()
 
 
-def test_scan_merge_schema_reconciles_drift(spark, tmp_path):
-    # Newer files add a column; mergeSchema unions the footers and
-    # reads old files' missing column as NULL. Off by default.
-    import pytest as _pytest
-
-    from s3_parquet_to_postgres_spark.sources.parquet import scan_parquet
-
-    old = str(tmp_path / "old.parquet")
-    new = str(tmp_path / "new.parquet")
-    spark.createDataFrame([(1,)], "id long").coalesce(1).write.parquet(old)
-    spark.createDataFrame([(2, "x")], "id long, extra string") \
-        .coalesce(1).write.parquet(new)
-    merged = scan_parquet(spark, [old, new], merge_schema=True)
-    assert sorted(merged.columns) == ["extra", "id"]
-    rows = {r["id"]: r["extra"] for r in merged.collect()}
-    assert rows == {1: None, 2: "x"}
-    # default: no silent union -- the scan schema is exactly ONE
-    # footer's schema (whichever file Spark samples), never a merge.
-    plain = scan_parquet(spark, [old, new])
-    assert sorted(plain.columns) in (["id"], ["extra", "id"])
-    assert set(plain.columns) != {"id", "extra"} or sorted(
-        plain.columns
-    ) == ["extra", "id"]  # either footer verbatim, no invented mix
-
-
-def test_scan_corrupt_policy(spark, tmp_path):
-    import pytest as _pytest
-
-    from s3_parquet_to_postgres_spark.sources.parquet import scan_parquet
-
-    good = str(tmp_path / "good.parquet")
-    spark.createDataFrame([(1,), (2,)], "id long").coalesce(1).write.parquet(good)
-    bad_dir = tmp_path / "bad.parquet"
-    bad_dir.mkdir()
-    (bad_dir / "part-00000.parquet").write_bytes(b"PAR1 this is not parquet")
-    # fail (default): abort like the reference's footer-parse error
-    with _pytest.raises(Exception):
-        scan_parquet(spark, [good, str(bad_dir)]).count()
-    # skip: batch survives, corrupt file dropped
-    assert scan_parquet(spark, [good, str(bad_dir)],
-                        on_corrupt="skip").count() == 2
-    with _pytest.raises(ValueError):
-        scan_parquet(spark, good, on_corrupt="maybe")
-
-
-def test_scan_skip_refuses_silent_type_drift(spark, tmp_path):
-    # With a forced schema + ignoreCorruptFiles, Spark would silently
-    # drop HEALTHY files whose types drifted; scan_parquet must
-    # detect the conflict and fail loudly instead.
-    import pytest as _pytest
-
-    from s3_parquet_to_postgres_spark.sources.parquet import scan_parquet
-
-    a = str(tmp_path / "a.parquet")
-    b = str(tmp_path / "b.parquet")
-    spark.createDataFrame([(1,)], "id int").coalesce(1).write.parquet(a)
-    spark.createDataFrame([(2**40,)], "id long").coalesce(1).write.parquet(b)
-    with _pytest.raises(ValueError, match="type drift on column 'id'"):
-        scan_parquet(spark, [a, b], on_corrupt="skip")
-
-
-def test_scan_skip_all_corrupt_is_io_error(spark, tmp_path):
-    import pytest as _pytest
-
-    from s3_parquet_to_postgres_spark.sources.parquet import scan_parquet
-
-    bad = tmp_path / "bad.parquet"
-    bad.mkdir()
-    (bad / "part-0.parquet").write_bytes(b"junk")
-    with _pytest.raises(IOError):
-        scan_parquet(spark, [str(bad)], on_corrupt="skip")
-
-
 def test_nested_ingest_round_trip_and_boundary(spark):
     # The r10 nested-ingestion entry: the written fixture must carry
     # REAL nesting (struct-of-struct + list<struct>), the boundary
