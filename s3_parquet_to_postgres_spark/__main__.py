@@ -10,7 +10,9 @@ COPY BINARY can load (``copy.BINARY_PG_TYPES``), each batch is cast
 to those types and streamed as ``COPY ... FROM STDIN BINARY``
 (reference: src/converters.rs:224-268, src/db.rs:167-177); otherwise,
 or when a batch has a source/destination type pair the cast plan does
-not cover, it is streamed as TEXT and Postgres parses each field.
+not cover or would store differently than Postgres parsing the value's
+text (``_PARSED_BY_POSTGRES``), it is streamed as TEXT and Postgres
+parses each field.
 Extras the reference lacks:
 
 * ``--output-dir`` -- write Parquet there instead of Postgres, so the
@@ -61,6 +63,32 @@ def _parquet_sink(output_dir: str):
     return parquet_sink
 
 
+# Source type (Spark simpleString) -> destination types it goes to as
+# TEXT even when the cast plan covers the pair, because Postgres
+# parsing the value's text stores something other than the cast:
+# Spark parses date and timestamp strings in UTC with ANSI formats
+# where Postgres uses its DateStyle and TimeZone, and it decodes a
+# bytea string only as hex; no decimal keeps a float's shortest digits;
+# a naive timestamp into timestamptz takes the server's zone; and the
+# timestamp-to-string cast drops fractional seconds.
+_STRING_PG_TYPES = frozenset({"varchar", "text", "bpchar", "json"})
+_PARSED_BY_POSTGRES = {
+    "string": frozenset({"date", "timestamp", "timestamptz", "bytea"}),
+    "float": frozenset({"numeric"}),
+    "double": frozenset({"numeric"}),
+    "timestamp": _STRING_PG_TYPES,
+    "timestamp_ntz": _STRING_PG_TYPES | {"timestamptz"},
+}
+
+
+def _parsed_by_postgres(schema, types: dict[str, str]) -> bool:
+    return any(
+        types.get(f.name) in _PARSED_BY_POSTGRES.get(
+            f.dataType.simpleString(), ())
+        for f in schema.fields
+    )
+
+
 def _postgres_sink(spec: JobSpec):
     """Check the destination and return the per-batch COPY writer.
     Needs no SparkSession, so a bad destination exits 2 before the JVM
@@ -84,7 +112,7 @@ def _postgres_sink(spec: JobSpec):
         # time with the columns named. CopySink.write counts the rows
         # in the same single job that runs the COPY.
         df = require_flat(df, "copy sink")
-        if binary is not None:
+        if binary is not None and not _parsed_by_postgres(df.schema, types):
             try:
                 cast = build_cast_plan(df, types)
             except CastPlanError:

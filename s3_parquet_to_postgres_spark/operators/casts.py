@@ -102,6 +102,16 @@ def cast_expr(name: str, src_type: DataType, pg_type: str) -> Column:
     if src_type == target:
         return col
 
+    # numeric keeps the scale of an exact source, as Postgres does when
+    # it parses the value's text: a decimal passes unchanged and an
+    # integer gets scale 0. Casting them to DecimalType(38, 18) would
+    # store 18 places and overflow past 20 integer digits.
+    if isinstance(target, DecimalType):
+        if isinstance(src_type, DecimalType):
+            return col
+        if isinstance(src_type, (ByteType, ShortType, IntegerType, LongType)):
+            return col.cast(DecimalType(20, 0))
+
     # Int widening family (INT_8/INT_16/INT_32/INT_64 -> int2/4/8,
     # reference: src/converters.rs:150-196) and general numerics; also
     # the completed decimal path.

@@ -86,6 +86,18 @@ def test_double_to_decimal(spark, typed_df):
     assert dict(out.dtypes)["d"].startswith("decimal")
 
 
+def test_numeric_keeps_an_exact_source_scale(spark):
+    from decimal import Decimal
+
+    df = spark.createDataFrame([(Decimal("1234.25"), Decimal(10**25), 5)],
+                               "a decimal(6,2), b decimal(38,0), n bigint")
+    out = build_cast_plan(df, {c: "numeric" for c in df.columns})
+    assert out.dtypes == [("a", "decimal(6,2)"), ("b", "decimal(38,0)"),
+                          ("n", "decimal(20,0)")]
+    assert tuple(map(str, out.first())) == (
+        "1234.25", "10000000000000000000000000", "5")
+
+
 def test_incompatible_pair_fails_at_plan_time(spark, typed_df):
     with pytest.raises(CastPlanError, match="no conversion|not supported"):
         build_cast_plan(typed_df, {"dt": "int4"})

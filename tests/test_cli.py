@@ -85,18 +85,24 @@ def test_cli_bad_config_is_exit_2(tmp_path):
     assert main([str(cfg), "--output-dir", "x"]) == 2
 
 
-def test_cli_missing_db_section_is_exit_2(staged_cli):
-    _, cfg, _ = staged_cli
-    assert main([str(cfg)]) == 2
-
-
-def test_cli_missing_output_dir_is_exit_2(staged_cli, capsys):
+def test_cli_missing_db_section_is_exit_2(staged_cli, capsys):
     # With neither a db section nor --output-dir there is no sink:
     # the error names both ways to give one.
     _, cfg, _ = staged_cli
     assert main([str(cfg)]) == 2
     err = capsys.readouterr().err
     assert "db.table" in err and "--output-dir" in err
+
+
+def test_cli_missing_output_dir_is_exit_2(staged_cli, capsys):
+    # A db section without a table is no sink either, and nothing
+    # connects: the error is the missing key, not a failed connect.
+    _, cfg, _ = staged_cli
+    cfg.write_text(cfg.read_text() + 'db:\n  conn_string: "postgresql://'
+                   'x@127.0.0.1:1/etl?sslmode=disable"\n')
+    assert main([str(cfg)]) == 2
+    err = capsys.readouterr().err
+    assert "are required" in err and "--output-dir" in err
 
 
 def test_cli_failed_batch_is_exit_1_and_preserves_wip(spark, tmp_path):
@@ -166,7 +172,8 @@ ORDERS_PG = [("id", "int4"), ("amount", "numeric"), ("day", "date"),
 
 @pytest.fixture()
 def pg_cli(spark, tmp_path):
-    """Two one-file batches of int64/decimal/date/string rows, and a
+    """Two one-file batches of int64/decimal/date/string/double rows
+    (``rows`` leaves out the double, ``o_id / 4``), and a
     config naming the destination table ``orders`` (the conn string is
     filled in per test)."""
     import datetime as dt
@@ -182,8 +189,9 @@ def pg_cli(spark, tmp_path):
     for b in range(2):
         path = tmp_path / f"batch{b}.parquet"
         spark.createDataFrame(
-            [r for r in rows if r[0] % 2 == b],
-            "o_id long, o_amount decimal(10,2), o_day date, o_name string",
+            [r + (r[0] / 4,) for r in rows if r[0] % 2 == b],
+            "o_id long, o_amount decimal(10,2), o_day date, o_name string, "
+            "o_ratio double",
         ).coalesce(1).write.parquet(str(path))
         keys.append(str(path))
     work = tmp_path / "work"
@@ -254,6 +262,8 @@ def test_cli_drains_into_postgres_with_copy_binary_and_casts(
     ]
     got = sorted(r for blob in copies for r in _binary_rows(blob, decoders))
     assert got == rows
+    # numeric keeps the source's scale: 1.00 stays 1.00, not 1.000...0
+    assert [str(r[1]) for r in got] == [str(r[1]) for r in rows]
     assert len(work.joinpath("completed").read_text().split()) == 2
 
 
@@ -283,6 +293,11 @@ def test_cli_bad_destination_is_exit_2_before_any_copy(
     ({"orders": [("id", "int8"), ("name", "jsonb")]}, ("o_id", "o_name")),
     # int64 -> text is outside the cast matrix: Postgres parses it
     ({"orders": [("id", "text"), ("day", "date")]}, ("o_id", "o_day")),
+    # Postgres parses a timestamp string in its own TimeZone
+    ({"orders": [("id", "int8"), ("name", "timestamptz")]},
+     ("o_id", "o_name")),
+    # no decimal holds a double's shortest digits
+    ({"orders": [("id", "int8"), ("ratio", "numeric")]}, ("o_id", "o_ratio")),
 ])
 def test_cli_copies_text_when_binary_cannot_load(
         pg_cli, tmp_path, catalog, fields):
@@ -298,6 +313,42 @@ def test_cli_copies_text_when_binary_cannot_load(
     lines = b"".join(copies).decode().splitlines()
     assert len(lines) == len(rows)
     assert sorted(int(line.split("\t")[0]) for line in lines) == list(range(12))
+
+
+def test_cli_numeric_keeps_the_source_scale(spark, tmp_path):
+    """An unconstrained numeric column stores what Postgres would parse
+    from the value's text: a decimal keeps its scale and its integer
+    digits (10**25 overflows a decimal(38,18)), an integer gets scale 0.
+    The batch still goes as COPY BINARY."""
+    from decimal import Decimal
+
+    from .fake_pg_wire import FakePgServer
+    from .test_copy_binary import decode_numeric
+
+    src = tmp_path / "num.parquet"
+    spark.createDataFrame(
+        [(Decimal("1234.25"), Decimal(10**25), 5)],
+        "o_amount decimal(6,2), o_big decimal(38,0), o_n long",
+    ).coalesce(1).write.parquet(str(src))
+    work = tmp_path / "work"
+    work.mkdir()
+    (work / "todo").write_text(f"{src}\n")
+    with FakePgServer(str(tmp_path / "spool"), catalog={"nums": [
+            ("amount", "numeric"), ("big", "numeric"), ("n", "numeric")]}) \
+            as srv:
+        cfg = tmp_path / "num.yml"
+        cfg.write_text(
+            f"s3:\n  work_lists_dir: {work}\n"
+            "parquet:\n  desired_fields: [o_amount, o_big, o_n]\n"
+            "  parquet_to_db: {o_amount: amount, o_big: big, o_n: n}\n"
+            f"db:\n  conn_string: \"{srv.conn_string}\"\n  table: nums\n"
+        )
+        assert main([str(cfg)]) == 0
+        sql, copies = srv.committed_sql(), srv.committed_copies()
+    assert sql == ['COPY "nums" ("amount", "big", "n") FROM STDIN BINARY']
+    got = _binary_rows(b"".join(copies), [decode_numeric] * 3)
+    assert [tuple(map(str, r)) for r in got] == [
+        ("1234.25", "10000000000000000000000000", "5")]
 
 
 def test_db_mode_is_a_config_error(tmp_path, capsys):

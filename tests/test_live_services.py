@@ -351,7 +351,8 @@ def test_live_pgwire_requires_tls_channel_binding():
 def test_live_binary_pg_types_load_through_casts(spark):
     """Every destination type the CLI streams as COPY BINARY loads a
     cast value the way Postgres reads it: one column per member of
-    BINARY_PG_TYPES, values checked as text in the server."""
+    BINARY_PG_TYPES, values checked as text in the server (an
+    unconstrained numeric keeps an exact source's scale)."""
     import datetime as dt
     from decimal import Decimal
 
@@ -372,7 +373,10 @@ def test_live_binary_pg_types_load_through_casts(spark):
         ("float4", "double", 1.5, "1.5"),
         ("float8", "double", -2.25, "-2.25"),
         ("numeric(8,3)", "decimal(6,2)", Decimal("-34.25"), "-34.25"),
-        ("date", "string", "1969-02-28", "1969-02-28"),
+        ("numeric", "decimal(6,2)", Decimal("1234.25"), "1234.25"),
+        ("numeric", "decimal(38,0)", Decimal(10**25), str(10**25)),
+        ("numeric", "bigint", 5, "5"),
+        ("date", "date", dt.date(1969, 2, 28), "1969-02-28"),
         ("timestamp", "timestamp", ts, "2024-02-29 12:34:56.789012"),
         ("timestamptz", "timestamp", ts, "2024-02-29 12:34:56.789012+00"),
         ("varchar(5)", "string", "abé", "abé"),
@@ -407,11 +411,13 @@ def test_live_binary_pg_types_load_through_casts(spark):
 
 def test_live_cli_drains_binary_with_casts_and_jsonb_as_text(
         spark, tmp_path, monkeypatch):
-    """``main()`` drains two batches into two tables of a real backend:
-    int4/numeric/date/text columns from int64/decimal/date/string
-    sources go as COPY BINARY with casts, and a table with a jsonb
-    column goes as TEXT. Row counts and checksums are asserted in the
-    server."""
+    """``main()`` drains two batches into three tables of a real
+    backend: int4/numeric/date/text columns from int64/decimal/date/
+    string sources go as COPY BINARY with casts, the numerics keeping
+    their source scale; a table with a jsonb column goes as TEXT, and
+    so does one whose timestamptz and numeric columns come from a
+    string and a double, which Postgres parses. Row counts and
+    checksums are asserted in the server."""
     import datetime as dt
     import hashlib
     import json
@@ -420,6 +426,9 @@ def test_live_cli_drains_binary_with_casts_and_jsonb_as_text(
     from s3_parquet_to_postgres_spark.__main__ import main
     from s3_parquet_to_postgres_spark.sinks import pgwire
     from s3_parquet_to_postgres_spark.sinks.copy import CopySink
+
+    def _md5(values) -> str:
+        return hashlib.md5(",".join(values).encode()).hexdigest()
 
     formats = []
     write = CopySink.write
@@ -430,12 +439,15 @@ def test_live_cli_drains_binary_with_casts_and_jsonb_as_text(
         (i, Decimal(f"{i * 7919 % 10**6 - 5 * 10**5}.{i % 100:02d}"),
          dt.date(1960, 1, 1) + dt.timedelta(days=i * 13),
          None if i % 7 == 0 else f"é{i}\t€",
-         json.dumps({"k": i, "s": f"é{i}"}))
+         json.dumps({"k": i, "s": f"é{i}"}),
+         Decimal(f"{i}{'0' * 25}"), f"2024-02-29 {i % 24:02d}:{i % 60:02d}:56",
+         i / 4)
         for i in range(n)
     ]
     src = spark.createDataFrame(
         rows, "o_id long, o_amount decimal(12,2), o_day date, "
-              "o_name string, o_doc string")
+              "o_name string, o_doc string, o_big decimal(38,0), "
+              "o_at string, o_ratio double")
     keys = []
     for b in range(2):
         path = tmp_path / f"batch{b}.parquet"
@@ -444,23 +456,34 @@ def test_live_cli_drains_binary_with_casts_and_jsonb_as_text(
     named = [r[3] for r in rows if r[3] is not None]
     tables = {
         "live_cli_bin": (
-            "binary", "id int4, amount numeric, day date, name text",
-            ["o_id", "o_amount", "o_day", "o_name"],
+            "binary",
+            "id int4, amount numeric, day date, name text, big numeric",
+            ["o_id", "o_amount", "o_day", "o_name", "o_big"],
             [("count(*)", n), ("sum(id)", n * (n - 1) // 2),
              ("sum(amount)", f"{sum(r[1] for r in rows)}"),
+             ("md5(string_agg(amount::text, ',' ORDER BY id))",
+              _md5(str(r[1]) for r in rows)),
+             ("sum(big)::text", str(n * (n - 1) // 2 * 10**25)),
              ("sum(day - date '1970-01-01')",
               sum((r[2] - dt.date(1970, 1, 1)).days for r in rows)),
              ("count(name)", len(named)),
-             ("md5(string_agg(name, ',' ORDER BY id))",
-              hashlib.md5(",".join(named).encode()).hexdigest())],
+             ("md5(string_agg(name, ',' ORDER BY id))", _md5(named))],
         ),
         "live_cli_json": (
             "text", "id int8, doc jsonb",
             ["o_id", "o_doc"],
             [("count(*)", n), ("sum((doc->>'k')::int)", n * (n - 1) // 2),
              ("md5(string_agg(doc->>'s', ',' ORDER BY id))",
-              hashlib.md5(",".join(f"é{i}" for i in range(n)).encode())
-              .hexdigest())],
+              _md5(f"é{i}" for i in range(n)))],
+        ),
+        "live_cli_parsed": (
+            "text", "id int8, at timestamptz, ratio numeric",
+            ["o_id", "o_at", "o_ratio"],
+            [("count(*)", n),
+             ("md5(string_agg(left(at::text, 19), ',' ORDER BY id))",
+              _md5(r[6] for r in rows)),
+             ("md5(string_agg(ratio::text, ',' ORDER BY id))",
+              _md5(str(r[7]) for r in rows))],
         ),
     }
     conn = pgwire.connect(PG)
