@@ -20,9 +20,12 @@ planner).
 
 Both formats share one write path. One ``mapInArrow`` job hands each
 task its partition as Arrow record batches. BINARY turns a whole batch
-into PGCOPY tuples with numpy (``encode_batch_binary``), so no row is
-ever pickled into a Python ``Row``; TEXT feeds the batch's columns to
-the per-row ``encode_rows`` (``encode_batch_text``). ``copy_expert``
+into PGCOPY tuples (``encode_batch_binary``): runs of null-free
+fixed-width fields become one packed numpy record per row, every other
+column an Arrow ``large_binary`` piece, and one Arrow
+``binary_join_element_wise`` concatenates each row's pieces, so no row
+is ever pickled into a Python ``Row``; TEXT feeds the batch's columns
+to the per-row ``encode_rows`` (``encode_batch_text``). ``copy_expert``
 reads the partition from a file object over header + encoded batches
 + trailer that encodes a batch only when it is read, so the partition
 is never held whole, and that counts the rows it hands out. Each task
@@ -30,7 +33,11 @@ yields its row count and the driver sums them: the count comes from
 the same single job as the COPY. Executors need pyarrow and numpy,
 which the package's Arrow kernels already require. The per-row binary
 encoder (``binary_encoders`` + ``encode_rows_binary``) stays as the
-reference the columnar one is tested against byte for byte.
+reference the columnar one is tested against byte for byte. Each COPY
+task first stops its Python worker from re-reading unchanged zip
+archives such as ``pyspark.zip`` at the start of every later task
+(``_reread_changed_zips_only``), about 0.2 CPU-s per task on CPython
+3.12 and older.
 
 The executor connection resolves in order: an injected factory
 (tests / alternative drivers), psycopg2 when the executor image has
@@ -282,80 +289,80 @@ def encode_batch_binary(batch) -> bytes:
     header/trailer), byte-identical to ``encode_rows_binary`` over the
     same rows.
 
-    Vectorized with numpy: each field's size is known from the column
-    buffers, so one row-major cumulative sum gives every field's
-    offset and each column is scattered into one output buffer.
-    Fixed-width columns are one big-endian ``astype``; date32 and
-    timestamp values are shifted from the Unix to the PG epoch;
-    strings and binary are gathered from the Arrow offset and data
-    buffers (``string``/``large_string``/``binary``/``large_binary``,
-    any slice offset); NULLs get a ``-1`` length header; decimals
-    alone go value by value through ``encode_numeric``.
+    Record runs joined by Arrow. Walking the columns in order, every
+    null-free fixed-width column adds its field (a constant ``>i4``
+    length and the big-endian value) to the current *record run*: one
+    packed numpy structured record per row, which starts with the
+    int16 field count. A column of any other kind (string, binary,
+    decimal, or fixed-width with NULLs in this batch) adds only its
+    ``>i4`` lengths (-1 for NULL) to the run, closes it, and adds its
+    values as a ``large_binary`` piece whose NULL slots are null. One
+    ``pyarrow.compute.binary_join_element_wise`` over the pieces, with
+    nulls skipped, then yields every row's tuple. date32 and
+    timestamp values are shifted from the Unix to the PG epoch, and
+    decimals alone go value by value through ``encode_numeric``.
 
     Takes the Arrow types Spark's Arrow conversion emits for the
-    types ``binary_encoders`` accepts, and raises TypeError on any
-    other. Timestamps are encoded as the instant the column holds
-    (microseconds since the Unix epoch, in UTC): Spark hands
-    ``mapInArrow`` UTC instants, whatever the session time zone,
-    while the row encoder renders a ``timestamp`` in the Python
+    types ``binary_encoders`` accepts (``string``/``large_string``/
+    ``binary``/``large_binary``, any slice offset), and raises
+    TypeError on any other. Timestamps are encoded as the instant the
+    column holds (microseconds since the Unix epoch, in UTC): Spark
+    hands ``mapInArrow`` UTC instants, whatever the session time
+    zone, while the row encoder renders a ``timestamp`` in the Python
     worker's local zone. The two agree when that zone is UTC, as in
     sessions this package builds; ``timestamp_ntz`` agrees always.
     """
     import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
 
-    n, k = batch.num_rows, batch.num_columns
+    n = batch.num_rows
     if n == 0:
         return b""
-    fields = [_arrow_field(col) for col in batch.columns]
-    sizes = np.empty((n, k + 1), np.int64)
-    sizes[:, 0] = 2  # int16 field count
-    for j, (lens, _) in enumerate(fields):
-        sizes[:, j + 1] = 4 + np.maximum(lens, 0)
-    starts = np.cumsum(sizes).reshape(n, k + 1) - sizes
-    out = np.empty(int(starts[-1, -1] + sizes[-1, -1]), np.uint8)
-    out[starts[:, :1] + np.arange(2)] = np.frombuffer(struct.pack(">h", k), np.uint8)
-    for j, (lens, blob) in enumerate(fields):
-        at = starts[:, j + 1]
-        out[at[:, None] + np.arange(4)] = lens.astype(">i4").view(np.uint8).reshape(n, 4)
-        valid = lens >= 0
-        at, lens = at[valid] + 4, lens[valid]
-        seg = np.cumsum(lens) - lens
-        out[np.repeat(at - seg, lens) + np.arange(len(blob))] = blob
-    return out.tobytes()
+    pieces, run = [], [(">i2", batch.num_columns)]
+    for col in batch.columns:
+        values, dtype = _fixed_values(col)
+        if dtype is not None and col.null_count == 0:
+            run += [(">i4", dtype.itemsize), (dtype, values)]
+            continue
+        piece = _binary_piece(col, values, dtype)
+        valid = piece.is_valid().to_numpy(zero_copy_only=False)
+        run.append((">i4", np.where(valid, np.diff(_offsets(piece)), -1)))
+        pieces += [_record_run(run, n), piece]
+        run = []
+    if run:
+        pieces.append(_record_run(run, n))
+    joined = pc.binary_join_element_wise(
+        *pieces, pa.scalar(b"", pa.large_binary()), null_handling="skip")
+    offs = _offsets(joined)
+    return joined.buffers()[2].slice(offs[0], offs[-1] - offs[0]).to_pybytes()
 
 
-def _arrow_field(col):
-    """One Arrow column -> (int64 field length per row, -1 for NULL;
-    uint8 concatenation of the non-NULL fields' bytes in row order)."""
+def _offsets(arr):
+    """A ``large_binary`` array's ``len(arr) + 1`` value offsets."""
+    import numpy as np
+
+    return np.frombuffer(arr.buffers()[1], np.int64,
+                         count=arr.offset + len(arr) + 1)[arr.offset:]
+
+
+def _fixed_values(col):
+    """A fixed-width Arrow column -> (its values as numpy, shifted to
+    the PG epoch, in row order; the big-endian PG dtype), or (None,
+    None) for a variable-width column. Raises TypeError on a type
+    ``encode_batch_binary`` does not take."""
     import numpy as np
     import pyarrow as pa
 
     n, off, t = len(col), col.offset, col.type
-    valid = (
-        np.ones(n, bool) if col.null_count == 0
-        else col.is_valid().to_numpy(zero_copy_only=False)
-    )
-    buffers = col.buffers()
     if pa.types.is_boolean(t):
-        bits = np.unpackbits(np.frombuffer(buffers[1], np.uint8), bitorder="little")
-        return np.where(valid, 1, -1), bits[off:off + n][valid]
+        bits = np.unpackbits(np.frombuffer(col.buffers()[1], np.uint8),
+                             bitorder="little")
+        return bits[off:off + n], np.dtype("u1")
     if (pa.types.is_string(t) or pa.types.is_large_string(t)
-            or pa.types.is_binary(t) or pa.types.is_large_binary(t)):
-        large = pa.types.is_large_string(t) or pa.types.is_large_binary(t)
-        offs = np.frombuffer(buffers[1], np.int64 if large else np.int32,
-                             count=off + n + 1)[off:]
-        data = np.frombuffer(buffers[2] or b"", np.uint8)
-        width = np.diff(offs).astype(np.int64)
-        lens = np.where(valid, width, -1)
-        if (lens == width).all():  # NULL slots span no bytes
-            return lens, data[offs[0]:offs[-1]]
-        kept, begin = width[valid], offs[:-1][valid]
-        seg = np.cumsum(kept) - kept
-        return lens, data[np.repeat(begin - seg, kept) + np.arange(kept.sum())]
-    if pa.types.is_decimal(t):
-        enc = [None if v is None else encode_numeric(v) for v in col.to_pylist()]
-        lens = np.array([-1 if e is None else len(e) for e in enc], np.int64)
-        return lens, np.frombuffer(b"".join(e for e in enc if e), np.uint8)
+            or pa.types.is_binary(t) or pa.types.is_large_binary(t)
+            or pa.types.is_decimal(t)):
+        return None, None
     if pa.types.is_timestamp(t) and t.unit == "us":
         src, dst, shift = "i8", ">i8", _PG_EPOCH_MICROS
     elif str(t) in _ARROW_FIXED:
@@ -363,9 +370,43 @@ def _arrow_field(col):
     else:
         raise TypeError(f"COPY BINARY: unsupported Arrow type {t}")
     with np.errstate(invalid="ignore"):  # float NaNs, quieted on purpose
-        values = np.frombuffer(buffers[1], src, count=off + n)[off:] - shift
-    return (np.where(valid, np.dtype(dst).itemsize, -1),
-            values.astype(dst)[valid].view(np.uint8))
+        values = np.frombuffer(col.buffers()[1], src, count=off + n)[off:] - shift
+    return values, np.dtype(dst)
+
+
+def _binary_piece(col, values, dtype):
+    """One column that leaves the record run -> a ``large_binary``
+    array of its PG field bytes per row, null where the column is."""
+    import numpy as np
+    import pyarrow as pa
+
+    if pa.types.is_decimal(col.type):
+        return pa.array([None if v is None else encode_numeric(v)
+                         for v in col.to_pylist()], pa.large_binary())
+    if dtype is None:
+        return col.cast(pa.large_binary())
+    n = len(col)
+    valid = col.is_valid().to_numpy(zero_copy_only=False)
+    return pa.Array.from_buffers(pa.large_binary(), n, [
+        pa.py_buffer(np.packbits(valid, bitorder="little")),
+        pa.py_buffer(np.arange(n + 1, dtype=np.int64) * dtype.itemsize),
+        pa.py_buffer(values.astype(dtype)),
+    ])
+
+
+def _record_run(run, n):
+    """``[(big-endian dtype, values or one scalar), ...]`` -> a
+    ``large_binary`` array whose value ``i`` is row ``i``'s packed
+    record of those fields, in that order."""
+    import numpy as np
+    import pyarrow as pa
+
+    recs = np.empty(n, [(f"f{i}", dt) for i, (dt, _) in enumerate(run)])
+    for i, (_, v) in enumerate(run):
+        recs[f"f{i}"] = v
+    return pa.Array.from_buffers(pa.large_binary(), n, [
+        None, pa.py_buffer(np.arange(n + 1, dtype=np.int64) * recs.dtype.itemsize),
+        pa.py_buffer(recs)])
 
 
 @dataclass
@@ -389,6 +430,12 @@ class CopySink:
     hands to Python, which measured as most of the executor CPU of a
     bulk COPY. The row cap still bounds a batch; it only passes
     the 64 MiB byte default when rows average more than 6.5 KiB.
+
+    Each task starts with ``_reread_changed_zips_only``: PySpark calls
+    ``importlib.invalidate_caches()`` before every task, which on
+    CPython 3.12 and older makes each zipimporter re-read its whole
+    archive directory; the helper keeps an unchanged archive's. It
+    runs in the worker only, never on the driver.
     """
 
     conn_string: str
@@ -427,6 +474,7 @@ class CopySink:
         def write_partition(batches: Iterator) -> Iterator:
             import pyarrow as pa
 
+            _reread_changed_zips_only()
             n = sink._copy_partition((encode(b), b.num_rows) for b in batches)
             yield pa.RecordBatch.from_pydict({"n": pa.array([n], pa.int64())})
 
@@ -455,6 +503,50 @@ class CopySink:
         with _transaction(self.conn_string, self.connection_factory) as cur:
             cur.copy_expert(self.copy_sql(), stream)
         return stream.rows
+
+
+def _reread_changed_zips_only() -> None:
+    """Make ``zipimporter.invalidate_caches`` re-read an archive's
+    directory only when the archive's ``(st_mtime_ns, st_size,
+    st_ino)`` changed since this process last read it. Idempotent.
+
+    The Python worker calls ``importlib.invalidate_caches()`` at the
+    start of every task. Up to CPython 3.12, each zipimporter then
+    re-reads its archive's whole directory in pure Python, and a
+    worker holds one zipimporter per package directory it imported
+    from ``pyspark.zip``: some 15 re-reads of 1,328 entries, about
+    0.2 CPU-s per task. A rewritten or new archive is still read
+    again; an unchanged one keeps the directory already cached.
+    Where ``zipimporter`` already invalidates lazily (it reads its
+    directory through ``_get_files``, CPython 3.13+), this does
+    nothing. Installed from the COPY task, so it takes effect from
+    the worker's next task on.
+    """
+    import os
+    import zipimport
+
+    cls = zipimport.zipimporter
+    if hasattr(cls, "_get_files") or hasattr(cls.invalidate_caches, "reread"):
+        return
+    reread = cls.invalidate_caches
+    read_at: dict[str, tuple[int, int, int]] = {}
+
+    def invalidate_caches(self):
+        try:
+            st = os.stat(self.archive)
+        except OSError:
+            read_at.pop(self.archive, None)
+            return reread(self)
+        key = (st.st_mtime_ns, st.st_size, st.st_ino)
+        files = zipimport._zip_directory_cache.get(self.archive)
+        if files is not None and read_at.get(self.archive) == key:
+            self._files = files
+            return
+        read_at[self.archive] = key
+        reread(self)
+
+    invalidate_caches.reread = reread
+    cls.invalidate_caches = invalidate_caches
 
 
 class _CopyStream:

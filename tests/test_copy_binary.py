@@ -10,6 +10,7 @@ so is the TEXT batch encoder (``encode_batch_text``) to the per-row
 
 from __future__ import annotations
 
+import itertools
 import math
 import struct
 import time
@@ -344,6 +345,39 @@ def test_batch_encoder_matches_row_encoder_every_type():
         assert sliced.column(0).offset > 0
         assert encode_batch_binary(sliced) == _row_reference(sliced)
         assert encode_batch_binary(_large(sliced)) == _row_reference(sliced)
+
+
+_FIXED = [j for j, (n, _, _) in enumerate(_TYPES) if n not in ("str", "bin", "dec")]
+_VARIABLE = [j for j, (n, _, _) in enumerate(_TYPES) if n in ("str", "bin", "dec")]
+_DEC = _VARIABLE[-1]
+_ORDERS = {
+    "fixed_first": _FIXED + _VARIABLE,
+    "variable_first": _VARIABLE + _FIXED,
+    "alternating": [j for pair in itertools.zip_longest(_FIXED, _VARIABLE)
+                    for j in pair if j is not None],
+    "variable_alternating": [j for pair in itertools.zip_longest(_VARIABLE, _FIXED)
+                             for j in pair if j is not None],
+    "decimal_first": [_DEC] + [j for j in range(len(_TYPES)) if j != _DEC],
+    "decimal_last": [j for j in range(len(_TYPES)) if j != _DEC] + [_DEC],
+}
+
+
+@pytest.mark.parametrize("order", _ORDERS.values(), ids=_ORDERS.keys())
+def test_batch_encoder_parity_in_any_column_order(order):
+    """Record runs end at every variable-width or nullable column, so
+    the encoded bytes depend on where those columns sit. Rows 2-3 and
+    row 0 hold no NULL, so their slices keep fixed-width columns in
+    the runs; the others make every column nullable."""
+    whole = _batch(_EDGE_ROWS)
+    batch = pa.RecordBatch.from_arrays(
+        [whole.column(j) for j in order], names=[_TYPES[j][0] for j in order])
+    encoders = binary_encoders(StructType([_SPARK_SCHEMA.fields[j] for j in order]))
+    for sliced in (batch, batch.slice(2, 2), batch.slice(0, 1),
+                   batch.slice(1), batch.slice(3, 3)):
+        rows = list(zip(*(c.to_pylist() for c in sliced.columns)))
+        want = b"".join(encode_rows_binary(rows, encoders))
+        assert encode_batch_binary(sliced) == want
+        assert encode_batch_binary(_large(sliced)) == want
 
 
 def test_batch_encoder_all_null_columns():

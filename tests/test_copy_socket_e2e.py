@@ -20,6 +20,7 @@ from __future__ import annotations
 import datetime
 import io
 import struct
+import zipimport
 from decimal import Decimal
 
 import pytest
@@ -250,6 +251,8 @@ def test_copy_write_is_one_job_and_returns_count(spark, tmp_path, fmt):
             sc.setLocalProperty("spark.jobGroup.id", None)
         assert n == 1000
         assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+        # the zip-directory helper runs in the Python workers only
+        assert not hasattr(zipimport.zipimporter.invalidate_caches, "reread")
         copies = srv.committed_copies()
         if fmt == "binary":
             blob = b"".join(_strip_frames(c) for c in copies)

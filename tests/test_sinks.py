@@ -1,16 +1,23 @@
 """COPY-encoder unit tests (the pure-Python piece of the Postgres COPY
 sink), the destination column check, and the staging-swap SQL. The
 socket half runs against the fake wire server in
-test_copy_socket_e2e.py and test_cli.py."""
+test_copy_socket_e2e.py and test_cli.py. The COPY task's zip
+directory helper is tested here on a zip package of its own."""
 
 from __future__ import annotations
 
+import importlib
+import os
+import sys
+import zipfile
+import zipimport
 from datetime import date, datetime
 
 import pytest
 
 from s3_parquet_to_postgres_spark.sinks.copy import (
     SchemaValidationError,
+    _reread_changed_zips_only,
     check_destination_columns,
     encode_rows,
 )
@@ -146,3 +153,66 @@ def test_staged_load_fails_cleanly_without_psycopg2():
     assert staged.staging_table == "t__staging"
     with pytest.raises(OSError):
         staged.prepare()
+
+
+# -- zip directories re-read only when the archive changed -------------------
+
+def _write_zip(path, modules: dict[str, str]) -> None:
+    tmp = path.with_suffix(".tmp")
+    with zipfile.ZipFile(tmp, "w") as z:
+        for name, src in modules.items():
+            z.writestr(name, src)
+    os.replace(tmp, path)
+
+
+@pytest.mark.skipif(hasattr(zipimport.zipimporter, "_get_files"),
+                    reason="this zipimport re-reads directories lazily")
+def test_zip_directory_reread_only_when_the_archive_changes(tmp_path, monkeypatch):
+    archive = tmp_path / "zipped_pkg.zip"
+    modules = {"zipped_pkg/__init__.py": "", "zipped_pkg/sub/__init__.py": "",
+               "zipped_pkg/sub/a.py": "A = 1\n"}
+    _write_zip(archive, modules)
+    monkeypatch.syspath_prepend(str(archive))
+    cls = zipimport.zipimporter
+    try:
+        assert importlib.import_module("zipped_pkg.sub.a").A == 1
+        importers = [f for f in sys.path_importer_cache.values()
+                     if isinstance(f, cls) and f.archive == str(archive)]
+        assert len(importers) >= 2  # the archive root and zipped_pkg/
+
+        reads = []
+        read_directory = zipimport._read_directory
+        monkeypatch.setattr(zipimport, "_read_directory",
+                            lambda a: reads.append(a) or read_directory(a))
+        monkeypatch.setattr(cls, "invalidate_caches", cls.invalidate_caches)
+        _reread_changed_zips_only()
+        patched = cls.invalidate_caches
+        _reread_changed_zips_only()
+        assert cls.invalidate_caches is patched  # idempotent
+
+        importlib.invalidate_caches()  # the first call records the archive
+        assert reads.count(str(archive)) == 1
+        reads.clear()
+        importlib.invalidate_caches()
+        importlib.invalidate_caches()
+        assert str(archive) not in reads
+
+        _write_zip(archive, {**modules, "zipped_pkg/sub/b.py": "B = 2\n"})
+        importlib.invalidate_caches()
+        assert reads.count(str(archive)) == 1
+        assert importlib.import_module("zipped_pkg.sub.b").B == 2
+    finally:
+        for name in [m for m in sys.modules if m.split(".")[0] == "zipped_pkg"]:
+            del sys.modules[name]
+        for path in [p for p in sys.path_importer_cache if p.startswith(str(archive))]:
+            del sys.path_importer_cache[path]
+        zipimport._zip_directory_cache.pop(str(archive), None)
+
+
+def test_zip_helper_leaves_a_lazy_zipimporter_alone(monkeypatch):
+    cls = zipimport.zipimporter
+    monkeypatch.setattr(cls, "_get_files", lambda self: {}, raising=False)
+    lazy = cls.invalidate_caches
+    monkeypatch.setattr(cls, "invalidate_caches", lazy)
+    _reread_changed_zips_only()
+    assert cls.invalidate_caches is lazy
