@@ -8,6 +8,9 @@ order-insensitive value-hash -> CORRECTNESS_r{N}.json).
 Implementation lives in s3_parquet_to_postgres_spark/ (plans/ holds
 the query catalog; operators/, sources/, sinks/ the engine
 itself).
+
+The driver's session is used as it is handed over: no entry writes a
+conf on it, and no entry's epoch arithmetic reads its time zone.
 """
 
 from __future__ import annotations
@@ -22,7 +25,6 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from s3_parquet_to_postgres_spark.plans import all_oracle_sql, all_queries
 from s3_parquet_to_postgres_spark.plans.tpch import q3_shipping_priority
-from s3_parquet_to_postgres_spark.session import apply_required_confs
 
 SMOKE_SF_DIR = "/root/testdata/sf0.001"
 
@@ -34,21 +36,12 @@ def entry(spark: SparkSession) -> DataFrame:
     join + aggregation + top-k -- one query touching scan, pushdown,
     broadcast, shuffle, agg, sort, limit.
     """
-    apply_required_confs(spark)
     return q3_shipping_priority(spark, SMOKE_SF_DIR)
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """One entry per implemented operator from SURVEY.md §2."""
-    wrapped = {}
-    for name, fn in all_queries().items():
-        def make(f):
-            def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-                apply_required_confs(spark)
-                return f(spark, sf_dir)
-            return run
-        wrapped[name] = make(fn)
-    return wrapped
+    return all_queries()
 
 
 def oracle_sql() -> dict[str, str]:

@@ -1,21 +1,24 @@
 """Test-table catalog: canonical loaders for the driver's parquet tables.
 
-The one non-trivial load is ``events``: its ``ts`` column is parquet
-TIMESTAMP(NANOS,false), which Spark cannot represent. With
-``spark.sql.legacy.parquet.nanosAsLong=true`` the raw int64 surfaces as
-bigint and we convert to microsecond TIMESTAMP_NTZ here, truncating the
-same way DuckDB's ``CAST(ts_ns AS TIMESTAMP)`` does so oracle
-comparisons line up (verified: identical to DuckDB at sf0.001).
-
-That conf is owned by the session (``session._BASE_CONFS``, applied by
-``build_session`` and ``apply_required_confs``); loading a table never
-writes session state.
+The one non-trivial load is ``events``: its ``ts`` column has shipped
+as parquet TIMESTAMP(MICROS) and as TIMESTAMP(NANOS,false), which Spark
+cannot represent and refuses to read (``PARQUET_TYPE_ILLEGAL``) unless
+``spark.sql.legacy.parquet.nanosAsLong`` is set. ``read_table`` infers
+the schema with that conf set inside ``session.conf_scope`` (a NANOS
+column infers as bigint), then reads with the inferred schema outside
+the scope, so a load works in any session and leaves its confs as it
+found them. Both units become microsecond TIMESTAMP_NTZ here, a NANOS
+value truncated the same way DuckDB's read of it is, so oracle
+comparisons line up.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from .functions.epoch import epoch_us, ntz_from_epoch_us
+from .session import conf_scope
 
 TABLES = (
     "region",
@@ -34,18 +37,20 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one synthetic table; normalizes events.ts to microseconds."""
     path = f"{sf_dir.rstrip('/')}/{name}.parquet"
     if name == "events":
-        df = spark.read.parquet(path)
-        # The generator has shipped ts as TIMESTAMP(NANOS) (surfacing
-        # as bigint under nanosAsLong) and as TIMESTAMP(MICROS);
-        # normalize both to microsecond TIMESTAMP_NTZ so plans and
-        # DuckDB oracles see one type. `div` floors like DuckDB's
-        # ns->us cast.
+        nanos = {"spark.sql.legacy.parquet.nanosAsLong": "true"}
+        with conf_scope(spark, nanos):
+            schema = spark.read.parquet(path).schema
+        df = spark.read.schema(schema).parquet(path)
+        # Normalize both units to microsecond TIMESTAMP_NTZ so plans
+        # and DuckDB oracles see one type; an LTZ read (a session that
+        # does not infer NTZ) holds the stored micros as an instant.
+        # `div` truncates toward zero like DuckDB's ns->us read.
         ts_type = df.schema["ts"].dataType.simpleString()
         if ts_type == "bigint":
-            return df.withColumn(
-                "ts", F.expr("to_timestamp_ntz(timestamp_micros(ts div 1000))")
-            )
-        if ts_type == "timestamp":
-            return df.withColumn("ts", F.col("ts").cast("timestamp_ntz"))
-        return df
+            us = F.expr("ts div 1000")
+        elif ts_type == "timestamp":
+            us = epoch_us(df, "ts")
+        else:
+            return df
+        return df.withColumn("ts", ntz_from_epoch_us(us))
     return spark.read.parquet(path)

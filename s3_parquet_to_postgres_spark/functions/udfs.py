@@ -27,6 +27,8 @@ from pyspark.sql.types import (
 )
 from pyspark.sql.window import Window
 
+from .epoch import epoch_us
+
 # Spark pickles module-level functions by REFERENCE, so Python workers
 # would need this package importable (PYTHONPATH), which isn't true
 # when the driver embeds us from an arbitrary cwd. Register the module
@@ -83,7 +85,7 @@ def grouped_ols_slope(events: DataFrame) -> DataFrame:
     key, each group materialized as one Arrow batch -- so group
     cardinality bounds memory, the right trade for wide-but-few groups
     (per-entity model fits, calibrations)."""
-    us = F.unix_micros(F.col("ts").cast("timestamp"))
+    us = epoch_us(events, "ts")
     first_us = F.min(us).over(Window.partitionBy("event_type"))
     prepared = events.select(
         "event_type",

@@ -49,6 +49,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..functions.epoch import epoch_us
+
 _BKT = "__cw_bucket"
 _LOC = "__cw_local"
 _OFF = "__cw_offset"
@@ -87,10 +89,7 @@ def _bucketed(df: DataFrame, ts_col: str, bucket_width_sec: float) -> DataFrame:
     if width_us <= 0:
         raise ValueError(f"bucket_width_sec must be > 0, got {bucket_width_sec}")
     return df.withColumn(
-        _BKT,
-        F.floor(
-            F.unix_micros(F.col(ts_col).cast("timestamp")) / F.lit(width_us)
-        ).cast("long"),
+        _BKT, F.floor(epoch_us(df, ts_col) / F.lit(width_us)).cast("long")
     )
 
 
@@ -211,7 +210,7 @@ def sessionize_chunked(
     gap_us = int(gap_sec * 1_000_000)
     order = [F.col(ts_col).asc()] + [F.col(c).asc() for c in tiebreak_cols]
     b = _bucketed(df, ts_col, bucket_width_sec).withColumn(
-        "__cw_us", F.unix_micros(F.col(ts_col).cast("timestamp"))
+        "__cw_us", epoch_us(df, ts_col)
     )
 
     w_local = Window.partitionBy(*partition_cols, _BKT).orderBy(*order)
@@ -472,10 +471,7 @@ def chunked_frame_list(
             ],
             F.col("__cw_row").alias("__cw_r"),
         )
-        sub = F.floor(
-            F.unix_micros(F.col(ts_col).cast("timestamp"))
-            / F.lit(sub_width_us)
-        ).cast("long")
+        sub = F.floor(epoch_us(df, ts_col) / F.lit(sub_width_us)).cast("long")
         per_sub = (
             b.withColumn("__cw_sub", sub)
             .groupBy(*partition_cols, _BKT, "__cw_sub")
@@ -688,7 +684,7 @@ def chunked_range_agg(
     # hand-written rangeBetween(-N, 0) of the same nominal width.
     range_us = round(range_sec * 1_000_000)
     b = _bucketed(df, ts_col, bucket_width_sec).withColumn(
-        "__cw_us", F.unix_micros(F.col(ts_col).cast("timestamp"))
+        "__cw_us", epoch_us(df, ts_col)
     )
     own = b.withColumn("__cw_ghost", F.lit(False))
     ghost = b.withColumn(_BKT, F.col(_BKT) + F.lit(1)).withColumn(

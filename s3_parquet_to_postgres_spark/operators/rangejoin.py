@@ -37,7 +37,7 @@ def point_in_interval_join(
     start <= point < end, via bucket equi-join.
 
     Numeric or epoch-converted columns; callers convert timestamps with
-    unix_micros first. Output: all columns of both inputs.
+    functions.epoch.epoch_us first. Output: all columns of both inputs.
     """
     if bucket_width <= 0:
         raise ValueError(f"bucket_width must be > 0, got {bucket_width}")

@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..functions import dround, dsum, md5_unit, sql_dround, sql_dsum
+from ..functions.epoch import epoch_us
 from ..functions.numeric import sint, sql_md5_unit
 from ..operators.pairs import bucket_pairs
 from .base import QuerySpec, t
@@ -475,10 +476,7 @@ def scd2_user_state_chunked(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("prev_type").isNull()
             | (F.col("event_type") != F.col("prev_type"))
         )
-        .withColumn(
-            "__rev_ts",
-            F.timestamp_micros(-F.unix_micros(F.col("ts").cast("timestamp"))),
-        )
+        .withColumn("__rev_ts", F.timestamp_micros(-epoch_us(e, "ts")))
         .withColumn("__rev_id", -F.col("event_id"))
     )
     closed = chunked_lag(

@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..functions import dround, dsum, sql_dround, sql_dsum
+from ..functions.epoch import epoch_us, ntz_from_epoch_us
 from ..operators import dedup as D
 from ..operators import multimodal as M
 from ..operators import similarity as S
@@ -2194,9 +2195,7 @@ def event_lookback_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = t(spark, sf_dir, "events").filter(
         F.col("event_type").isin("click", "purchase")
     )
-    # parquet ts is TIMESTAMP_NTZ; unix_micros wants TIMESTAMP (the
-    # session zone is UTC, so the reinterpretation is value-stable)
-    us = F.unix_micros(F.col("ts").cast("timestamp"))
+    us = epoch_us(e, "ts")
     click_us = F.when(F.col("event_type") == "click", us)
     w = (
         Window.partitionBy("user_id")
@@ -2217,10 +2216,10 @@ def event_lookback_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.date_format("ts", fmt).alias("purchase_ts"),
         F.col("__n_clicks").cast("long").alias("n_clicks_1h"),
         F.date_format(
-            F.timestamp_micros(F.col("__first_us")), fmt
+            ntz_from_epoch_us(F.col("__first_us")), fmt
         ).alias("first_click_ts"),
         F.date_format(
-            F.timestamp_micros(F.col("__last_us")), fmt
+            ntz_from_epoch_us(F.col("__last_us")), fmt
         ).alias("last_click_ts"),
     )
 
@@ -2272,7 +2271,7 @@ def event_lookback_attribution_chunked(
     e = t(spark, sf_dir, "events").filter(
         F.col("event_type").isin("click", "purchase")
     )
-    us = F.unix_micros(F.col("ts").cast("timestamp"))
+    us = epoch_us(e, "ts")
     click_us = F.when(F.col("event_type") == "click", us)
     scored = chunked_range_agg(
         e, ["user_id"], "ts",
@@ -2290,10 +2289,10 @@ def event_lookback_attribution_chunked(
         F.date_format("ts", fmt).alias("purchase_ts"),
         F.col("__n_clicks").cast("long").alias("n_clicks_1h"),
         F.date_format(
-            F.timestamp_micros(F.col("__first_us")), fmt
+            ntz_from_epoch_us(F.col("__first_us")), fmt
         ).alias("first_click_ts"),
         F.date_format(
-            F.timestamp_micros(F.col("__last_us")), fmt
+            ntz_from_epoch_us(F.col("__last_us")), fmt
         ).alias("last_click_ts"),
     )
 
@@ -3299,10 +3298,9 @@ def event_pattern_match_chunked(spark: SparkSession, sf_dir: str) -> DataFrame:
     lead chain assembled by the chunk-and-stitch bounded-frame
     operator under REVERSED sort keys (PLANS.md hot-key table: lead =
     lag mirrored). The timeline is re-keyed by
-    (timestamp_micros(-unix_micros(ts)), -event_id) — a strictly
-    order-reversing, value-preserving transform (the NTZ→TZ cast
-    feeding unix_micros is a fixed monotonic bijection under the
-    session's pinned UTC zone, session.py:35) — so
+    (timestamp_micros(-epoch_us(ts)), -event_id) — a strictly
+    order-reversing, value-preserving transform in any session time
+    zone (functions/epoch.py) — so
     `chunked_frame_list` over ROWS 3 PRECEDING..CURRENT in the
     reversed order collects exactly [t+3?, t+2?, t+1?, current] in
     one bounded-task pass: lead(j) is the struct at 0-based index
@@ -3316,11 +3314,10 @@ def event_pattern_match_chunked(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from ..operators.chunked_window import chunked_frame_list
 
-    e = t(spark, sf_dir, "events").select(
+    ev = t(spark, sf_dir, "events")
+    e = ev.select(
         "user_id", "ts", "event_id", "event_type",
-        F.timestamp_micros(
-            -F.unix_micros(F.col("ts").cast("timestamp"))
-        ).alias("__rev_ts"),
+        F.timestamp_micros(-epoch_us(ev, "ts")).alias("__rev_ts"),
         (-F.col("event_id")).alias("__rev_id"),
     )
     framed = chunked_frame_list(

@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..functions import dround, md5_unit
+from ..functions.epoch import epoch_day, epoch_us
 from ..functions.numeric import sql_md5_unit
 from ..session import eager_build_scope
 from .base import QuerySpec, size_scaled_partitions, t
@@ -1192,11 +1193,8 @@ def event_bot_signals(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle. Gap moments are exact BIGINTs (seconds; squares bounded
     far under 2^63), so only the final burstiness is quantized.
     """
-    e = t(spark, sf_dir, "events").select(
-        "user_id",
-        F.unix_micros(F.col("ts").cast("timestamp")).alias("us"),
-        "event_id",
-    )
+    ev = t(spark, sf_dir, "events")
+    e = ev.select("user_id", epoch_us(ev, "ts").alias("us"), "event_id")
     w = Window.partitionBy("user_id").orderBy(F.asc("us"), F.asc("event_id"))
     gaps = e.withColumn(
         "gap_s",
@@ -1218,14 +1216,12 @@ def _bot_signals_from_gaps(
         F.sum(F.col("gap_s") * F.col("gap_s")).alias("sum_gap2"),
         F.min("gap_s").alias("min_gap_s"),
     )
+    ev = t(spark, sf_dir, "events")
     per_min = (
-        t(spark, sf_dir, "events")
-        .groupBy(
+        ev.groupBy(
             "user_id",
-            F.floor(
-                F.unix_micros(F.col("ts").cast("timestamp"))
-                / F.lit(60000000.0)
-            ).cast("long").alias("minute"),
+            F.floor(epoch_us(ev, "ts") / F.lit(60000000.0))
+            .cast("long").alias("minute"),
         )
         .agg(F.count("*").alias("m"))
         .groupBy("user_id")
@@ -1260,19 +1256,16 @@ def event_bot_signals_chunked(spark: SparkSession, sf_dir: str) -> DataFrame:
     the thing it detects: a bot firehosing events at one user_id is
     both the row-count pathology and the signal. Ordering note: the
     plain entry sorts by (us, event_id) and the chunked operator by
-    (ts, event_id) — identical orders, since us = unix_micros(ts)
-    under the session's pinned UTC zone is strictly monotonic in ts.
+    (ts, event_id) — identical orders, since us = epoch_us(ts) is
+    strictly monotonic in ts in any session time zone.
     Value copying only, then the VERBATIM shared readout
     (`_bot_signals_from_gaps`) — shares EVENT_BOT_SIGNALS_SQL, so the
     driver's value-hash proves bit-equality at catalog level.
     """
     from ..operators.chunked_window import chunked_lag
 
-    e = t(spark, sf_dir, "events").select(
-        "user_id", "ts",
-        F.unix_micros(F.col("ts").cast("timestamp")).alias("us"),
-        "event_id",
-    )
+    ev = t(spark, sf_dir, "events")
+    e = ev.select("user_id", "ts", epoch_us(ev, "ts").alias("us"), "event_id")
     gaps = (
         chunked_lag(
             e, ["user_id"], "ts", "us", out="prev_us",
@@ -1361,11 +1354,9 @@ def table_drift_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
     split is a broadcast single-row aggregate. Nothing grows with the
     stream.
     """
-    e = t(spark, sf_dir, "events").select(
-        F.floor(
-            F.unix_micros(F.col("ts").cast("timestamp"))
-            / F.lit(86400000000.0)
-        ).cast("long").alias("day"),
+    ev = t(spark, sf_dir, "events")
+    e = ev.select(
+        epoch_day(ev, "ts").alias("day"),
         F.least(
             F.greatest(
                 F.floor((F.col("value") - F.lit(_PSI_LO))
@@ -1485,12 +1476,10 @@ def ml_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
         ntile_from_row_number,
         release_pinned,
     )
-    e = t(spark, sf_dir, "events").select(
+    ev = t(spark, sf_dir, "events")
+    e = ev.select(
         "user_id",
-        F.floor(
-            F.unix_micros(F.col("ts").cast("timestamp"))
-            / F.lit(86400000000.0)
-        ).cast("long").alias("day"),
+        epoch_day(ev, "ts").alias("day"),
         F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long").alias("vq"),
     )
     per_user = e.groupBy("user_id").agg(
@@ -1692,11 +1681,9 @@ def event_seasonality(spark: SparkSession, sf_dir: str) -> DataFrame:
     both engines derive it with pure integer arithmetic — no calendar
     functions with engine-specific week conventions.
     """
-    e = t(spark, sf_dir, "events").select(
-        F.floor(
-            F.unix_micros(F.col("ts").cast("timestamp"))
-            / F.lit(86400000000.0)
-        ).cast("long").alias("day"),
+    ev = t(spark, sf_dir, "events")
+    e = ev.select(
+        epoch_day(ev, "ts").alias("day"),
         F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long").alias("vq"),
     )
     c = e.groupBy(((F.col("day") + 4) % 7).alias("dow")).agg(
@@ -2151,12 +2138,10 @@ def event_forecast_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
     rollup and the moment aggregate share the user partitioning; the
     per-user model is closed-form — no iteration, no join.
     """
-    e = t(spark, sf_dir, "events").select(
+    ev = t(spark, sf_dir, "events")
+    e = ev.select(
         "user_id",
-        F.floor(
-            F.unix_micros(F.col("ts").cast("timestamp"))
-            / F.lit(86400000000.0)
-        ).cast("long").alias("day"),
+        epoch_day(ev, "ts").alias("day"),
         F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long").alias("vq"),
     )
     daily = e.groupBy("user_id", "day").agg(F.sum("vq").alias("v"))
@@ -2744,9 +2729,8 @@ def table_drift_ks(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Midpoint in exact epoch micros: engines disagree on halving a
     # month-scale INTERVAL (day components round differently), but
     # (us0 + us1) DIV 2 is the same integer everywhere.
-    e = t(spark, sf_dir, "events").withColumn(
-        "us", F.unix_micros(F.col("ts").cast("timestamp"))
-    )
+    ev = t(spark, sf_dir, "events")
+    e = ev.withColumn("us", epoch_us(ev, "ts"))
     span = e.agg(
         ((F.min("us") + F.max("us")) / F.lit(2))
         .cast("long")

@@ -16,6 +16,7 @@ from pyspark.sql.window import Window
 
 from ..config import JobSpec, ProjectionSpec, SinkSpec, SourceSpec
 from ..functions import dround, dsum, sint, sql_dround, sql_dsum
+from ..functions.epoch import epoch_us, ntz_from_epoch_us
 from ..operators.bloom import bloom_filter_join
 from ..pipeline import transform
 from .base import QuerySpec, t
@@ -1501,16 +1502,9 @@ def join_interval_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
             s.alias(f"{p}_s"),
             end.alias(f"{p}_e"),
         )
-        # parquet ts is TIMESTAMP_NTZ; unix_micros wants TIMESTAMP
         bkt = F.sequence(
-            F.floor(
-                F.unix_micros(F.col(f"{p}_s").cast("timestamp"))
-                / F.lit(300_000_000)
-            ),
-            F.floor(
-                F.unix_micros(F.col(f"{p}_e").cast("timestamp"))
-                / F.lit(300_000_000)
-            ),
+            F.floor(epoch_us(d, f"{p}_s") / F.lit(300_000_000)),
+            F.floor(epoch_us(d, f"{p}_e") / F.lit(300_000_000)),
         )
         return d.withColumn("bkt", F.explode(bkt))
 
@@ -1801,15 +1795,12 @@ def scalar_timestamp(spark: SparkSession, sf_dir: str) -> DataFrame:
     timestamp at src/runner.rs:326-330). This entry pins the complete
     semantics we implement INSTEAD of that stub. All columns are
     strings/BIGINTs/booleans per the catalog's render rules; epoch
-    math is exact integer microseconds (session TZ = UTC on both
-    engines). Narrow map, zero shuffle.
+    math is exact integer microseconds of the naive wall clock on both
+    engines, whatever the session time zone. Narrow map, zero shuffle.
     """
     e = t(spark, sf_dir, "events")
     fmt = "yyyy-MM-dd HH:mm:ss.SSSSSS"
-    # events.ts reads as TIMESTAMP_NTZ; with the session TZ pinned to
-    # UTC (session.py) the NTZ->LTZ cast is wall-clock identity, so
-    # unix_micros is the naive epoch both engines agree on.
-    micros = F.unix_micros(F.col("ts").cast("timestamp"))
+    micros = epoch_us(e, "ts")
     return e.select(
         "event_id",
         F.date_format("ts", fmt).alias("ts_str"),
@@ -1828,9 +1819,7 @@ def scalar_timestamp(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).cast("long").alias("secs_since_midnight"),
         F.dayofweek("ts").isin(1, 7).alias("is_weekend"),
         F.quarter("ts").cast("long").alias("qtr"),
-        (
-            F.timestamp_micros(micros).cast("timestamp_ntz") == F.col("ts")
-        ).alias("roundtrip_ok"),
+        (ntz_from_epoch_us(micros) == F.col("ts")).alias("roundtrip_ok"),
     )
 
 

@@ -1,10 +1,15 @@
-"""SparkSession factory.
+"""SparkSession factory and scoped conf writes.
 
-One place to encode the scale posture: AQE on (runtime coalescing +
+``build_session`` encodes the scale posture of the sessions the engine
+creates itself (CLI, tests, benchmarks): AQE on (runtime coalescing +
 skew-join splitting), Arrow for the few pandas-UDF paths, UTC session
 time so timestamp renderings are environment-independent, and the
-legacy nanos-as-long switch because the `events` table carries
-TIMESTAMP(NANOS) which vanilla Spark refuses to read.
+legacy nanos-as-long switch for parquet TIMESTAMP(NANOS).
+
+A session the engine is handed (``__spark_entry__``) is used as it is
+found: plans write none of these confs on it, and a step that needs a
+conf sets it through ``conf_scope``, which puts the session back as it
+was.
 
 On a real cluster the same builder is used with a different master and
 shuffle-partition count; nothing else in the engine depends on local
@@ -16,7 +21,6 @@ from __future__ import annotations
 import os
 from contextlib import contextmanager
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import SparkSession
 
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
@@ -35,8 +39,8 @@ _BASE_CONFS: dict[str, str] = {
     "spark.sql.execution.arrow.pyspark.enabled": "true",
     # Deterministic timestamp rendering regardless of host TZ.
     "spark.sql.session.timeZone": "UTC",
-    # events.parquet stores TIMESTAMP(NANOS,false); Spark has no ns
-    # type, so read the raw int64 and convert explicitly (catalog.py).
+    # Spark has no ns type: a parquet TIMESTAMP(NANOS) column reads as
+    # its raw int64 (catalog.read_table scopes this for `events` itself).
     "spark.sql.legacy.parquet.nanosAsLong": "true",
     # Small-dim broadcast threshold: region/nation/supplier/part are
     # all dimension-sized even at 100 TB fact scale.
@@ -96,7 +100,8 @@ def conf_scope(spark: SparkSession, confs: dict[str, str]):
     applies) is unset again, so ``spark.conf.getAll`` leaves the scope
     exactly as it entered it, with no default pinned as an explicit
     setting. This is the one restore path for every scoped conf write
-    in the engine (``eager_build_scope``, ``CopySink.write``).
+    in the engine (``eager_build_scope``, ``CopySink.write``,
+    ``catalog.read_table``'s schema inference).
 
     Confs are session-wide, so the same thread-safety caveat as
     ``eager_build_scope`` applies.
@@ -121,12 +126,12 @@ def eager_build_scope(
     """AQE off for the duration of a plan-construction-time eager build
     (``localCheckpoint`` + the stats/count job that materializes it).
 
-    This is the ONLY code in the engine that writes a session conf
-    while a plan is built. It writes through ``conf_scope``, the one
-    conf writer outside session setup, so both confs it touches are
-    restored (or unset, if the caller never set them) on exit,
-    exception or not, and a construction leaves the session as it
-    found it.
+    Plan construction writes session confs only here and in
+    ``catalog.read_table``'s schema inference, both through
+    ``conf_scope``, the one conf writer outside session setup, so
+    every conf touched is restored (or unset, if the caller never set
+    it) on exit, exception or not, and a construction leaves the
+    session as it found it.
 
     Two reasons, both measured (r10 ml_logreg_train, r11 dedup/graph):
 
@@ -162,17 +167,3 @@ def eager_build_scope(
     with conf_scope(spark, scoped):
         yield
 
-
-def apply_required_confs(spark: SparkSession) -> SparkSession:
-    """Apply the runtime-settable subset of base confs to an existing
-    session (``__spark_entry__`` is handed a pre-built SparkSession,
-    whose static confs are already fixed; the rest are dynamic)."""
-    for k, v in _BASE_CONFS.items():
-        try:
-            spark.conf.set(k, v)
-        except AnalysisException as e:
-            # A static conf (spark.sql.codegen.cache.maxEntries) on a
-            # live session: keep whatever the session has.
-            if e.getCondition() != "CANNOT_MODIFY_STATIC_CONFIG":
-                raise
-    return spark

@@ -7,6 +7,7 @@ from __future__ import annotations
 import math
 
 import duckdb
+import numpy as np
 
 from s3_parquet_to_postgres_spark.catalog import TABLES
 
@@ -23,6 +24,10 @@ def duck_connection(sf_dir: str) -> duckdb.DuckDBPyConnection:
 def _norm_value(v):
     if v is None:
         return "<null>"
+    if isinstance(v, np.floating):
+        # Exact widening: an Arrow float32 array element renders like
+        # the Python float that toPandas yields with Arrow off.
+        v = float(v)
     if isinstance(v, float):
         if math.isnan(v):
             return "<nan>"

@@ -1,19 +1,26 @@
 """Every declared query with an oracle must match DuckDB exactly at
-sf0.001 -- the same comparison the driver runs at sf0.01."""
+sf0.001 -- the same comparison the driver runs at sf0.01 -- and the
+entries that read ``events`` must also match in a foreign session:
+Spark's defaults and a non-UTC time zone."""
 
 from __future__ import annotations
 
+import inspect
 from contextlib import contextmanager
 
 import pytest
 
 from s3_parquet_to_postgres_spark.plans import get_registry
+from s3_parquet_to_postgres_spark.session import _BASE_CONFS
 
 from .oracle_harness import compare, duck_connection
 
 REGISTRY = get_registry()
 ORACLE_SPECS = [s for s in REGISTRY.values() if s.oracle is not None]
 ROWS_ONLY_SPECS = [s for s in REGISTRY.values() if s.oracle is None]
+EVENTS_SPECS = [
+    s for s in ORACLE_SPECS if '"events"' in inspect.getsource(s.fn)
+]
 
 
 def _session_state(spark) -> dict[str, set]:
@@ -52,6 +59,26 @@ def duck(sf_dir):
 def test_oracle_parity(spec, spark, sf_dir, duck):
     with leaves_session_unchanged(spark, spec.name):
         df = spec.fn(spark, sf_dir)
+    compare(df, duck, spec.oracle, name=spec.name)
+
+
+@pytest.fixture(scope="module")
+def foreign(spark):
+    """A session the engine does not own: none of the engine's base
+    confs (a static one cannot be unset and stays), Los Angeles time,
+    which has a DST change and a -8 h offset."""
+    s = spark.newSession()
+    for k in _BASE_CONFS:
+        if s.conf.isModifiable(k):
+            s.conf.unset(k)
+    s.conf.set("spark.sql.session.timeZone", "America/Los_Angeles")
+    return s
+
+
+@pytest.mark.parametrize("spec", EVENTS_SPECS, ids=lambda s: s.name)
+def test_oracle_parity_in_a_foreign_session(spec, foreign, sf_dir, duck):
+    with leaves_session_unchanged(foreign, spec.name):
+        df = spec.fn(foreign, sf_dir)
     compare(df, duck, spec.oracle, name=spec.name)
 
 

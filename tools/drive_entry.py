@@ -5,6 +5,7 @@ import sys
 sys.path.insert(0, "/root/repo")
 
 import duckdb
+import numpy as np
 import __spark_entry__ as entrymod
 from s3_parquet_to_postgres_spark.catalog import TABLES
 from s3_parquet_to_postgres_spark.session import build_session
@@ -20,6 +21,8 @@ def canon_value(v):
     outputs; the EXTERNAL driver's canonicalizer is not known to, so
     array-returning catalog entries stay outside the FLAGSHIP driver
     window (see plans/registry.py)."""
+    if isinstance(v, np.floating):
+        v = float(v)  # exact: float32 elements render as Arrow-off floats do
     if v is None or (isinstance(v, float) and v != v):
         return "NULL"
     if isinstance(v, float):
