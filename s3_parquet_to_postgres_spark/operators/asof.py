@@ -31,7 +31,7 @@ forbids that).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -43,7 +43,6 @@ def asof_join(
     left_time: str,
     right_time: str,
     right_payload: list[str],
-    tolerance: str | None = None,
     right_order: str | None = None,
     direction: str = "backward",
 ) -> DataFrame:
@@ -61,9 +60,6 @@ def asof_join(
       to backward (both carries share the one hash partitioning: a
       second Sort within the same exchange, still no row explosion).
 
-    ``tolerance``: optional max time gap as an INTERVAL string (e.g.
-    ``'2 hours'``); matches farther than it (stale for backward,
-    too-far-ahead for forward, either for nearest) become NULL.
     ``right_order``: optional right-side column breaking ties among
     right rows with equal (key, time) -- the greatest value wins in
     every direction.
@@ -128,31 +124,19 @@ def asof_join(
         matches["__m_f"] = F.first(right_struct, ignorenulls=True).over(w_fwd)
     out = carried.withColumns(matches).filter(F.col("__is_left") == 1)
 
-    def gap_ok(m: Column, ahead: bool) -> Column:
-        if not tolerance:
-            return m.isNotNull()
-        tol = F.expr(f"INTERVAL {tolerance}")
-        mt = m.getField("__mt")
-        near = (
-            (mt <= F.col("__t") + tol) if ahead
-            else (mt >= F.col("__t") - tol)
-        )
-        return m.isNotNull() & near
-
+    b, f = F.col("__m_b"), F.col("__m_f")
     if direction == "backward":
-        chosen = F.when(gap_ok(F.col("__m_b"), False), F.col("__m_b"))
+        chosen = F.when(b.isNotNull(), b)
     elif direction == "forward":
-        chosen = F.when(gap_ok(F.col("__m_f"), True), F.col("__m_f"))
+        chosen = F.when(f.isNotNull(), f)
     else:
-        b, f = F.col("__m_b"), F.col("__m_f")
-        ok_b, ok_f = gap_ok(b, False), gap_ok(f, True)
         closer_b = (
             F.col("__t") - b.getField("__mt")
             <= f.getField("__mt") - F.col("__t")
         )
         chosen = (
-            F.when(ok_b & (~ok_f | closer_b), b)
-            .when(ok_f, f)
+            F.when(b.isNotNull() & (~f.isNotNull() | closer_b), b)
+            .when(f.isNotNull(), f)
         )
     out = out.withColumn("__match", chosen)
     payload = [

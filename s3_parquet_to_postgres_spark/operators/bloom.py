@@ -134,20 +134,13 @@ def bloom_filter_join(
     build: DataFrame,
     probe_key: str,
     build_key: str,
-    how: str = "inner",
     num_bits: int = DEFAULT_NUM_BITS,
     num_hashes: int = DEFAULT_NUM_HASHES,
 ) -> DataFrame:
-    """Equi-join with the probe side bloom-pruned first. Join types
-    that keep unmatched PROBE rows (left/full outer, left_anti) would
-    change results under pruning and are rejected."""
-    if how not in ("inner", "left_semi", "right", "right_outer"):
-        raise ValueError(
-            f"bloom pruning the probe side is unsound for how={how!r}"
-        )
+    """Inner equi-join with the probe side bloom-pruned first. An inner
+    join drops every probe row without a match, so pruning cannot
+    change its result."""
     pruned = bloom_prune(
         probe, build, probe_key, build_key, num_bits, num_hashes
     )
-    return pruned.join(
-        build, F.col(probe_key) == F.col(build_key), how
-    )
+    return pruned.join(build, F.col(probe_key) == F.col(build_key))

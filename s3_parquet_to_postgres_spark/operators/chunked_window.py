@@ -346,7 +346,6 @@ def chunked_frame_list(
     frame_rows: int,
     bucket_width_sec: float,
     tiebreak_cols: Sequence[str] = (),
-    summary_mode: str = "window",
 ) -> DataFrame:
     """Exact ``collect_list(value) OVER (PARTITION BY key ORDER BY
     ts, *tiebreaks ROWS BETWEEN frame_rows-1 PRECEDING AND CURRENT
@@ -370,56 +369,22 @@ def chunked_frame_list(
     where the plain window does it). Value copying only — bit-equal
     to the single-task window at any bucket width.
 
-    ``summary_mode`` picks how the bucket tails are derived; both
-    modes select the IDENTICAL tail rows (the bucket's last
-    ``min(n, frame_rows-1)`` rows by the order keys), so the output
-    is bit-equal either way:
-
-    - ``"window"``: read the boundary row's own frame list off the
-      local window stage. Catalyst does not dedupe the DAG's shared
-      subplan, so this RE-DERIVES the local stage — the fact is
-      scanned, bucket-shuffled and SORTED twice (the module cost
-      model; the summary-branch twins pay 2–7x a plain window on
-      uniform data, measured in SCALE_CHECK.md).
-    - ``"agg"``: rebuild the tails with narrow hash aggregates —
-      ``collect_list(struct(order keys, value))`` per (key, bucket,
-      bucket/64 SUB-bucket), ``sort_array`` within each bounded
-      sub-list, keep each sub's last ``frame_rows-1`` structs, then
-      assemble the bucket tail from the last ``frame_rows-1``
-      sub-tails in sub order (one tiny second aggregate). The second
-      pass still scans the fact (unavoidable without materializing
-      the shuffled corpus, which at 100 TB costs more than the
-      re-read), but it prunes to the order+value columns only and
-      replaces the full-width Exchange+Sort+Window re-derivation
-      with narrower exchanges and SUB-bucket-bounded in-memory
-      sorts — per-task state is one sub-bucket's rows, 64x tighter
-      than the local window task's bound (a single-level per-bucket
-      collect would funnel a hot bucket through one aggregation
-      buffer and one interpreted sort — measured catastrophic on an
-      80%-hot corpus). When to pick it: agg mode wins only when
-      buckets are DENSE (many rows per (key, bucket, bucket/64
-      slice)), where collecting beats re-sorting. On a SPARSE
-      corpus (~1 row per slice — e.g. per-user day buckets at the
-      catalog's scale factors) it pays ~one aggregation group per
-      row and measures ~40% SLOWER end-to-end than window mode
-      (r9: 2.59 s vs 1.88 s noop-sink minima on event_ewma_chunked
-      at sf0.1), which is why the catalog entries keep "window".
-      Both modes bound the hot key identically (one bucket per
-      task). A ghost-row stitch (chunked_range_agg's trick)
-      is NOT applicable to ROWS frames: a k-row frame has no
-      value-based containment bound, so on a sparse key it reaches
-      back arbitrarily many buckets and one-bucket ghost context
-      would be silently wrong there.
+    Each bucket's tail is read off the boundary row's own frame list
+    in the local window stage. Catalyst does not dedupe the DAG's
+    shared subplan, so this RE-DERIVES the local stage: the fact is
+    scanned, bucket-shuffled and SORTED twice (the module cost model;
+    the summary-branch twins pay 2-7x a plain window on uniform data,
+    measured in SCALE_CHECK.md). A ghost-row stitch
+    (chunked_range_agg's trick) is NOT applicable to ROWS frames: a
+    k-row frame has no value-based containment bound, so on a sparse
+    key it reaches back arbitrarily many buckets and one-bucket ghost
+    context would be silently wrong there.
 
     ``(ts, *tiebreak_cols)`` must totally order rows within a key —
     the same contract as the window it replaces.
     """
     if frame_rows < 1:
         raise ValueError(f"frame_rows must be >= 1, got {frame_rows}")
-    if summary_mode not in ("window", "agg"):
-        raise ValueError(
-            f"summary_mode must be 'window' or 'agg', got {summary_mode!r}"
-        )
     partition_cols = list(partition_cols)
     val = F.col(value_col) if isinstance(value_col, str) else value_col
     order = [F.col(ts_col).asc()] + [F.col(c).asc() for c in tiebreak_cols]
@@ -443,87 +408,18 @@ def chunked_frame_list(
         F.collect_list("__cw_row").over(w_local.rowsBetween(-(k - 1), 0)),
     )
 
-    # Bucket tail: last min(n, k-1) struct rows of each (key, bucket).
-    if summary_mode == "agg":
-        # Narrow rebuild: hash aggregates over (order keys, row
-        # struct) only, sorted in memory. Same rows as the
-        # window-mode tail, without re-deriving the sorted local
-        # stage (docstring cost model). TWO levels: a single-level
-        # collect per (key, bucket) would funnel a hot bucket through
-        # ONE aggregation buffer and one interpreted struct
-        # sort_array — measured at 32 s on a 16x/80%-hot corpus,
-        # worse than the straggler it replaces — so rows first
-        # collect per (key, bucket, SUB-bucket) (bucket/64 slices:
-        # bounded lists, spread across tasks by the finer hash), and
-        # the bucket tail is then the tail of the last k-1 sub-tails
-        # concatenated in sub order (each non-empty sub holds >= 1
-        # row — the stitch containment argument one level down).
-        # Sub ids come from the same epoch-micros floor as _BKT, so
-        # sub order IS (ts) order across subs and ts-ties never
-        # straddle a sub boundary; within a sub, sort_array orders by
-        # the full (ts, *tiebreaks) struct prefix.
-        sub_width_us = max(1, round(bucket_width_sec * 1_000_000) // 64)
-        packed = F.struct(
-            F.col(ts_col).alias("__cw_o0"),
-            *[
-                F.col(c).alias(f"__cw_o{i + 1}")
-                for i, c in enumerate(tiebreak_cols)
-            ],
-            F.col("__cw_row").alias("__cw_r"),
-        )
-        sub = F.floor(epoch_us(df, ts_col) / F.lit(sub_width_us)).cast("long")
-        per_sub = (
-            b.withColumn("__cw_sub", sub)
-            .groupBy(*partition_cols, _BKT, "__cw_sub")
-            .agg(F.collect_list(packed).alias("__cw_all"))
-        )
-        arr = F.sort_array(F.col("__cw_all"))
-        asz = F.size(arr)
-        am = F.least(asz, F.lit(k - 1))
-        sub_tails = per_sub.select(
-            *partition_cols,
-            _BKT,
-            "__cw_sub",
-            F.transform(
-                F.slice(arr, asz - am + 1, am), lambda x: x["__cw_r"]
-            ).alias("__cw_tail"),
-        )
-        grouped = sub_tails.groupBy(*partition_cols, _BKT).agg(
-            F.collect_list(
-                F.struct(F.col("__cw_sub"), F.col("__cw_tail"))
-            ).alias("__cw_subs")
-        )
-        subs_sorted = F.sort_array(F.col("__cw_subs"))
-        ssz = F.size(subs_sorted)
-        sm = F.least(ssz, F.lit(k - 1))
-        flat2 = F.flatten(
-            F.transform(
-                F.slice(subs_sorted, ssz - sm + 1, sm),
-                lambda x: x["__cw_tail"],
-            )
-        )
-        fsz = F.size(flat2)
-        fm = F.least(fsz, F.lit(k - 1))
-        summary = grouped.select(
-            *partition_cols,
-            _BKT,
-            F.slice(flat2, fsz - fm + 1, fm).alias("__cw_sum_val"),
-        )
-    else:
-        # The boundary row's frame list minus its oldest row when the
-        # frame is full (the boundary row itself stays: it is the
-        # next bucket's immediate predecessor).
-        # Boundary row's own frame list, sliced to the tail AFTER the
-        # one-row-per-bucket pick (r11): the old shape sliced every
-        # row's list and then reverse-sorted to keep one per bucket.
-        s = F.size(F.col("__cw_sum_val"))
-        m = F.least(s, F.lit(k - 1))
-        summary = _boundary_summary(
-            local, partition_cols, [ts_col, *tiebreak_cols],
-            take_last_row=True, summary_source=_LOC,
-        ).withColumn(
-            "__cw_sum_val", F.slice(F.col("__cw_sum_val"), s - m + 1, m)
-        )
+    # Bucket tail: last min(n, k-1) struct rows of each (key, bucket):
+    # the boundary row's frame list minus its oldest row when the frame
+    # is full (the boundary row itself stays: it is the next bucket's
+    # immediate predecessor), sliced AFTER the one-row-per-bucket pick.
+    s = F.size(F.col("__cw_sum_val"))
+    m = F.least(s, F.lit(k - 1))
+    summary = _boundary_summary(
+        local, partition_cols, [ts_col, *tiebreak_cols],
+        take_last_row=True, summary_source=_LOC,
+    ).withColumn(
+        "__cw_sum_val", F.slice(F.col("__cw_sum_val"), s - m + 1, m)
+    )
     w_buckets = Window.partitionBy(*partition_cols).orderBy(F.col(_BKT).asc())
     # One named window column, then derive: inlining the window
     # expression into the when/slice below would extract SIX identical
@@ -556,7 +452,7 @@ def chunked_frame_list(
     framed = F.slice(full, fl - need + 1, need)
     return (
         joined.withColumn(out, drop_nulls(framed))
-        .drop(_BKT, _LOC, "__cw_row", "__cw_tail", "__cw_carry")
+        .drop(_BKT, _LOC, "__cw_row", "__cw_carry")
     )
 
 
@@ -633,7 +529,6 @@ def chunked_range_agg(
     ts_col: str,
     aggs: dict[str, Column],
     range_sec: float,
-    bucket_width_sec: float | None = None,
 ) -> DataFrame:
     """Exact trailing RANGE-frame aggregates per key — ``agg(...)
     OVER (PARTITION BY key ORDER BY epoch_us(ts) RANGE BETWEEN
@@ -642,16 +537,16 @@ def chunked_range_agg(
     key (the sliding-lookback shape: attribution lookbacks, trailing
     rate counters, moving min/max over a time horizon).
 
-    Ghost-row stitch, no summary pass: with ``bucket_width_sec >=
-    range_sec`` (default: equal), every row's trailing frame lives
-    entirely in its own bucket or the one before, so each row is
-    shipped TWICE — once to its own bucket, once as read-only context
-    to the next — and the range window runs locally per (key,
-    bucket) over own+context rows; only own rows are kept. Frame
-    membership is decided by the same microsecond range predicate as
-    the global window (ties in the order key are all frame-mates in
-    a RANGE frame, so no tiebreak contract is needed), making every
-    aggregate value bit-identical at any compliant bucket width. Cost
+    Ghost-row stitch, no summary pass: buckets are ``range_sec``
+    wide, so every row's trailing frame lives entirely in its own
+    bucket or the one before. Each row is therefore shipped TWICE —
+    once to its own bucket, once as read-only context to the next —
+    and the range window runs locally per (key, bucket) over
+    own+context rows; only own rows are kept. Frame membership is
+    decided by the same microsecond range predicate as the global
+    window (ties in the order key are all frame-mates in a RANGE
+    frame, so no tiebreak contract is needed), making every
+    aggregate value bit-identical to the global window. Cost
     model differs from the other primitives here: 2x the shuffled
     rows instead of a second scan+shuffle derivation — cheaper than
     the summary-branch operators, and the worst task is 2 buckets of
@@ -662,14 +557,6 @@ def chunked_range_agg(
     local frame. Precondition: ``ts_col`` non-null (a frame anchored
     at an unknown instant is not meaningful).
     """
-    if bucket_width_sec is None:
-        bucket_width_sec = range_sec
-    if bucket_width_sec < range_sec:
-        raise ValueError(
-            f"bucket_width_sec ({bucket_width_sec}) must be >= "
-            f"range_sec ({range_sec}): a trailing frame may not span "
-            "more than the previous bucket"
-        )
     partition_cols = list(partition_cols)
     reserved = set(df.columns) | {_BKT, "__cw_us", "__cw_ghost"}
     for name in aggs:
@@ -683,7 +570,7 @@ def chunked_range_agg(
     # must not silently shrink the frame by a microsecond versus a
     # hand-written rangeBetween(-N, 0) of the same nominal width.
     range_us = round(range_sec * 1_000_000)
-    b = _bucketed(df, ts_col, bucket_width_sec).withColumn(
+    b = _bucketed(df, ts_col, range_sec).withColumn(
         "__cw_us", epoch_us(df, ts_col)
     )
     own = b.withColumn("__cw_ghost", F.lit(False))

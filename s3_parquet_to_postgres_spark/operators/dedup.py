@@ -5,8 +5,7 @@ Algorithms from the public literature: MinHash (Broder 1997,
 "On the resemblance and containment of documents"), banded LSH
 (Leskovec/Rajaraman/Ullman, "Mining of Massive Datasets" ch. 3),
 SimHash (Charikar 2002; Manku et al. 2007 for the chunk-pigeonhole
-near-dup search), prefix filtering (Chaudhuri et al. 2006; PPJoin,
-Xiao et al. 2008).
+near-dup search).
 
 Scale posture: nothing here ever builds an all-pairs cross join.
 Exact dedup is a hash aggregation on the content key; MinHash/LSH and
@@ -425,10 +424,10 @@ def ngram_jaccard_pairs(
     text_col: str = "text",
     n: int = 3,
     threshold: float = 0.1,
-    strategy: str | None = None,
     max_shingle_df: int | None = None,
 ) -> DataFrame:
-    """EXACT n-gram Jaccard pairs at or above ``threshold``.
+    """EXACT n-gram Jaccard pairs at or above ``threshold``, by an
+    inverted index: count shared shingles per pair.
 
     ``max_shingle_df`` (declared semantics when set): shingles whose
     global document frequency exceeds the cap are dropped from every
@@ -437,107 +436,7 @@ def ngram_jaccard_pairs(
     worst-case fan-out (a shingle shared by k documents produces k^2
     candidate rows; boilerplate headers/footers at corpus scale make
     k unbounded) at the cost of ignoring exactly the shingles that
-    carry no discriminating signal. Applied identically in both
-    strategies, so they remain result-identical.
-
-    Two exact strategies, chosen by threshold (both return identical
-    results -- pinned by tests):
-
-    * ``inverted`` (default for t < 0.3): inverted-index self-join
-      counting shared shingles per pair. One aggregation computes all
-      intersections; best when the prefix bound can't prune.
-    * ``prefix`` (default for t >= 0.3): PPJoin-family prefix
-      filtering. Order each doc's shingles by global rarity, index
-      only the first |A| - ceil(t*|A|) + 1 -- the prefix-filter
-      theorem guarantees every qualifying pair collides inside those
-      prefixes -- then verify candidates with one array_intersect per
-      pair. At t=0.8 the prefix is ~20% of the set and hot shingles
-      (the k^2 fan-out of the inverted join) sit past the prefix
-      boundary, so candidate volume collapses. This is the 100 TB path
-      for real near-dup thresholds.
-    """
-    if strategy is None:
-        strategy = "prefix" if threshold >= 0.3 else "inverted"
-    if strategy == "inverted":
-        return _jaccard_inverted(df, id_col, text_col, n, threshold,
-                                 max_shingle_df)
-    if strategy != "prefix":
-        raise ValueError(f"unknown strategy: {strategy!r}")
-    sh = _doc_shingles(df, id_col, text_col, n)
-    # Global df per shingle as a WINDOW count, not a groupBy+join:
-    # the join form derives the corpus shingle explode TWICE
-    # (Catalyst does not deduplicate the common subplan); the window
-    # attaches gdf in the same single shuffle that the filter needs.
-    sh = sh.withColumn(
-        "gdf", F.count("*").over(Window.partitionBy("shingle"))
-    )
-    if max_shingle_df is not None:
-        sh = sh.filter(F.col("gdf") <= max_shingle_df)
-    # Canonical order: rarest first (ties broken by shingle text) --
-    # shared rare shingles surface in the first prefix positions.
-    ordered = (
-        sh
-        .groupBy("id")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("gdf", "shingle"))),
-                lambda s: s["shingle"],
-            ).alias("sh_arr")
-        )
-        .withColumn("n_sh", F.size("sh_arr"))
-        # alpha = minimum overlap a qualifying partner must have with
-        # this set; the -1e-9 counters binary float ceil overshoot
-        # (0.1*20 -> 2.0000000000000004 must still give alpha=2).
-        .withColumn(
-            "p_len",
-            F.least(
-                F.col("n_sh"),
-                F.col("n_sh")
-                - F.ceil(F.lit(threshold) * F.col("n_sh") - F.lit(1e-9))
-                .cast("int")
-                + F.lit(1),
-            ),
-        )
-    )
-    # Candidate generation on SLIM (id, shingle) rows only -- the
-    # shingle arrays are joined back after pair dedup, so pre-dedup
-    # collision volume never materializes array payloads.
-    prefix = ordered.select(
-        "id", F.explode(F.slice("sh_arr", 1, F.col("p_len"))).alias("shingle")
-    )
-    cand = (
-        prefix.select(F.col("id").alias("id_a"), "shingle")
-        .join(prefix.select(F.col("id").alias("id_b"), "shingle"), "shingle")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    arrs = ordered.select("id", "sh_arr", "n_sh")
-    cand = (
-        cand.join(
-            arrs.select(F.col("id").alias("id_a"), F.col("sh_arr").alias("arr_a"),
-                        F.col("n_sh").alias("n_a")),
-            "id_a",
-        )
-        .join(
-            arrs.select(F.col("id").alias("id_b"), F.col("sh_arr").alias("arr_b"),
-                        F.col("n_sh").alias("n_b")),
-            "id_b",
-        )
-    )
-    inter = F.size(F.array_intersect("arr_a", "arr_b"))
-    jac = inter / (F.col("n_a") + F.col("n_b") - inter)
-    return (
-        cand.select("id_a", "id_b", jac.alias("jaccard"))
-        .filter(F.col("jaccard") >= threshold)
-    )
-
-
-def _jaccard_inverted(
-    df: DataFrame, id_col: str, text_col: str, n: int, threshold: float,
-    max_shingle_df: int | None = None,
-) -> DataFrame:
-    """Inverted-index exact Jaccard: count shared shingles per pair.
+    carry no discriminating signal.
 
     Shingles group into per-shingle posting lists (collect_list), and
     everything else -- document sizes, pair intersections -- derives
@@ -612,7 +511,7 @@ def containment_pairs(
     EITHER direction clears ``threshold``, with both directions
     reported.
 
-    Pairing is the bounded posting-list shape of ``_jaccard_inverted``
+    Pairing is the bounded posting-list shape of ``ngram_jaccard_pairs``
     (doc-level ``max_shingle_df`` cap applied BEFORE any pairing,
     bounding per-shingle fan-out), duplication-adaptive per
     ``operators/pairs.py``: containment is a pure set function, so on

@@ -31,7 +31,6 @@ def point_in_interval_join(
     start_col: str,
     end_col: str,
     bucket_width: float,
-    how: str = "inner",
 ) -> DataFrame:
     """Join each point row to every interval row with
     start <= point < end, via bucket equi-join.
@@ -54,7 +53,7 @@ def point_in_interval_join(
             )
         ),
     )
-    joined = p.join(iv, "__b", how).filter(
+    joined = p.join(iv, "__b").filter(
         (F.col(start_col) <= F.col(point_col))
         & (F.col(point_col) < F.col(end_col))
     )

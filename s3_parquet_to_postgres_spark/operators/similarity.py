@@ -334,76 +334,6 @@ def assign_nearest_centroid(
     return df.withColumn(out_col, _assign(F.col(vec_col)))
 
 
-def kmeans_refine_centroids(
-    corpus: DataFrame,
-    init: DataFrame,
-    vec_col: str = "embedding",
-    iters: int = 2,
-) -> DataFrame:
-    """Lloyd's k-means iterations over (centroid_id, cent_vec) seeds.
-
-    Each round: fold the centroid table into ONE broadcast array row
-    (sorted by centroid_id), assign every corpus vector to its nearest
-    centroid with a narrow ``F.aggregate`` argmax over that array --
-    no join fan-out, no window, the corpus NEVER shuffles -- then
-    recompute each centroid as the element-wise mean of its members:
-    posexplode to (centroid, dim, val), one hash aggregation on
-    (centroid, dim) with map-side partial sums, regroup to arrays.
-    Shuffle volume per round is n_centroids * dim partial sums per
-    partition, independent of corpus size. Ties go to the smallest
-    centroid_id and empty clusters keep their previous centroid, so
-    the result is deterministic given a deterministic ``init`` up to
-    floating-point aggregation order (avg over doubles is
-    partition-order dependent at the ulp level; an assignment can
-    flip only when two centroids tie within that epsilon).
-    Returns the same (centroid_id, cent_vec) shape, so it slots
-    between seeding and ``ivf_topk``'s assignment stage.
-    """
-    cent = init
-    for _ in range(iters):
-        cent_arr = cent.agg(
-            F.array_sort(
-                F.collect_list(F.struct("centroid_id", "cent_vec"))
-            ).alias("cents")
-        )
-
-        assigned = (
-            corpus.select(as_double(vec_col).alias("v"))
-            .join(F.broadcast(cent_arr))
-            .select(
-                nearest_centroid(F.col("cents"), F.col("v")).alias(
-                    "centroid_id"
-                ),
-                "v",
-            )
-        )
-        means = (
-            assigned.select("centroid_id", F.posexplode("v").alias("d", "x"))
-            .groupBy("centroid_id", "d")
-            .agg(F.avg("x").alias("m"))
-            .groupBy("centroid_id")
-            .agg(
-                F.array_sort(
-                    F.collect_list(F.struct("d", "m"))
-                ).alias("dm")
-            )
-            .select(
-                "centroid_id",
-                F.transform(F.col("dm"), lambda s: s.getField("m")).alias(
-                    "new_vec"
-                ),
-            )
-        )
-        cent = (
-            cent.join(means, "centroid_id", "left")
-            .select(
-                "centroid_id",
-                F.coalesce(F.col("new_vec"), F.col("cent_vec")).alias("cent_vec"),
-            )
-        )
-    return cent
-
-
 def ivf_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -412,20 +342,14 @@ def ivf_topk(
     vec_col: str = "embedding",
     n_centroids: int = 16,
     n_probe: int = 4,
-    refine_iters: int = 0,
 ) -> DataFrame:
     """Approximate top-k via an IVF (inverted-file) coarse quantizer
     (the IVF-Flat scheme of Jegou et al. 2011, "Product Quantization
     for Nearest Neighbor Search", minus the PQ compression).
 
     Centroid seeds are a deterministic hash-sample of the corpus
-    itself; ``refine_iters`` > 0 runs that many Lloyd k-means rounds
-    (``kmeans_refine_centroids``) to tighten the partition of the
-    space -- better recall at equal n_probe, for ``refine_iters``
-    extra corpus passes at build time. The declared catalog entry
-    uses refine_iters=0 so the DuckDB oracle can replay the seeds
-    bit-exactly; production indexes should refine. Corpus vectors
-    index into their nearest centroid's list; queries probe their
+    itself, so the DuckDB oracle can replay them bit-exactly. Corpus
+    vectors index into their nearest centroid's list; queries probe their
     ``n_probe`` nearest lists; exact cosine re-ranks candidates.
     Candidates per query ~ corpus * n_probe / n_centroids -- and the
     centroid tables are tiny broadcasts, so the corpus never shuffles
@@ -445,8 +369,6 @@ def ivf_topk(
         .drop("__h")
         .localCheckpoint(eager=False)
     )
-    if refine_iters > 0:
-        cent = kmeans_refine_centroids(corpus, cent, vec_col, refine_iters)
 
     def nearest(df: DataFrame, side_id: str, side_vec: str, keep: int) -> DataFrame:
         scored = df.join(F.broadcast(cent)).select(
@@ -575,8 +497,7 @@ def pq_topk(
     query subvector vs quantized corpus code, summed across
     subspaces. Codebooks are an md5-hash-sample of the corpus
     (deterministic AND portable, so the DuckDB oracle replays
-    encoding and ADC bit-compatibly; production k-means-refines each
-    subspace like ``kmeans_refine_centroids``).
+    encoding and ADC bit-compatibly).
 
     Scale shape: the codebook is one broadcast row (m * n_codes *
     dim/m doubles); corpus encoding is a narrow map (argmin fold per
@@ -751,7 +672,7 @@ def semantic_dedup(
 
     Cluster seeds are a md5-hash-sample of the corpus (deterministic
     AND portable, unlike xxhash64, so the DuckDB oracle replays them
-    bit-exactly; production swaps in ``kmeans_refine_centroids``).
+    bit-exactly).
     Assignment is the ``assign_nearest_centroid`` Arrow kernel over
     the driver-held bounded centroid table -- the corpus never
     shuffles for it, and the kernel replicates the column fold's

@@ -17,7 +17,7 @@ assignment -- required for exactly-once sinks.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -26,33 +26,25 @@ def salted_join(
     other: DataFrame,
     on: str,
     salt: int = 8,
-    how: str = "inner",
-    salt_source: str | None = None,
 ) -> DataFrame:
-    """Equi-join where ``skewed``'s join key is hot.
+    """Inner equi-join where ``skewed``'s join key is hot.
 
     The skewed side gets a deterministic salt in [0, salt); ``other``
     is replicated ``salt`` times (explode over a literal range — cheap
     when ``other`` is the smaller side). The join key becomes
     (key, salt), spreading each hot key across ``salt`` shuffle
-    partitions. Output equals the plain join, in any order.
-
-    ``salt_source``: column whose hash drives salt assignment; defaults
-    to a high-entropy hash of all non-key columns of ``skewed``.
+    partitions. Output equals the plain join, in any order. A row's
+    salt is a hash of all non-key columns of ``skewed``.
     """
     if salt < 1:
         raise ValueError(f"salt must be >= 1, got {salt}")
-    if salt_source is not None:
-        basis: Column = F.col(salt_source)
-    else:
-        non_key = [c for c in skewed.columns if c != on] or [on]
-        basis = F.concat_ws("", *[F.col(c).cast("string") for c in non_key])
+    non_key = [c for c in skewed.columns if c != on] or [on]
+    basis = F.concat_ws("", *[F.col(c).cast("string") for c in non_key])
     s = skewed.withColumn("__salt", F.pmod(F.xxhash64(basis), F.lit(salt)))
     o = other.withColumn(
         "__salt", F.explode(F.sequence(F.lit(0), F.lit(salt - 1)).cast("array<long>"))
     )
-    out = s.join(o, [on, "__salt"], how)
-    return out.drop("__salt")
+    return s.join(o, [on, "__salt"]).drop("__salt")
 
 
 def salted_agg(

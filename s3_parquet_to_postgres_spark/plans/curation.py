@@ -755,20 +755,6 @@ def event_ewma_chunked(spark: SparkSession, sf_dir: str) -> DataFrame:
     null user) whose event count exceeds what one task should sort;
     costs the documented summary-branch re-derivation
     (chunked_window.py cost model).
-
-    summary_mode stays "window" (round-9 finding): the round-8
-    verdict hypothesized a cheaper stitch for this entry; round 9
-    built and measured `summary_mode="agg"` (the two-level narrow
-    hash-aggregate tail rebuild) and it LOST end-to-end on this
-    corpus -- 2.59 s vs 1.88 s same-host noop-sink minima at sf0.1 --
-    because 1-day buckets here hold ~1 row per (key, bucket,
-    sub-bucket), so the rebuild pays ~1 aggregation group per row
-    where the re-derivation pays one Tungsten sort. (An earlier
-    count()-sink probe that showed agg winning was measuring a
-    pruned plan: Catalyst had dropped the frame-list Window
-    entirely.) Both modes are hot-key-safe; agg mode wins only on
-    DENSE buckets (chunked_window.py docstring) and stays available
-    as the tested knob.
     """
     from ..operators.chunked_window import chunked_frame_list
 

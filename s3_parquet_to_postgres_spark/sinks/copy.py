@@ -39,10 +39,9 @@ archives such as ``pyspark.zip`` at the start of every later task
 (``_reread_changed_zips_only``), about 0.2 CPU-s per task on CPython
 3.12 and older.
 
-The executor connection resolves in order: an injected factory
-(tests / alternative drivers), psycopg2 when the executor image has
-it, else the bundled pure-stdlib v3 wire-protocol client
-(``pgwire.py``) -- so the COPY path has no hard C-extension
+The executor connects through an injected factory (tests /
+alternative drivers), else the bundled pure-stdlib v3 wire-protocol
+client (``pgwire.py``), so the COPY path has no C-extension
 dependency. The socket half (framing, one statement per partition,
 commit/rollback, CopyFail) is exercised end-to-end against an
 in-process fake PG wire server in tests/test_copy_socket_e2e.py. Error
@@ -443,9 +442,10 @@ class CopySink:
     columns: tuple[str, ...]
     format: str = "text"  # "text" | "binary"
     # Injectable for tests / alternative drivers: a picklable callable
-    # (conn_string) -> DB-API connection. None -> psycopg2.connect on
-    # the executor. Lets the full executor path (framing, commit /
-    # rollback, row counts) run end-to-end without a live Postgres.
+    # (conn_string) -> DB-API connection. None -> the bundled pgwire
+    # client on the executor. Lets the full executor path (framing,
+    # commit / rollback, row counts) run end-to-end without a live
+    # Postgres.
     connection_factory: Callable[[str], Any] | None = None
 
     def __post_init__(self) -> None:
@@ -625,7 +625,7 @@ def destination_types(
         with _transaction(conn_string) as cur:
             cur.execute(sql)
             found = dict(cur.fetchall())
-    except Exception as e:  # psycopg2 and pgwire errors share no base
+    except Exception as e:  # OSError and pgwire errors share no base
         raise SchemaValidationError(
             f"cannot read the columns of destination table {table!r}: {e}"
         ) from e
@@ -651,22 +651,16 @@ def _transaction(conn_string: str, factory: "Callable[[str], Any] | None" = None
 
 
 def _connect(conn_string: str, factory: "Callable[[str], Any] | None" = None):
-    """Executor-side connect: injected factory, psycopg2 when present,
-    else the bundled pure-stdlib v3 wire client (pgwire.py) -- so the
-    COPY fast path works on executors without the C extension."""
+    """Executor-side connect: the injected factory, else the bundled
+    pure-stdlib v3 wire client (pgwire.py)."""
     if factory is not None:
         return factory(conn_string)
-    try:
-        import psycopg2  # preferred when the executor image has it
-    except ImportError:
-        from . import pgwire
+    from . import pgwire
 
-        try:
-            return pgwire.connect(conn_string)
-        except OSError as e:
-            # Spark's simplified worker traceback drops the chained
-            # ImportError, so the error itself names the fallback.
-            e.add_note("psycopg2 is not installed; the bundled pgwire "
-                       "client could not connect")
-            raise
-    return psycopg2.connect(conn_string)
+    try:
+        return pgwire.connect(conn_string)
+    except OSError as e:
+        # Spark's simplified worker traceback drops the context, so the
+        # error itself names the client that could not connect.
+        e.add_note("the bundled pgwire client could not connect")
+        raise

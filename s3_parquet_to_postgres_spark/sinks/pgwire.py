@@ -1,13 +1,11 @@
 """Zero-dependency Postgres v3 wire-protocol client for COPY.
 
 The reference's fast path is ``COPY ... FROM STDIN BINARY`` over a
-native driver (reference: src/db.rs:167-177, rust-postgres). On a
-Spark cluster the equivalent executor-side path usually rides
-psycopg2 -- but psycopg2 is a C extension that may be absent from
-executor images (it IS absent from this container). This module is a
-minimal pure-stdlib client speaking exactly the subset of the v3
-protocol the COPY sink needs, so ``CopySink`` works on any executor
-with a bare Python:
+native driver (reference: src/db.rs:167-177, rust-postgres). A C
+driver such as psycopg2 may be absent from executor images, so this
+module is the COPY sink's one Postgres client: a minimal pure-stdlib
+client speaking exactly the subset of the v3 protocol the sink needs,
+so ``CopySink`` works on any executor with a bare Python:
 
 * libpq-style TLS negotiation (SSLRequest + ssl.wrap) honoring
   ``sslmode``: require/verify-ca/verify-full fail hard when the
@@ -28,15 +26,13 @@ with a bare Python:
   reader that raises mid-stream gets CopyFail ('f') instead of
   CopyDone, like psycopg2, so the connection can still roll back;
 * DB-API-ish surface (``connect() -> conn.cursor().copy_expert`` /
-  ``commit`` / ``rollback`` / ``close``) so it drops into
-  ``CopySink.connection_factory`` -- and is the automatic fallback in
-  ``copy._connect`` when psycopg2 is unavailable.
+  ``commit`` / ``rollback`` / ``close``): ``copy._connect`` uses it
+  whenever no ``connection_factory`` is injected.
 
 Transaction semantics mirror psycopg2's default (autocommit off): the
 first statement on a connection implicitly opens a transaction
-(``BEGIN``), and ``commit()``/``rollback()`` close it -- so the COPY
-sink's all-or-nothing-per-partition contract holds identically under
-either driver.
+(``BEGIN``), and ``commit()``/``rollback()`` close it -- the COPY
+sink's all-or-nothing-per-partition contract.
 
 Scale shape: one socket per executor partition task, one CopyData
 frame per ``read(COPY_CHUNK)`` of the caller's file object (64 KiB),

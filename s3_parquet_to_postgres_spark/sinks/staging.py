@@ -33,16 +33,20 @@ def _q(ident: str) -> str:
     return '"' + ident.replace('"', '""') + '"'
 
 
-def clone_then_swap_ddl(table: str, staging: str | None = None) -> str:
+def _staging(table: str) -> str:
+    return f"{table}__staging"
+
+
+def clone_then_swap_ddl(table: str) -> str:
     """DDL that (re)creates an empty staging clone of the live table."""
-    stg = staging or f"{table}__staging"
+    stg = _staging(table)
     return (
         f"DROP TABLE IF EXISTS {_q(stg)};\n"
         f"CREATE TABLE {_q(stg)} (LIKE {_q(table)} INCLUDING ALL);"
     )
 
 
-def swap_by_rename(table: str, staging: str | None = None) -> str:
+def swap_by_rename(table: str) -> str:
     """One transaction that promotes the staging table to live.
 
     The old live table moves to ``<table>__old`` and is dropped, the
@@ -50,7 +54,7 @@ def swap_by_rename(table: str, staging: str | None = None) -> str:
     of the two renames (microseconds), then see the complete new data
     -- never a partial load.
     """
-    stg = staging or f"{table}__staging"
+    stg = _staging(table)
     old = f"{table}__old"
     return "\n".join([
         "BEGIN;",
@@ -81,20 +85,19 @@ class StagedLoad:
 
     conn_string: str
     table: str
-    staging: str | None = None
     # Injectable for tests / alternative drivers (same contract as
-    # CopySink.connection_factory); None -> psycopg2.connect.
+    # CopySink.connection_factory); None -> the bundled pgwire client.
     connection_factory: Callable[[str], Any] | None = None
 
     @property
     def staging_table(self) -> str:
-        return self.staging or f"{self.table}__staging"
+        return _staging(self.table)
 
     def prepare(self) -> None:
-        self._execute(clone_then_swap_ddl(self.table, self.staging_table))
+        self._execute(clone_then_swap_ddl(self.table))
 
     def swap(self) -> None:
-        self._execute(swap_by_rename(self.table, self.staging_table))
+        self._execute(swap_by_rename(self.table))
 
     def _execute(self, script: str) -> None:
         from .copy import _transaction

@@ -21,8 +21,8 @@ executors never import it; the staging runs on the driver and the
 staged files feed the normal distributed parquet scan. Object
 integrity is checked against the S3 ``ETag`` (MD5 of the body for
 non-multipart objects -- the same end-to-end byte check the reference
-performs; multipart ETags contain '-' and are skipped with the
-``verify_etag`` contract documented below).
+performs; multipart ETags contain '-' and are not plain MD5s, so
+they are skipped).
 
 Auth is deliberately out of scope: credentialed deployments go
 through S3A/the AWS SDK; this client targets anonymous/static
@@ -89,8 +89,7 @@ class S3HttpClient:
 
     # -- single object
 
-    def get_object(self, bucket: str, key: str,
-                   verify_etag: bool = True) -> bytes:
+    def get_object(self, bucket: str, key: str) -> bytes:
         """Download one object; verify the body's MD5 against the
         returned ETag (byte-identical check, reference parity with
         src/s3_download.rs:362-371). Multipart ETags (containing '-')
@@ -102,7 +101,7 @@ class S3HttpClient:
                 etag = (resp.headers.get("ETag") or "").strip('"')
         except OSError as e:
             raise S3HttpError(f"GET {bucket}/{key} failed: {e}") from e
-        if verify_etag and etag and "-" not in etag:
+        if etag and "-" not in etag:
             md5 = hashlib.md5(body).hexdigest()
             if md5 != etag.lower():
                 raise S3HttpError(

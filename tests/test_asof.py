@@ -1,28 +1,4 @@
-"""As-of join unit tests: tie semantics and tolerance."""
-
-
-def test_asof_tolerance_nullifies_stale_matches(spark):
-    from s3_parquet_to_postgres_spark.operators.asof import asof_join
-    import datetime
-
-    def ts(minute):
-        return datetime.datetime(2024, 1, 1, 0, minute)
-
-    left = spark.createDataFrame(
-        [(1, ts(10)), (1, ts(40)), (2, ts(30))], "k long, t timestamp"
-    )
-    right = spark.createDataFrame(
-        [(1, ts(9), "a"), (1, ts(11), "b"), (2, ts(0), "c")],
-        "k long, t timestamp, v string",
-    )
-    out = asof_join(
-        left, right.withColumnRenamed("t", "rt"),
-        on="k", left_time="t", right_time="rt", right_payload=["v"],
-        tolerance="20 minutes",
-    ).orderBy("k", "t").collect()
-    # (1, :10) -> 'a' (:09, fresh); (1, :40) -> 'b' (:11 is latest <= :40
-    # but 29min stale > 20min tolerance -> NULL); (2, :30) -> 'c' stale.
-    assert [r["v"] for r in out] == ["a", None, None]
+"""As-of join unit tests: tie semantics and directions."""
 
 
 def test_asof_without_tolerance_keeps_latest(spark):
@@ -41,6 +17,8 @@ def test_asof_without_tolerance_keeps_latest(spark):
         left, right.withColumnRenamed("t", "rt"),
         on="k", left_time="t", right_time="rt", right_payload=["v"],
     ).collect()
+    # :11 is 29 minutes old and still matches: no match is dropped
+    # for its age.
     assert [r["v"] for r in out] == ["b"]
 
 
@@ -66,7 +44,7 @@ def test_asof_right_order_breaks_equal_time_ties(spark):
 def test_asof_matches_brute_force_on_random_data(spark):
     """Randomized (seeded) differential test: the union+carry-forward
     plan must equal the obvious per-row definition -- latest right row
-    with rt <= t, ties by right_order, staleness by tolerance."""
+    with rt <= t, ties by right_order."""
     import datetime
     import random
 
@@ -89,16 +67,12 @@ def test_asof_matches_brute_force_on_random_data(spark):
          None if rng.random() < 0.25 else f"v{i}")
         for i in range(150)
     ]
-    tolerance_min = 25
 
     def expect(k, t):
         cands = [r for r in right_rows if r[0] == k and r[1] <= t]
         if not cands:
             return None
-        best = max(cands, key=lambda r: (r[1], r[2]))
-        if best[1] < t - datetime.timedelta(minutes=tolerance_min):
-            return None
-        return best[3]
+        return max(cands, key=lambda r: (r[1], r[2]))[3]
 
     left = spark.createDataFrame(left_rows, "k long, t timestamp, lid long")
     right = spark.createDataFrame(
@@ -106,8 +80,7 @@ def test_asof_matches_brute_force_on_random_data(spark):
     ).repartition(7)
     out = asof_join(
         left, right, on="k", left_time="t", right_time="rt",
-        right_payload=["v"], tolerance=f"{tolerance_min} minutes",
-        right_order="seq",
+        right_payload=["v"], right_order="seq",
     ).collect()
     assert len(out) == len(left_rows)
     got = {r["lid"]: r["v"] for r in out}
@@ -139,21 +112,12 @@ def test_asof_forward_and_nearest_match_brute_force(spark):
          None if rng.random() < 0.2 else f"v{i}")
         for i in range(110)
     ]
-    tol = datetime.timedelta(minutes=20)
-
-    def pick(cands):
-        # greatest (time-precedence handled by caller) -> by seq
-        return max(cands, key=lambda r: r[2])
 
     def expect(k, t, direction):
         back = [r for r in right_rows if r[0] == k and r[1] <= t]
         fwd = [r for r in right_rows if r[0] == k and r[1] >= t]
         b = max(back, key=lambda r: (r[1], r[2])) if back else None
         f = min(fwd, key=lambda r: (r[1], -r[2])) if fwd else None
-        if b is not None and t - b[1] > tol:
-            b = None
-        if f is not None and f[1] - t > tol:
-            f = None
         if direction == "forward":
             return f[3] if f else None
         if b is not None and (f is None or t - b[1] <= f[1] - t):
@@ -167,8 +131,7 @@ def test_asof_forward_and_nearest_match_brute_force(spark):
     for direction in ("forward", "nearest"):
         out = asof_join(
             left, right, on="k", left_time="t", right_time="rt",
-            right_payload=["v"], tolerance="20 minutes",
-            right_order="seq", direction=direction,
+            right_payload=["v"], right_order="seq", direction=direction,
         ).collect()
         got = {r["lid"]: r["v"] for r in out}
         want = {lid: expect(k, t, direction) for k, t, lid in left_rows}

@@ -84,12 +84,6 @@ def test_string_keys(spark):
     assert got == sorted(f"doc-{i}" for i in range(0, 2000, 50))
 
 
-def test_unsound_join_types_rejected(probe, build):
-    for how in ("left", "left_outer", "full", "full_outer", "left_anti"):
-        with pytest.raises(ValueError):
-            bloom_filter_join(probe, build, "k", "bk", how=how)
-
-
 def test_probe_side_plan_has_no_python_stage(probe, build):
     # The whole prune must stay JVM-side: no BatchEvalPython /
     # ArrowEvalPython nodes (UDF fallback would be the slow path).

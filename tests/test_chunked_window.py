@@ -307,17 +307,13 @@ def test_chunked_last_carry_matches_plain_window(spark, width_sec, forward):
     )
 
 
-@pytest.mark.parametrize("summary_mode", ["window", "agg"])
 @pytest.mark.parametrize("frame_rows", [1, 3, 10])
 @pytest.mark.parametrize("width_sec", [7.0, 300.0, 10_000_000.0])
-def test_chunked_frame_list_matches_plain_window(
-    spark, width_sec, frame_rows, summary_mode
-):
+def test_chunked_frame_list_matches_plain_window(spark, width_sec, frame_rows):
     """Bounded ROWS-frame list: identical element VALUES in identical
     order to collect_list over the plain window, including NULL
     observations dropped post-assembly (positionally, not before)
-    and NULL partition keys — in BOTH summary modes (the narrow-agg
-    tail rebuild must select the identical tail rows)."""
+    and NULL partition keys."""
     from s3_parquet_to_postgres_spark.operators.chunked_window import (
         chunked_frame_list,
     )
@@ -337,7 +333,6 @@ def test_chunked_frame_list_matches_plain_window(
     chunked = chunked_frame_list(
         df, ["user_id"], "ts", "nv", out="l", frame_rows=frame_rows,
         bucket_width_sec=width_sec, tiebreak_cols=["event_id"],
-        summary_mode=summary_mode,
     )
     assert sorted(chunked.columns) == sorted(plain.columns)
     assert _collect_map(chunked, ["event_id"], "l") == _collect_map(
@@ -353,11 +348,6 @@ def test_chunked_frame_list_bad_frame_raises(spark):
     df = _skewed_events(spark, n=10)
     with pytest.raises(ValueError, match="frame_rows"):
         chunked_frame_list(df, ["user_id"], "ts", "v", "l", 0, 60.0)
-    with pytest.raises(ValueError, match="summary_mode"):
-        chunked_frame_list(
-            df, ["user_id"], "ts", "v", "l", 3, 60.0,
-            summary_mode="ghost",
-        )
 
 
 def test_event_ewma_chunked_bit_equal(spark, sf_dir):
@@ -553,17 +543,16 @@ def test_event_concurrency_chunked_value_equal(spark, sf_dir):
     assert got == plain and len(got) > 0
 
 
-@pytest.mark.parametrize("width_sec", [120.0, 300.0, 10_000_000.0])
-def test_chunked_range_agg_matches_plain_window(spark, width_sec):
+@pytest.mark.parametrize("span", [120.0, 300.0, 10_000_000.0])
+def test_chunked_range_agg_matches_plain_window(spark, span):
     """Ghost-row trailing-RANGE-frame aggregates must match the plain
     range window bit-for-bit on the 80%-hot-key corpus, for every
-    compliant bucket width (= span, > span, one-bucket degenerate),
-    including conditional aggregates with all-NULL frames."""
+    range (the bucket width; up to one-bucket degenerate), including
+    conditional aggregates with all-NULL frames."""
     from s3_parquet_to_postgres_spark.operators.chunked_window import (
         chunked_range_agg,
     )
 
-    span = 120.0
     df = _skewed_events(spark, n=1500)
     us = F.unix_micros(F.col("ts"))
     cond = F.when(F.col("v") > 2, us)  # sparse: frames can be all-NULL
@@ -581,7 +570,7 @@ def test_chunked_range_agg_matches_plain_window(spark, width_sec):
     got_df = chunked_range_agg(
         df, ["user_id"], "ts",
         {"n": F.count(cond), "lo": F.min(cond), "hi": F.max(cond)},
-        range_sec=span, bucket_width_sec=width_sec,
+        range_sec=span,
     ).select("event_id", "n", "lo", "hi")
     want = {r["event_id"]: (r["n"], r["lo"], r["hi"])
             for r in plain.collect()}
@@ -591,14 +580,16 @@ def test_chunked_range_agg_matches_plain_window(spark, width_sec):
 
 
 def test_chunked_range_agg_bad_width_raises(spark):
+    # The range is the bucket width, so a range under a microsecond
+    # cannot bucket the timeline.
     from s3_parquet_to_postgres_spark.operators.chunked_window import (
         chunked_range_agg,
     )
 
     df = _skewed_events(spark, n=10)
-    with pytest.raises(ValueError, match="bucket_width_sec"):
+    with pytest.raises(ValueError, match="bucket_width_sec must be > 0"):
         chunked_range_agg(df, ["user_id"], "ts", {"n": F.count("v")},
-                          range_sec=60.0, bucket_width_sec=30.0)
+                          range_sec=0.0)
 
 
 def test_chunked_range_agg_agg_name_collision_raises(spark):

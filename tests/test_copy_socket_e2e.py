@@ -9,10 +9,9 @@ executor worker processes -- the container-feasible equivalent of the
 reference's live-Postgres e2e harness (reference:
 src/test_setup.rs:433-456, src/runner.rs:163-374).
 
-No connection_factory is injected in the Spark tests: psycopg2 is
-absent from this container, so CopySink._connect resolves to the
-bundled pgwire client -- exercising the same fallback a bare-Python
-executor image would use in production.
+No connection_factory is injected in the Spark tests, so
+CopySink._connect resolves to the bundled pgwire client, as it does
+in production.
 """
 
 from __future__ import annotations
@@ -396,9 +395,9 @@ def test_source_failure_mid_copy_sends_copy_fail(spark, tmp_path, fmt):
 
 def test_staged_load_ddl_over_socket(tmp_path):
     # StagedLoad's prepare/swap run plain statements through
-    # cursor.execute(); with psycopg2 absent this exercises the
-    # pgwire _Cursor.execute path end-to-end against the fake server
-    # (which acks non-COPY statements with CommandComplete).
+    # cursor.execute(); this exercises the pgwire _Cursor.execute path
+    # end-to-end against the fake server (which acks non-COPY
+    # statements with CommandComplete).
     from s3_parquet_to_postgres_spark.sinks.staging import StagedLoad
 
     with FakePgServer(str(tmp_path / "spool")) as srv:

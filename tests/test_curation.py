@@ -182,8 +182,7 @@ def test_containment_catches_subset_jaccard_misses(spark):
     assert pairs[(1, 2)].containment_a_in_b == 1.0
     jac = {
         (r.id_a, r.id_b): r.jaccard
-        for r in ngram_jaccard_pairs(df, threshold=0.0,
-                                     strategy="inverted").collect()
+        for r in ngram_jaccard_pairs(df, threshold=0.0).collect()
     }
     assert jac.get((1, 2), 0.0) < 0.5  # jaccard alone would miss it
 

@@ -57,15 +57,16 @@ def test_multiple_rows_stream():
     assert lines == ["1\n", "2\n"]
 
 
-def test_copy_sink_fails_cleanly_without_psycopg2(spark):
-    # Without psycopg2 the executor-side import gate must surface a
-    # clear error, not a bare ImportError.
+def test_copy_sink_unreachable_server_names_pgwire(spark):
+    # An unreachable DSN fails the job with the bundled pgwire client's
+    # connect error, which names the client even through Spark's
+    # simplified worker traceback.
     from s3_parquet_to_postgres_spark.sinks.copy import CopySink
 
     sink = CopySink(conn_string="postgresql://nope", table="t",
                     columns=("a",))
     df = spark.createDataFrame([(1,), (2,)], ["a"])
-    with pytest.raises(Exception, match="psycopg2|CopySink"):
+    with pytest.raises(Exception, match="pgwire client could not connect"):
         sink.write(df)
 
 
@@ -142,17 +143,17 @@ def test_identifier_quoting_doubles_embedded_quotes():
     assert '"we""ird"' in sql
 
 
-def test_staged_load_fails_cleanly_without_psycopg2():
-    # Without psycopg2, StagedLoad falls back to the bundled
-    # pure-stdlib wire client (sinks/pgwire.py), which must surface a
-    # clean CONNECTION error for an unreachable DSN -- never an
-    # ImportError.
+def test_staged_load_unreachable_server_is_a_connect_error():
+    # StagedLoad connects through the bundled pure-stdlib wire client
+    # (sinks/pgwire.py), which must surface a clean CONNECTION error
+    # for an unreachable DSN.
     from s3_parquet_to_postgres_spark.sinks.staging import StagedLoad
 
     staged = StagedLoad("postgresql://nope", table="t")
     assert staged.staging_table == "t__staging"
-    with pytest.raises(OSError):
+    with pytest.raises(OSError) as err:
         staged.prepare()
+    assert "the bundled pgwire client could not connect" in err.value.__notes__
 
 
 # -- zip directories re-read only when the archive changed -------------------

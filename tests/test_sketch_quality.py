@@ -5,6 +5,8 @@ merge == rebuild)."""
 
 from __future__ import annotations
 
+from collections import Counter
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -85,20 +87,43 @@ def test_simhash_orders_like_jaccard(spark, docs):
         assert close > far, (close, far)
 
 
-def test_jaccard_strategies_agree(spark, docs):
-    # Prefix filtering and the inverted-index count are both EXACT:
-    # identical pair sets and values at the same threshold.
-    kw = dict(n=3, threshold=0.35)
-    inv = {
-        (r["id_a"], r["id_b"]): round(r["jaccard"], 9)
-        for r in D.ngram_jaccard_pairs(docs, strategy="inverted", **kw).collect()
+def _exact_jaccard(docs, n, threshold, max_shingle_df=None):
+    """Exact Jaccard of every doc pair, paired in Python over the
+    ``dedup.shingles`` reference sets, with the same df cap."""
+    sets = {
+        r["doc_id"]: set(r["sh"])
+        for r in docs.select("doc_id", D.shingles("text", n).alias("sh"))
+        .collect()
     }
-    pre = {
+    if max_shingle_df is not None:
+        doc_freq = Counter(s for sh in sets.values() for s in sh)
+        sets = {d: {s for s in sh if doc_freq[s] <= max_shingle_df}
+                for d, sh in sets.items()}
+    ids = sorted(sets)
+    out = {}
+    for i, a in enumerate(ids):
+        for b in ids[i + 1:]:
+            inter = len(sets[a] & sets[b])
+            if inter:
+                jac = inter / (len(sets[a]) + len(sets[b]) - inter)
+                if jac >= threshold:
+                    out[(a, b)] = round(jac, 9)
+    return out
+
+
+def _jaccard_pairs(docs, **kw):
+    return {
         (r["id_a"], r["id_b"]): round(r["jaccard"], 9)
-        for r in D.ngram_jaccard_pairs(docs, strategy="prefix", **kw).collect()
+        for r in D.ngram_jaccard_pairs(docs, **kw).collect()
     }
-    assert inv == pre
-    assert len(inv) > 0
+
+
+def test_jaccard_pairs_match_exact_reference(spark, docs):
+    # The inverted-index count is EXACT: the same pair set and values
+    # as pairing every document's shingle set directly.
+    got = _jaccard_pairs(docs, n=3, threshold=0.35)
+    assert got == _exact_jaccard(docs, n=3, threshold=0.35)
+    assert len(got) > 0
 
 
 def test_exact_dedup_survivor_is_min(spark, docs):
@@ -158,10 +183,10 @@ def test_winnow_fingerprints_detect_partial_overlap(spark):
 
 
 def test_jaccard_shingle_df_cap_bounds_fanout(spark):
-    """max_shingle_df is declared semantics in both strategies: a
-    boilerplate shingle shared by every doc is excluded from sizes and
-    intersections, so pairs related ONLY through boilerplate vanish
-    and the inverted join's per-shingle fan-out is bounded."""
+    """max_shingle_df is declared semantics: a boilerplate shingle
+    shared by every doc is excluded from sizes and intersections, so
+    pairs related ONLY through boilerplate vanish and the inverted
+    join's per-shingle fan-out is bounded."""
     boiler = "copyright footer text"
     docs = spark.createDataFrame(
         [(i, f"unique words {i} alpha{i} beta{i} gamma{i} {boiler}")
@@ -171,17 +196,8 @@ def test_jaccard_shingle_df_cap_bounds_fanout(spark):
         "doc_id long, text string",
     )
     kw = dict(n=3, threshold=0.1, max_shingle_df=3)
-    inv = {
-        (r["id_a"], r["id_b"]): round(r["jaccard"], 9)
-        for r in D.ngram_jaccard_pairs(docs, strategy="inverted", **kw)
-        .collect()
-    }
-    pre = {
-        (r["id_a"], r["id_b"]): round(r["jaccard"], 9)
-        for r in D.ngram_jaccard_pairs(docs, strategy="prefix", **kw)
-        .collect()
-    }
-    assert inv == pre, "strategies must stay result-identical with cap"
+    inv = _jaccard_pairs(docs, **kw)
+    assert inv == _exact_jaccard(docs, **kw), "cap must match the reference"
     assert (100, 101) in inv, "genuinely similar pair must survive"
     assert all(p == (100, 101) for p in inv), (
         f"boilerplate-only pairs must be pruned: {sorted(inv)}"
@@ -205,71 +221,6 @@ def test_cosine_blocked_drops_oversize_blocks(spark):
     assert len(out) == 3  # C(3,2) = 3 pairs in the small block
 
 
-def test_kmeans_refine_is_deterministic_and_tightens(spark, emb):
-    # Lloyd refinement must (a) be partition-order independent,
-    # (b) not lose IVF recall vs the raw hash-sample seeds, and
-    # (c) strictly change the seeds (it actually iterates).
-    from s3_parquet_to_postgres_spark.operators.similarity import (
-        as_double,
-        kmeans_refine_centroids,
-    )
-
-    seeds = (
-        emb.select(
-            F.col("vec_id").alias("centroid_id"),
-            as_double("embedding").alias("cent_vec"),
-        )
-        .withColumn("__h", F.xxhash64(F.col("centroid_id").cast("string")))
-        .orderBy("__h")
-        .limit(8)
-        .drop("__h")
-    )
-    r1 = kmeans_refine_centroids(emb, seeds, iters=2).collect()
-    r2 = kmeans_refine_centroids(emb.repartition(7), seeds, iters=2).collect()
-    to_map = lambda rows: {
-        r["centroid_id"]: [round(x, 9) for x in r["cent_vec"]] for r in rows
-    }
-    assert to_map(r1) == to_map(r2)  # deterministic
-    assert len(r1) == 8
-    seeds_map = to_map(seeds.collect())
-    assert to_map(r1) != seeds_map  # moved off the raw samples
-
-
-def test_ivf_refined_recall_not_worse(spark, emb):
-    queries = emb.filter(F.col("vec_id") < 5)
-    exact = _topk_sets(S.cosine_topk(emb, queries, k=10))
-    raw = _recall(_topk_sets(S.ivf_topk(emb, queries, k=10)), exact)
-    ref = _recall(
-        _topk_sets(S.ivf_topk(emb, queries, k=10, refine_iters=2)), exact
-    )
-    # k-means-tightened cells should not hurt recall at equal n_probe.
-    assert ref >= raw - 0.1, (ref, raw)
-
-
-def test_kmeans_refine_empty_cluster_keeps_seed(spark):
-    # Two far clusters + one seed placed so no vector picks it: the
-    # orphan centroid must survive unchanged (Lloyd fallback).
-    from s3_parquet_to_postgres_spark.operators.similarity import (
-        kmeans_refine_centroids,
-    )
-
-    corpus = spark.createDataFrame(
-        [(i, [10.0, 0.0]) for i in range(5)]
-        + [(i + 5, [0.0, 10.0]) for i in range(5)],
-        "vec_id long, embedding array<double>",
-    )
-    seeds = spark.createDataFrame(
-        [(0, [1.0, 0.0]), (1, [0.0, 1.0]), (2, [-5.0, -5.0])],
-        "centroid_id long, cent_vec array<double>",
-    )
-    out = {
-        r["centroid_id"]: r["cent_vec"]
-        for r in kmeans_refine_centroids(corpus, seeds, iters=1).collect()
-    }
-    assert out[2] == [-5.0, -5.0]  # empty cluster kept its seed
-    assert out[0] == [10.0, 0.0] and out[1] == [0.0, 10.0]
-
-
 def test_adversarial_mega_duplicate_corpus_stays_bounded(spark):
     """A corpus that is ONE document repeated far past every cap -- the
     boilerplate pathology the cap parameters exist for. Every capped
@@ -285,8 +236,7 @@ def test_adversarial_mega_duplicate_corpus_stays_bounded(spark):
     )
     lsh = D.minhash_lsh_pairs(df, max_bucket_size=1024)
     assert lsh.count() == 0  # bucket of 2000 > cap -> dropped
-    jac = D.ngram_jaccard_pairs(df, threshold=0.5, strategy="inverted",
-                                max_shingle_df=100)
+    jac = D.ngram_jaccard_pairs(df, threshold=0.5, max_shingle_df=100)
     assert jac.count() == 0  # every shingle has df 2000 > 100
     cont = D.containment_pairs(df, threshold=0.5, max_shingle_df=100)
     assert cont.count() == 0

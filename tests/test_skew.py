@@ -29,20 +29,6 @@ def test_salted_join_matches_plain_inner(spark):
     assert _sorted_rows(salted, cols) == _sorted_rows(plain, cols)
 
 
-def test_salted_join_left_outer(spark):
-    li = read_table(spark, SF, "lineitem").select("l_orderkey", "l_partkey")
-    # Dimension missing some keys -> left join must keep unmatched rows.
-    part = (
-        read_table(spark, SF, "part")
-        .filter(F.col("p_partkey") % 2 == 0)
-        .select(F.col("p_partkey").alias("l_partkey"), "p_name")
-    )
-    plain = li.join(part, "l_partkey", "left")
-    salted = salted_join(li, part, on="l_partkey", salt=4, how="left")
-    cols = ["l_orderkey", "l_partkey", "p_name"]
-    assert _sorted_rows(salted, cols) == _sorted_rows(plain, cols)
-
-
 def test_salted_agg_matches_plain(spark):
     li = read_table(spark, SF, "lineitem")
     plain = li.groupBy("l_returnflag").agg(

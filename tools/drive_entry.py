@@ -1,8 +1,10 @@
 """Drive the driver contract: __spark_entry__.entry + queries() vs oracle_sql() via DuckDB at sf0.01."""
 import hashlib
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 import duckdb
 import numpy as np
